@@ -15,6 +15,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -24,23 +25,27 @@ OUT_DIR = os.path.join(
 )
 
 
-def _slowest(registry, k: int) -> list[str]:
-    import re
+def _latest_families_bench(root: str) -> str | None:
+    """The BENCH_FAMILIES_r<N>.json in ``root`` with the highest round N.
 
+    Rounds sort numerically: the corpus mixes zero-padded (r05..r08) and
+    unpadded (r10, r11) round numbers, so a lexicographic sort would pick
+    the wrong "latest" bench. Names the round regex does not match (a
+    stray ``BENCH_FAMILIES_rX_draft.json``) are skipped."""
+    rounds = []
+    for path in glob.glob(os.path.join(root, "BENCH_FAMILIES_r*.json")):
+        m = re.search(r"BENCH_FAMILIES_r0*(\d+)\.json$", path)
+        if m:
+            rounds.append((int(m.group(1)), path))
+    return max(rounds)[1] if rounds else None
+
+
+def _slowest(registry, k: int) -> list[str]:
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    # numeric round sort (r11 ADVICE): the corpus mixes zero-padded
-    # (r05..r08) and unpadded (r10, r11) round numbers, so a lexicographic
-    # sorted()[-1] would silently pick the wrong "latest" bench for an
-    # unpadded single-digit round or round >= 100
-    files = sorted(
-        glob.glob(os.path.join(root, "BENCH_FAMILIES_r*.json")),
-        key=lambda p: int(
-            re.search(r"BENCH_FAMILIES_r0*(\d+)\.json$", p).group(1)
-        ),
-    )
-    if not files:
+    latest = _latest_families_bench(root)
+    if latest is None:
         return []
-    with open(files[-1]) as fh:
+    with open(latest) as fh:
         data = json.load(fh)
     data = data.get("parsed", data)
     ranked = sorted(data.get("queries", {}).items(), key=lambda kv: -kv[1])

@@ -36,10 +36,8 @@ import re
 
 import pytest
 
-PKG = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "tscd_datalake_adapter_spark",
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(ROOT, "tscd_datalake_adapter_spark")
 
 # module (relative to the package) -> audited raw localCheckpoint sites
 AUDITED: dict[str, int] = {
@@ -49,7 +47,9 @@ AUDITED: dict[str, int] = {
     # r11 optimization: croston's 40-step recursive CTE became one
     # single-partition mapInPandas fold — its pre-recursion checkpoint
     # site (bounded ≤40-row series) is gone with the recursion
-    "operators/analytics.py": 19,
+    # holt's horizon checkpoint moved from a raw .localCheckpoint() onto
+    # checkpoint_bounded (bound: the <=12-row backtest horizon)
+    "operators/analytics.py": 18,
     "operators/dedup.py": 4,
     # r12: markov_removal_attribution's expression-unrolled recursion
     # (pivot row + every-2-steps + out: 4 sites) and
@@ -81,25 +81,26 @@ AUDITED: dict[str, int] = {
     "operators/text.py": 13,
 }
 
-_CALL = re.compile(r"\.localCheckpoint\(")
 
-
-def _count(path: str) -> int:
-    with open(path, encoding="utf-8") as f:
-        return len(_CALL.findall(f.read()))
+def _sites(root: str, pattern: str, skip: str = "") -> dict[str, int]:
+    """``.py`` file (relative to ``root``) -> matches of ``pattern``."""
+    rx = re.compile(pattern)
+    found: dict[str, int] = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            path = os.path.join(dirpath, fn)
+            if not fn.endswith(".py") or path == skip:
+                continue
+            with open(path, encoding="utf-8") as f:
+                n = len(rx.findall(f.read()))
+            if n:
+                found[os.path.relpath(path, root)] = n
+    return found
 
 
 @pytest.mark.smoke
 def test_no_unaudited_localcheckpoint_sites():
-    found: dict[str, int] = {}
-    for root, _dirs, files in os.walk(PKG):
-        for fn in files:
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(root, fn)
-            n = _count(path)
-            if n:
-                found[os.path.relpath(path, PKG)] = n
+    found = _sites(PKG, r"\.localCheckpoint\(")
     assert found == AUDITED, (
         "raw .localCheckpoint( call sites changed.\n"
         f"found   = {found}\n"
@@ -135,3 +136,49 @@ def test_checkpoint_bounded_requires_claim():
         checkpoint_bounded(None, "")
     with pytest.raises(ValueError):
         checkpoint_bounded(None, None)  # type: ignore[arg-type]
+
+
+# Each repeated pattern has ONE primitive; its hand-rolled form may appear
+# only inside that primitive. name -> (pattern, {module: audited count}),
+# modules relative to the package.
+PRIMITIVE_SITES: dict[str, tuple[str, dict[str, int]]] = {
+    # Spark-exact rounding: functions.spark_decimal / spark_round
+    "round_half_up": (r"ROUND_HALF_UP", {"functions/__init__.py": 2}),
+    "decimal_repr": (r"Decimal\(repr\(", {"functions/__init__.py": 1}),
+    # the bounded single-task fold: functions.bounded_fold
+    "constant_key_grouped_map": (
+        r"groupBy\(\s*F\.lit\([^()]*\)(?:\.alias\([^()]*\))?\s*\)\s*"
+        r"\.applyInPandas",
+        {"functions/__init__.py": 1},
+    ),
+    # the executed-plan walk: plans.executed_nodes
+    "plan_tree_walk": (r"AdaptiveSparkPlanExec", {"plans/__init__.py": 1}),
+}
+
+
+@pytest.mark.smoke
+@pytest.mark.parametrize("name", sorted(PRIMITIVE_SITES))
+def test_no_hand_rolled_primitive_copies(name):
+    pattern, audited = PRIMITIVE_SITES[name]
+    found = _sites(PKG, pattern)
+    assert found == audited, (
+        f"hand-rolled copies of {pattern!r} changed.\n"
+        f"found   = {found}\n"
+        f"audited = {audited}\n"
+        "Use the primitive instead of copying it: functions.spark_round / "
+        "spark_decimal for Spark's round() and double->decimal cast, "
+        "functions.bounded_fold for a constant-key single-task fold, "
+        "plans.executed_nodes / node_counts for the executed plan tree."
+    )
+
+
+@pytest.mark.smoke
+def test_tests_do_not_walk_the_plan_tree_themselves():
+    pattern = PRIMITIVE_SITES["plan_tree_walk"][0]
+    found = _sites(
+        os.path.join(ROOT, "tests"), pattern, skip=os.path.abspath(__file__)
+    )
+    assert found == {}, (
+        f"plan-tree walk copied into tests: {found}; use "
+        "plans.executed_nodes / plans.node_counts"
+    )

@@ -1620,3 +1620,18 @@ def test_banded_appends_equivalent_to_sequential(spark, tmp_path):
     # stats prune identically: the high band read touches ONE file
     pruned = read_delta(spark, p_band, where="k >= 250")
     assert pruned.count() == 50
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_banded_appends_rejects_empty_band(spark, tmp_path, fmt):
+    """A band that matches no rows fails at fixture-build time, naming the
+    band, and commits no version at all (the banded form would otherwise
+    log a zero-file version the sequential form never writes)."""
+    from tscd_datalake_adapter_spark.operators.io import _banded_appends
+
+    df = spark.range(0, 300).select(F.col("id").alias("k"))
+    p = str(tmp_path / fmt)
+    with pytest.raises(ValueError, match=r"band 1 \[500, 600\)"):
+        _banded_appends(df, p, "k", [(0, 100), (500, 600), (200, 300)], fmt)
+    assert not os.path.exists(p)
+    assert not os.path.exists(p + "_bandstage")

@@ -11,6 +11,9 @@ make aggregates exact and therefore engine-independent:
 - ``dec_avg`` — exact decimal sum divided by count in double.
 - ``dec_std`` / ``dec_var`` — sample std/variance from exact decimal moments
   (sum x, sum x²) so both engines do identical double arithmetic at the end.
+- ``spark_round`` / ``spark_decimal`` — Python twins of Spark's ``round()``
+  and double→decimal cast, for the folds ``bounded_fold`` runs in one
+  Python task.
 
 At 100 TB these stay fully distributed: decimal sums are partial-aggregated
 map-side exactly like double sums, with no extra shuffle.
@@ -34,6 +37,9 @@ declared width, so the final doubles are bit-identical.
 """
 
 from __future__ import annotations
+
+import math
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -184,6 +190,67 @@ def checkpoint_bounded(df, bound: str):
     if not bound or not isinstance(bound, str):
         raise ValueError("checkpoint_bounded requires a boundedness claim")
     return df.localCheckpoint()
+
+
+def bounded_fold(df, fn, schema, *, bound: str, max_rows: int):
+    """Run ``fn`` once over ALL rows of ``df`` in a single task: a
+    constant-key grouped map, ``groupBy(lit(1)).applyInPandas(fn, schema)``.
+
+    The venue for a sequential fold (recursion, greedy chain, union-find)
+    over a table that cannot grow with corpus volume: one task replaces
+    the per-step Spark jobs an engine-side loop pays. Spark itself routes
+    every row to the one group, so the fold cannot silently turn into
+    per-partition partial folds.
+
+    ``bound`` states why the input is bounded, as for
+    :func:`checkpoint_bounded`; ``max_rows`` is the row count that claim
+    allows. The task raises a ``ValueError`` naming ``bound`` when the
+    group holds more rows, so an input that outgrows one task fails
+    loudly instead of running the worker out of memory.
+
+    ``fn`` is never called on empty input: over an empty frame the
+    grouped map has no group and returns 0 rows."""
+    if not bound or not isinstance(bound, str):
+        raise ValueError("bounded_fold requires a boundedness claim")
+
+    def _checked(pdf):
+        if len(pdf) > max_rows:
+            raise ValueError(
+                f"bounded_fold: {len(pdf)} rows exceed max_rows={max_rows}"
+                f" of the claim {bound!r}"
+            )
+        return fn(pdf)
+
+    return df.groupBy(F.lit(1).alias("_g")).applyInPandas(_checked, schema)
+
+
+# The default 28-digit context cannot hold a large double at scale 12; 400
+# digits fit every finite double (309 integral digits) at any scale up to
+# 90, past Spark's decimal limit of 38.
+_WIDE = Context(prec=400, rounding=ROUND_HALF_UP)
+
+
+def spark_decimal(x: float, scale: int) -> Decimal:
+    """Spark's double→decimal cast of ``x`` at ``scale``, as a Python
+    ``Decimal``: HALF_UP rounding of the SHORTEST round-trip representation
+    (``Double.toString`` on the JVM, ``repr`` in Python), not of the
+    exact binary expansion ``Decimal(x)`` holds. ``x`` must be finite.
+
+    Summing these exactly replays ``SUM(CAST(x AS DECIMAL(p, scale)))``."""
+    return Decimal(repr(float(x))).quantize(
+        Decimal(f"1e{-scale}"), context=_WIDE
+    )
+
+
+def spark_round(x: float, scale: int) -> float:
+    """Spark's ``round(x, scale)`` on a double, bit for bit: HALF_UP on the
+    shortest representation (:func:`spark_decimal`), ``inf``/``nan``
+    passed through, and never ``-0.0``. Python's built-in ``round`` differs:
+    it rounds half-to-even on the binary value (``round(2.675, 2)`` is
+    2.67, Spark's is 2.68)."""
+    if not math.isfinite(x):
+        return x
+    return float(spark_decimal(x, scale)) + 0.0
 
 
 def persist_corpus(df):

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tscd_datalake_adapter_spark.functions import (
+    bounded_fold,
+    checkpoint_bounded,
     oracle_dec_sum,
     dec_sum,
     h60,
@@ -3048,6 +3050,10 @@ def pca_top_component_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("feature")
 
 
+# the series is calendar-bound: one row per month, a century at most
+_HOLT_MAX_MONTHS = 100 * 12
+
+
 @register(
     "holt_linear_forecast_eval",
     tags=("analytics", "forecast"),
@@ -3108,7 +3114,7 @@ def holt_linear_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: rows → month histogram (map-side combine, ~10² rows at
     any SF — the series length is calendar-, not data-, bound); the fold
-    runs in one applyInPandas over that bounded series; MAE folds over
+    runs in one bounded_fold over that bounded series; MAE folds over
     12 rows. The oracle twin is a recursive CTE over the same series."""
     import pandas as pd
 
@@ -3144,9 +3150,16 @@ def holt_linear_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the ≤12-row backtest horizon feeds the MAE aggregate AND the final
     # row readout — checkpoint so the fold pipeline runs once
-    horizon = monthly.groupBy(F.lit(1).alias("g")).applyInPandas(
-        _holt, "month string, actual long, f double"
-    ).localCheckpoint()
+    horizon = checkpoint_bounded(
+        bounded_fold(
+            monthly,
+            _holt,
+            "month string, actual long, f double",
+            bound="one row per calendar month",
+            max_rows=_HOLT_MAX_MONTHS,
+        ),
+        bound="the <=12-row backtest horizon",
+    )
     tot = horizon.agg(
         (
             F.round(
@@ -4672,6 +4685,9 @@ _CROSTON_ORACLE = """
 """
 
 
+_CROSTON_MAX_DEMANDS = 40
+
+
 @register(
     "croston_intermittent_forecast",
     tags=("analytics", "timeseries", "recursive"),
@@ -4689,16 +4705,11 @@ def croston_intermittent_forecast(
     sparsity: the calendar is fixed, so a plain value cutoff is dense at
     one SF and empty at another).
 
-    The recurrence is the oracle's ``WITH RECURSIVE`` fold run as ONE
-    constant-key ``applyInPandas`` group (r11 optimization, guide §1.2:
-    the engine-side recursive CTE launched one cluster JOB per step — 40
-    jobs whose per-step scheduling dwarfed the ≤40-row arithmetic;
-    measured 4.16 s → ~0.6 s, result bit-identical because the Python
-    fold performs the same IEEE-double operations in the same order:
-    ``0.2*q + 0.8*z`` on exact-int inputs, alpha literals parse to the
-    same doubles in both engines, and rounding still happens ONCE at
-    output in Spark expressions, never inside the fold — the
-    ``holt_linear_forecast`` lesson).
+    The recurrence is the oracle's ``WITH RECURSIVE`` fold run as one
+    :func:`functions.bounded_fold` task (the engine-side recursive CTE
+    launched one cluster JOB per step). It is bit-identical because the
+    Python fold performs the same IEEE-double operations in the same
+    order, and rounding happens ONCE at output in Spark expressions.
 
     Scale shape: the fold is capped at the first 40 demand events
     (``rn <= 40``) — Croston is inherently sequential, so the bounded
@@ -4721,14 +4732,12 @@ def croston_intermittent_forecast(
         # partition for the sequential fold
         .select("day_idx", "q")
         .orderBy("day_idx")
-        .limit(40)
+        .limit(_CROSTON_MAX_DEMANDS)
     )
 
     def _croston_fold(s):
         import pandas as pd
 
-        if len(s) == 0:
-            return pd.DataFrame({"rn": [], "z": [], "p": []})
         s = s.sort_values("day_idx")
         # the exact recurrence of the oracle's recursive CTE, same
         # IEEE-double op order per step: z ← 0.2*q + 0.8*z;
@@ -4752,13 +4761,12 @@ def croston_intermittent_forecast(
             prev = d
         return pd.DataFrame({"rn": [rn], "z": [z], "p": [p]})
 
-    # groupBy(constant).applyInPandas instead of coalesce(1)+mapInPandas
-    # (r11 ADVICE): the fold is only correct over ONE partition, and a
-    # constant-key grouped map makes that structural — Spark itself routes
-    # every row to the single group's task, so a future edit cannot
-    # silently reintroduce per-partition partial folds
-    folded = daily.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda pdf: _croston_fold(pdf), "rn long, z double, p double"
+    folded = bounded_fold(
+        daily,
+        _croston_fold,
+        "rn long, z double, p double",
+        bound="the first 40 demand days",
+        max_rows=_CROSTON_MAX_DEMANDS,
     )
     return folded.select(
         F.col("rn").alias("n_demand_days"),

@@ -26,7 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tscd_datalake_adapter_spark.functions import h60, oracle_h60, persist_corpus
+from tscd_datalake_adapter_spark.functions import (
+    bounded_fold,
+    h60,
+    oracle_h60,
+    persist_corpus,
+)
 from tscd_datalake_adapter_spark.operators import register
 from tscd_datalake_adapter_spark.sources import load_table
 
@@ -724,22 +729,25 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return labels
 
 
+# union_find_labels' callers are slice-bounded: the <=200-doc slice gives
+# <=19,900 pairs plus one self-edge per doc (the <=67-image slice is smaller)
+_UF_MAX_EDGES = 19_900 + 200
+
+
 def union_find_labels(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """(src, label) connected-component labels over a BOUNDED edge list,
-    computed by union-find inside ONE constant-key ``applyInPandas`` group
-    (r12, guide §4.2 / the croston recipe: hand a bounded problem to
-    Python once instead of O(diameter) engine rounds — min-label
-    propagation pays one join + one aggregation + one checkpoint JOB per
-    round, pure scheduling overhead when the pair list is slice-bounded).
+    computed by union-find in one :func:`functions.bounded_fold` task
+    instead of O(diameter) engine rounds — min-label propagation pays one
+    join + one aggregation + one checkpoint JOB per round, pure scheduling
+    overhead when the pair list is slice-bounded.
 
     Every node must appear in ``edges`` (pass self-edges for singletons).
     Union-by-min-root: a union always keeps the smaller root, so each
     set's final root IS its minimum member — exactly the fixpoint the
     iterative min-label propagation converges to, and the recursive-CTE
-    ``min(dst) OVER reach`` the oracles compute. The constant-key grouped
-    map is self-enforcing single-task (the croston guard pattern).
+    ``min(dst) OVER reach`` the oracles compute.
 
     Callers must be bounded-input (the ≤200-doc / ≤67-image slices);
     ``dedup_clusters`` deliberately KEEPS the distributed propagation loop
@@ -774,10 +782,15 @@ def union_find_labels(
             dtype="int64",
         )
 
-    return edges.select(
-        F.col(src).cast("long").alias(src), F.col(dst).cast("long").alias(dst)
-    ).groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda pdf: _uf(pdf), "src long, label long"
+    return bounded_fold(
+        edges.select(
+            F.col(src).cast("long").alias(src),
+            F.col(dst).cast("long").alias(dst),
+        ),
+        _uf,
+        "src long, label long",
+        bound="pairs plus self-edges over the <=200-doc slice",
+        max_rows=_UF_MAX_EDGES,
     )
 
 

@@ -16,9 +16,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tscd_datalake_adapter_spark.functions import (
+    bounded_fold,
     dec_sum,
     oracle_dec_sum,
     persist_corpus,
+    spark_decimal,
+    spark_round,
 )
 from tscd_datalake_adapter_spark.operators import register
 from tscd_datalake_adapter_spark.sources import load_table
@@ -1084,6 +1087,11 @@ def _markov_oracle() -> str:
     """
 
 
+# the events.event_type domain (FIXTURES.md): the Markov chains' state space
+_EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
+_MARKOV_MAX_ROWS = len(_EVENT_TYPES) ** 2
+
+
 @register(
     "markov_stationary_distribution",
     tags=("history", "graph"),
@@ -1117,32 +1125,14 @@ def markov_stationary_distribution(
         .agg(F.count("*").cast("long").alias("n"))
     )
 
-    # r12 (the markov_removal_attribution recipe, guide §1.2/§4.2): the
-    # whole recursion state is k rows over a k²-cell matrix (k = distinct
-    # event types), so the matrix build + 5 power iterations +
-    # renormalizations run in ONE constant-key applyInPandas group —
-    # previously the matrix checkpoint plus a per-iteration checkpoint
-    # paid ~7 one-row-scale driver jobs. The fold replays the recipe
-    # bit-identically (Decimal(repr(x)) = the shortest-round-trip base
-    # Spark's round()/double→decimal cast uses; exact decimal adds;
-    # HALF_UP quantize at 12/9/6 dp), and the corpus window pass now has
-    # exactly ONE consumer, so counts needs no checkpoint either: the
-    # entire query is one job.
+    # The recursion state is k rows over a k²-cell matrix, so the matrix
+    # build, 5 power iterations and renormalizations run in one
+    # bounded_fold that replays the recipe with spark_round/spark_decimal.
+    # counts has one consumer, so the whole query is one job.
     def _stationary_fold(pdf):
-        from decimal import ROUND_HALF_UP, Decimal
+        from decimal import Decimal
 
         import pandas as pd
-
-        if len(pdf) == 0:
-            return pd.DataFrame({"state": [], "pi_stationary": []})
-        Q12 = Decimal("1e-12")
-        Q9 = Decimal("1e-9")
-        Q6 = Decimal("1e-6")
-
-        def rnd(x: float, q: Decimal) -> float:
-            return float(
-                Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP)
-            )
 
         rows = list(
             zip(pdf["prev"].tolist(), pdf["curr"].tolist(), pdf["n"].tolist())
@@ -1158,36 +1148,39 @@ def markov_stationary_distribution(
             if cu in sset:
                 out_n[pv] = out_n.get(pv, 0) + int(n)
         pm = {
-            (pv, cu): rnd(float(int(n)) / float(out_n[pv]), Q12)
+            (pv, cu): spark_round(float(int(n)) / float(out_n[pv]), 12)
             for pv, cu, n in rows
             if cu in sset
         }
         k = len(states)
-        pi = {st: rnd(1.0 / k, Q9) for st in states}
+        pi = {st: spark_round(1.0 / k, 9) for st in states}
         for _ in range(5):
             terms = {}
             tot = Decimal(0)
             for (pv, cu), p in pm.items():
                 if pv not in pi:
                     continue
-                t = Decimal(repr(rnd(pi[pv] * p, Q12))).quantize(
-                    Q12, rounding=ROUND_HALF_UP
-                )
+                t = spark_decimal(spark_round(pi[pv] * p, 12), 12)
                 terms[cu] = terms.get(cu, Decimal(0)) + t
                 tot += t
             ftot = float(tot)
-            pi = {cu: rnd(float(s) / ftot, Q9) for cu, s in terms.items()}
+            pi = {
+                cu: spark_round(float(s) / ftot, 9) for cu, s in terms.items()
+            }
         res = sorted(pi.items())
         return pd.DataFrame(
             {
                 "state": [st for st, _ in res],
-                "pi_stationary": [rnd(v, Q6) for _, v in res],
+                "pi_stationary": [spark_round(v, 6) for _, v in res],
             }
         )
 
-    folded = counts.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda pdf: _stationary_fold(pdf),
+    folded = bounded_fold(
+        counts,
+        _stationary_fold,
         "state string, pi_stationary double",
+        bound="one transition count per (prev, curr) event-type pair",
+        max_rows=_MARKOV_MAX_ROWS,
     )
     return folded.orderBy("state")
 
@@ -1842,8 +1835,8 @@ def markov_removal_attribution(
     family).
 
     Scale shape: journeys and edges are two window passes over events;
-    the chain is |states|² rows and every iteration joins a ~35-row
-    vector with a ~36-row matrix — iteration cost is independent of data
+    the chain is |states|² rows and the 12 iterations run in one task
+    over its one-row pivot — iteration cost is independent of data
     size, the whole point of fitting a chain instead of replaying
     journeys per scenario."""
     e = load_table(spark, sf_dir, "events")
@@ -1927,11 +1920,8 @@ def markov_removal_attribution(
         ),
     )
     # The state space is COMPILE-TIME fixed (START + the 4 channel types +
-    # the two absorbers), so the whole (scenario x state) recursion can run
-    # as column expressions over ONE pivoted row — iterations cost ~nothing
-    # instead of one cluster job each (the holt/pca expression recipe; a
-    # DataFrame-per-iteration variant measured ~10s/step from checkpoint
-    # overhead alone). Pivot the matrix: one column per (f, t) cell.
+    # the two absorbers), so the matrix pivots to ONE row: one column per
+    # (f, t) cell.
     froms = ("START",) + _MRA_CHANNELS
     tos = _MRA_CHANNELS + ("CONV", "NULL")
     row = tm.groupBy().agg(
@@ -1952,45 +1942,14 @@ def markov_removal_attribution(
     channels = _MRA_CHANNELS
     iters = _MRA_ITERS
 
-    # r12 (guide §1.2/§4.2, the croston recipe): the (scenario × state)
-    # recursion state is 35 doubles over a ONE-row pivoted matrix, so the
-    # whole 12-step fold runs as one constant-key applyInPandas group.
-    # The previous expression-unrolled form (12 selectExpr steps, a
-    # 1-row localCheckpoint every 2 steps to stop CollapseProject's ~6×
-    # re-inlining) paid 7 checkpoint JOBS plus Catalyst planning of the
-    # compounding expression tree — measured ~1.5-2 s of the query's
-    # 3.3-3.8 s with the data pipeline itself at ~1.5 s. The Python fold
-    # replays the recipe bit-identically: per term, an IEEE-double
-    # product rounded HALF_UP at 12 dp (Decimal(double) is the exact
-    # binary expansion, same as BigDecimal(double)), exact decimal adds,
-    # correctly-rounded decimal→double cast, HALF_UP round at 9 dp —
-    # the same op sequence the oracle's SQL evaluates.
+    # The (scenario × state) recursion state is 35 doubles over the one-row
+    # pivoted matrix, so the 12-step fold runs in one bounded_fold: per
+    # term, a double product cast to decimal(·,12), exact decimal adds,
+    # round 9 — the op sequence the oracle's SQL evaluates.
     def _mra_fold(pdf):
-        from decimal import ROUND_HALF_UP, Decimal
+        from decimal import Decimal
 
         import pandas as pd
-
-        cols = [
-            "channel",
-            "p_conv_full",
-            "p_conv_removed",
-            "removal_effect",
-            "attribution_share",
-        ]
-        if len(pdf) == 0:
-            return pd.DataFrame({c: [] for c in cols})
-        Q12 = Decimal("1e-12")
-        Q9 = Decimal("1e-9")
-        Q6 = Decimal("1e-6")
-
-        # Decimal(repr(x)), NOT Decimal(x): Spark's round()/double→decimal
-        # cast parse the SHORTEST round-trip representation
-        # (BigDecimal.valueOf / Double.toString), not the exact binary
-        # expansion — Python's repr() is the same shortest-round-trip
-        # algorithm, so this reproduces Spark's HALF_UP boundary behavior
-        # bit-for-bit
-        def rnd(x: float, q: Decimal) -> float:
-            return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
 
         r = pdf.iloc[0]
         tp = {
@@ -2010,38 +1969,39 @@ def markov_removal_attribution(
                     acc = Decimal(0)
                     for t in tos:
                         mp = 0.0 if t == removed else p[(sc, t)]
-                        acc += Decimal(repr(tp[(f, t)] * mp)).quantize(
-                            Q12, rounding=ROUND_HALF_UP
-                        )
-                    nxt[(sc, f)] = rnd(float(acc), Q9)
+                        acc += spark_decimal(tp[(f, t)] * mp, 12)
+                    nxt[(sc, f)] = spark_round(float(acc), 9)
             p = nxt
         p_full = p[("full", "START")]
         res = [
-            (c, p_full, p[(c, "START")], rnd(1.0 - p[(c, "START")] / p_full, Q9))
+            (
+                c,
+                p_full,
+                p[(c, "START")],
+                spark_round(1.0 - p[(c, "START")] / p_full, 9),
+            )
             for c in channels
         ]
-        tot = float(
-            sum(
-                Decimal(repr(re)).quantize(Q12, rounding=ROUND_HALF_UP)
-                for _, _, _, re in res
-            )
-        )
+        tot = float(sum(spark_decimal(re, 12) for _, _, _, re in res))
         return pd.DataFrame(
             {
                 "channel": [c for c, _, _, _ in res],
-                "p_conv_full": [rnd(pf, Q6) + 0.0 for _, pf, _, _ in res],
-                "p_conv_removed": [rnd(pr, Q6) + 0.0 for _, _, pr, _ in res],
-                "removal_effect": [rnd(re, Q6) + 0.0 for _, _, _, re in res],
+                "p_conv_full": [spark_round(pf, 6) for _, pf, _, _ in res],
+                "p_conv_removed": [spark_round(pr, 6) for _, _, pr, _ in res],
+                "removal_effect": [spark_round(re, 6) for _, _, _, re in res],
                 "attribution_share": [
-                    rnd(re / tot, Q6) + 0.0 for _, _, _, re in res
+                    spark_round(re / tot, 6) for _, _, _, re in res
                 ],
             }
         )
 
-    folded = row.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda pdf: _mra_fold(pdf),
+    folded = bounded_fold(
+        row,
+        _mra_fold,
         "channel string, p_conv_full double, p_conv_removed double,"
         " removal_effect double, attribution_share double",
+        bound="one pivoted transition-matrix row",
+        max_rows=1,
     )
     return folded.orderBy("channel")
 

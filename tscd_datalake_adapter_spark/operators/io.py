@@ -23,6 +23,12 @@ def _tmp(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=f"tscd_{prefix}_")
 
 
+# Key bands of the three-commit data-skipping and row-delete fixtures. Every
+# band holds rows at every fixture scale (sf0.001 orders keys are 0..1499):
+# _banded_appends rejects an empty band.
+_KEY_BANDS = [(0, 500), (500, 1000), (1000, 10**9)]
+
+
 def _banded_appends(
     df: DataFrame,
     path: str,
@@ -45,7 +51,9 @@ def _banded_appends(
     are identical; only the number of cluster round-trips changes).
 
     ``bounds`` must be disjoint [lo, hi) bands (rows outside every band
-    are dropped, matching the sequential form's per-band filters)."""
+    are dropped, matching the sequential form's per-band filters). Every
+    band must hold rows: an empty band raises ``ValueError`` before any
+    version is committed."""
     import os
     import shutil
     import uuid as _uuid
@@ -79,7 +87,8 @@ def _banded_appends(
 
         data_root = os.path.join(path, "data")
     try:
-        for i in range(len(bounds)):
+        band_files = []
+        for i, (lo, hi) in enumerate(bounds):
             band_dir = os.path.join(staging, f"fixture_band={i}")
             files = sorted(
                 fn
@@ -88,6 +97,13 @@ def _banded_appends(
                 )
                 if fn.endswith(".parquet") and not fn.startswith(("_", "."))
             )
+            if not files:
+                raise ValueError(
+                    f"_banded_appends: band {i} [{lo}, {hi}) of {key!r} has"
+                    " no rows; refusing to commit an empty version"
+                )
+            band_files.append((band_dir, files))
+        for band_dir, files in band_files:
             commit_uuid = _uuid.uuid4().hex
             os.makedirs(data_root, exist_ok=True)
             rels = []
@@ -1623,7 +1639,7 @@ def iceberg_lite_partitioned_read(
     SELECT CAST(count(*) AS BIGINT) AS n,
            {oracle_dec_sum('o_totalprice')} AS total,
            CAST(min(o_orderkey) AS BIGINT) AS min_key
-    FROM orders WHERE o_orderkey >= 9000
+    FROM orders WHERE o_orderkey >= 900
     """,
 )
 def delta_lite_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1643,9 +1659,8 @@ def delta_lite_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    bounds = [(0, 5000), (5000, 10000), (10000, 10**9)]
-    _banded_appends(o, path, "o_orderkey", bounds, "delta")
-    back = read_delta(spark, path, where="o_orderkey >= 9000")
+    _banded_appends(o, path, "o_orderkey", _KEY_BANDS, "delta")
+    back = read_delta(spark, path, where="o_orderkey >= 900")
     return back.agg(
         F.count("*").cast("long").alias("n"),
         dec_sum("o_totalprice").alias("total"),
@@ -1661,7 +1676,7 @@ def delta_lite_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(count(*) AS BIGINT) AS n,
            {oracle_dec_sum('o_totalprice')} AS total,
            CAST(min(o_orderkey) AS BIGINT) AS min_key
-    FROM orders WHERE o_orderkey >= 9000
+    FROM orders WHERE o_orderkey >= 900
     """,
 )
 def iceberg_lite_data_skipping(
@@ -1682,11 +1697,8 @@ def iceberg_lite_data_skipping(
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    _banded_appends(
-        o, path, "o_orderkey", [(0, 5000), (5000, 10000), (10000, 10**9)],
-        "iceberg",
-    )
-    back = read_iceberg(spark, path, where="o_orderkey >= 9000")
+    _banded_appends(o, path, "o_orderkey", _KEY_BANDS, "iceberg")
+    back = read_iceberg(spark, path, where="o_orderkey >= 900")
     return back.agg(
         F.count("*").cast("long").alias("n"),
         dec_sum("o_totalprice").alias("total"),
@@ -2166,13 +2178,13 @@ def lake_fast_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(min(o_orderkey) AS BIGINT) AS min_key,
            CAST(max(o_totalprice <= 400000.0) AS BIGINT) AS cap_holds
     FROM orders
-    WHERE o_orderkey >= 1000 AND o_totalprice <= 400000.0
+    WHERE o_orderkey >= 100 AND o_totalprice <= 400000.0
     """,
 )
 def delta_lite_row_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level DELETE on delta_lite (r11, verdict item 1): orders
     committed in three key-ranged files, then TWO copy-on-write deletes
-    — ``o_orderkey < 1000`` (stats-pruned to the low file; the other two
+    — ``o_orderkey < 100`` (stats-pruned to the low file; the other two
     add actions carried verbatim) and ``o_totalprice > 400000`` (hits
     every file's value range). The surviving table must equal the
     oracle's double-complement exactly; a delete that leaked a row or
@@ -2190,11 +2202,8 @@ def delta_lite_row_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    _banded_appends(
-        o, path, "o_orderkey", [(0, 5000), (5000, 10000), (10000, 10**9)],
-        "delta",
-    )
-    r1 = delete_delta(spark, path, "o_orderkey < 1000")
+    _banded_appends(o, path, "o_orderkey", _KEY_BANDS, "delta")
+    r1 = delete_delta(spark, path, "o_orderkey < 100")
     assert r1["rewritten_files"] == 1, r1  # stats pruned 2 of 3 files
     delete_delta(spark, path, "o_totalprice > 400000.0")
     assert table_history(path)[-1]["operation"] == "DELETE"
@@ -2219,7 +2228,7 @@ def delta_lite_row_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(min(o_orderkey) AS BIGINT) AS min_key,
            CAST(max(o_totalprice <= 400000.0) AS BIGINT) AS cap_holds
     FROM orders
-    WHERE o_orderkey >= 1000 AND o_totalprice <= 400000.0
+    WHERE o_orderkey >= 100 AND o_totalprice <= 400000.0
     """,
 )
 def iceberg_lite_row_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2242,11 +2251,8 @@ def iceberg_lite_row_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    _banded_appends(
-        o, path, "o_orderkey", [(0, 5000), (5000, 10000), (10000, 10**9)],
-        "iceberg",
-    )
-    r1 = delete_iceberg(spark, path, "o_orderkey < 1000")
+    _banded_appends(o, path, "o_orderkey", _KEY_BANDS, "iceberg")
+    r1 = delete_iceberg(spark, path, "o_orderkey < 100")
     assert r1["rewritten_files"] == 1, r1  # bounds pruned 2 of 3 files
     delete_iceberg(spark, path, "o_totalprice > 400000.0")
     assert snapshots(path)[-1]["operation"] == "DELETE"
@@ -2270,7 +2276,7 @@ def iceberg_lite_row_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT o_orderkey,
              CASE WHEN o_orderkey % 97 = 0 THEN o_totalprice * 1.5
                   ELSE o_totalprice END AS p
-      FROM orders WHERE o_orderkey < 8000
+      FROM orders WHERE o_orderkey < 1500
       UNION ALL SELECT 999999999, 42.0
     ),
     updated AS (
@@ -2311,10 +2317,10 @@ def iceberg_lite_dml_triad(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
-        .where("o_orderkey < 8000")
+        .where("o_orderkey < 1500")
     )
     _banded_appends(
-        o, path, "o_orderkey", [(0, 3000), (3000, 6000), (6000, 8000)],
+        o, path, "o_orderkey", [(0, 1000), (1000, 1250), (1250, 1500)],
         "iceberg",
     )
     updates = o.where("o_orderkey % 97 = 0").withColumn(
@@ -2348,7 +2354,7 @@ def iceberg_lite_dml_triad(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT o_orderkey,
              CASE WHEN o_orderkey % 97 = 0 THEN o_totalprice * 1.5
                   ELSE o_totalprice END AS p
-      FROM orders WHERE o_orderkey < 8000
+      FROM orders WHERE o_orderkey < 1500
       UNION ALL SELECT 999999999, 42.0
     ),
     updated AS (
@@ -2385,10 +2391,10 @@ def delta_lite_dml_triad(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
-        .where("o_orderkey < 8000")
+        .where("o_orderkey < 1500")
     )
     _banded_appends(
-        o, path, "o_orderkey", [(0, 3000), (3000, 6000), (6000, 8000)],
+        o, path, "o_orderkey", [(0, 1000), (1000, 1250), (1250, 1500)],
         "delta",
     )
     updates = o.where("o_orderkey % 97 = 0").withColumn(

@@ -18,12 +18,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tscd_datalake_adapter_spark.functions import (
+    bounded_fold,
     checkpoint_bounded,
     dec_sum,
     h60,
     oracle_dec_sum,
     oracle_h60,
     persist_corpus,
+    spark_round,
 )
 from tscd_datalake_adapter_spark.operators import register
 from tscd_datalake_adapter_spark.sources import load_table
@@ -1056,6 +1058,8 @@ def trigram_novelty_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BURST_GAMMA = "3.0"
+# the series is calendar-bound: one row per day, a century at most
+_BURST_MAX_DAYS = 100 * 366
 
 
 @register(
@@ -1140,21 +1144,12 @@ def burst_detection_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Tie rule: staying in the current state wins ties.
 
     Scale shape: rows → day histogram (calendar-bound); the fold runs in
-    one applyInPandas over that bounded series."""
+    one bounded_fold over that bounded series."""
     import math
-    from decimal import ROUND_HALF_UP, Decimal
 
     import pandas as pd
 
     gamma = float(_BURST_GAMMA)
-
-    def _r12(x: float) -> float:
-        return float(
-            Decimal(repr(x)).quantize(
-                Decimal("1e-12"), rounding=ROUND_HALF_UP
-            )
-        )
-
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         F.date_format("ts", "yyyy-MM-dd").alias("day")
@@ -1167,9 +1162,10 @@ def burst_detection_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
         total = sum(ks)
         r0 = float(total) / n
         r1 = 2.0 * r0
-        lr0, lr1 = _r12(math.log(r0)), _r12(math.log(r1))
-        e0 = [_r12(r0 - k * lr0) for k in ks]
-        e1 = [_r12(r1 - k * lr1) for k in ks]
+        lr0 = spark_round(math.log(r0), 12)
+        lr1 = spark_round(math.log(r1), 12)
+        e0 = [spark_round(r0 - k * lr0, 12) for k in ks]
+        e1 = [spark_round(r1 - k * lr1, 12) for k in ks]
         v0 = [0.0] * n
         v1 = [0.0] * n
         v0[0], v1[0] = e0[0], e1[0] + gamma
@@ -1197,9 +1193,12 @@ def burst_detection_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final readout — checkpoint so the events aggregate + Viterbi fold
     # run once (executed-plan audit: 2 scans without)
     decoded = checkpoint_bounded(
-        daily.groupBy(F.lit(1).alias("g")).applyInPandas(
+        bounded_fold(
+            daily,
             _viterbi,
             "day string, n_events long, burst long, total_cost_raw double",
+            bound="one row per calendar day",
+            max_rows=_BURST_MAX_DAYS,
         ),
         bound="one row per calendar day",
     )

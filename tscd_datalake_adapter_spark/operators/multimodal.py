@@ -1378,9 +1378,8 @@ def image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     — is what deduplicates exactly once).
 
     Spark side (r12, guide §4.2): the component labels come from
-    ``dedup.union_find_labels`` — one constant-key ``applyInPandas``
-    union-find over the BOUNDED pair list (≤8,911 pairs from the explicit
-    ≤67-image slice), replacing the O(diameter) min-label propagation
+    ``dedup.union_find_labels`` — one ``bounded_fold`` union-find over
+    the BOUNDED pair list (≤8,911 pairs from the explicit ≤67-image slice), replacing the O(diameter) min-label propagation
     rounds whose per-round join + count + checkpoint JOBS were pure
     scheduling overhead at this bound (the croston recipe;
     ``dedup_clusters`` keeps the distributed loop as the unbounded-scale

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tscd_datalake_adapter_spark.functions import (
+    bounded_fold,
     checkpoint_bounded,
     dec_sum,
     h60,
@@ -1101,6 +1102,8 @@ def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 MMR_LAMBDA = "0.7"  # literal shared verbatim with the oracle SQL
 MMR_K = 8
 MMR_CANDS = 20
+# the fold's input: one rel row per candidate plus one sim row per ordered pair
+_MMR_FOLD_MAX_ROWS = MMR_CANDS * MMR_CANDS
 
 
 def _mmr_oracle() -> str:
@@ -1206,16 +1209,12 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine(F.col("a.embedding"), F.col("b.embedding")), 6
         ).alias("sim"),
     )
-    # r12 (guide §1.2/§4.2, the croston/markov fold recipe): the greedy
-    # chain runs over the BOUNDED page (MMR_CANDS rows + its pairwise sim
-    # table), so the whole k-step selection folds in ONE constant-key
-    # applyInPandas group — previously each of the MMR_K-1 picks paid a
-    # lineage-cut checkpoint job over the cached 20-row page (the 3^k
-    # plan-growth guard), ~7 driver round-trips of pure overhead. rel and
-    # sim stay Spark-computed round-6 doubles (the cross-engine recipe);
-    # the fold only replays the argmax chain's two-term double arithmetic
-    # with the identical λ literal and (score desc, cand_id) tiebreak,
-    # and the final round-6 stays a Spark expression.
+    # The greedy chain runs over the BOUNDED page (MMR_CANDS rows + its
+    # pairwise sim table), so the k-step selection is one bounded_fold.
+    # rel and sim stay Spark-computed round-6 doubles; the fold replays
+    # the argmax chain's two-term double arithmetic with the identical λ
+    # literal and (score desc, cand_id) tiebreak, and the final round-6
+    # stays a Spark expression.
     k_steps = MMR_K
     tagged = cands.select(
         F.lit(0).alias("is_sim"),
@@ -1234,8 +1233,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _mmr_fold(pdf):
         import pandas as pd
 
-        if len(pdf) == 0:
-            return pd.DataFrame({"step": [], "cand_id": [], "score": []})
         rel = {}
         sim = {}
         for t, a, b, x in zip(
@@ -1277,8 +1274,12 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         ).astype({"step": "int32", "cand_id": "int64"})
 
-    sel = tagged.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda pdf: _mmr_fold(pdf), "step int, cand_id long, score double"
+    sel = bounded_fold(
+        tagged,
+        _mmr_fold,
+        "step int, cand_id long, score double",
+        bound="the MMR_CANDS-row candidate page and its pairwise sims",
+        max_rows=_MMR_FOLD_MAX_ROWS,
     )
     return sel.select(
         "step", "cand_id", F.round("score", 6).alias("score")

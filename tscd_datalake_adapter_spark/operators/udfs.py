@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tscd_datalake_adapter_spark.functions import spark_decimal, spark_round
 from tscd_datalake_adapter_spark.lake.gutenberg import split_book
 from tscd_datalake_adapter_spark.operators import register
 from tscd_datalake_adapter_spark.sources import load_table
@@ -140,9 +141,10 @@ def grouped_map_demean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-map ``applyInPandas``: per-nation account-balance de-meaning.
 
     The group mean replicates the engine's decimal(38,6) exact-sum semantics
-    in Python (quantize each double half-up at 6 dp, sum exactly), so it
-    matches the decimal-sum oracle bit-for-bit. At scale each nation group is
-    one Arrow batch; groups shuffle once on the key."""
+    in Python (:func:`_decimal_sum`) and rounds with
+    :func:`functions.spark_round`, so it matches the decimal-sum oracle
+    bit-for-bit. At scale each nation group is one Arrow batch; groups
+    shuffle once on the key."""
     # project BEFORE the grouped-map: Catalyst cannot prune columns
     # through the Python barrier (the UDF could read any field), so an
     # unprojected input scans AND Arrow-ships every column (the
@@ -155,7 +157,7 @@ def grouped_map_demean(spark: SparkSession, sf_dir: str) -> DataFrame:
         mean = float(_decimal_sum(pdf["c_acctbal"])) / len(pdf)
         out = pdf[pdf["c_custkey"] < 300][["c_custkey", "c_nationkey"]].copy()
         vals = pdf.loc[pdf["c_custkey"] < 300, "c_acctbal"] - mean
-        out["acctbal_demeaned"] = vals.round(4)
+        out["acctbal_demeaned"] = [spark_round(v, 4) for v in vals]
         return out
 
     return (
@@ -169,16 +171,12 @@ def grouped_map_demean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decimal_sum(values) -> "Decimal":
-    """Python replica of SUM(CAST(x AS DECIMAL(38,6))): quantize each double
-    half-up at 6 decimals (same as the engines' double→decimal cast), then
-    sum exactly."""
-    from decimal import ROUND_HALF_UP, Decimal
+    """Python replica of SUM(CAST(x AS DECIMAL(38,6))): each double cast
+    as the engine casts it (:func:`functions.spark_decimal`), summed
+    exactly."""
+    from decimal import Decimal
 
-    q = Decimal("0.000001")
-    return sum(
-        (Decimal(float(x)).quantize(q, rounding=ROUND_HALF_UP) for x in values),
-        Decimal(0),
-    )
+    return sum((spark_decimal(x, 6) for x in values), Decimal(0))
 
 
 @F.pandas_udf(T.DoubleType())

@@ -2,16 +2,17 @@
 
 The engine's performance contract is declarative: filters reach the parquet
 scan, dimension joins broadcast, top-k avoids full sorts, codegen spans stay
-wide. These helpers read ``explain('formatted')`` output so tests can pin
-those properties instead of hoping for them.
+wide. These helpers read ``explain('formatted')`` output or walk the
+executed plan tree (:func:`executed_nodes`) so tests can pin those
+properties instead of hoping for them.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
-
-from collections.abc import Callable
+from collections import Counter
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,9 +28,11 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 
 
-def executed_scan_counts(df: DataFrame) -> dict[str, int]:
-    """EXECUTED parquet scans per table file in the post-AQE physical plan
-    (run the query to a sink first) — the duplicate-scan audit primitive.
+def executed_nodes(df: DataFrame) -> Iterator:
+    """Every operator of ``df``'s executed physical plan, as JVM plan nodes
+    — the one plan-tree walk the introspection helpers share. Run the
+    query to a sink first to walk the post-AQE plan; before that it is the
+    initial adaptive plan ``explain()`` prints.
 
     Walks the JVM plan TREE instead of the plan string, which matters for
     the two node families whose string rendering lies about execution
@@ -37,60 +40,74 @@ def executed_scan_counts(df: DataFrame) -> dict[str, int]:
 
     - ``InMemoryTableScanExec`` (``functions.persist_corpus``): the string
       inlines the cached plan's lineage at EVERY reference, but a cache
-      entry materializes its scan at most once — so each distinct cache
-      entry's internal scans count once, no matter how many branches read
-      it (cached plans are innerChildren, invisible to ``children()``;
-      we descend explicitly, deduplicated by canonicalized cached plan).
+      entry materializes its plan at most once — so each distinct cache
+      entry's plan is walked once, no matter how many branches read it
+      (cached plans are innerChildren, invisible to ``children()``; we
+      descend explicitly, deduplicated by canonicalized cached plan).
     - ``ReusedExchangeExec`` / ``ReusedSubqueryExec``: references, not
-      executions — count zero.
+      executions — skipped.
 
-    AQE wrappers (``AdaptiveSparkPlanExec``, ``*QueryStageExec``) hold
-    their real plan as a field, not a child — descend through them, and
-    through every node's ``subqueries`` (scalar subqueries execute too).
-    """
-    from collections import Counter
-
-    counts: Counter = Counter()
+    AQE wrappers (adaptive plan, ``*QueryStageExec``) hold their real plan
+    as a field, not a child: they are descended through, not yielded. So
+    is every node's ``subqueries`` (scalar subqueries execute too)."""
     seen_caches: set[str] = set()
 
-    def table_of(scan) -> str | None:
-        try:
-            paths = scan.relation().location().rootPaths()
-            if paths.size() == 0:
-                return None
-            return paths.apply(0).getName()
-        except Exception:
-            return None
-
-    def walk(node) -> None:
+    def walk(node) -> Iterator:
         cls = node.getClass().getSimpleName()
         if cls == "AdaptiveSparkPlanExec":
-            walk(node.executedPlan())
+            yield from walk(node.executedPlan())
             return
         if cls in ("ReusedExchangeExec", "ReusedSubqueryExec"):
             return
         if cls.endswith("QueryStageExec"):
-            walk(node.plan())
+            yield from walk(node.plan())
             return
+        yield node
         if cls == "InMemoryTableScanExec":
             rel = node.relation()
             key = rel.cachedPlan().canonicalized().toString()
             if key not in seen_caches:
                 seen_caches.add(key)
-                walk(rel.cachedPlan())
+                yield from walk(rel.cachedPlan())
             return
-        if cls.startswith("FileSourceScan"):
-            t = table_of(node)
-            if t:
-                counts[t] += 1
         kids = node.children()
         for i in range(kids.size()):
-            walk(kids.apply(i))
+            yield from walk(kids.apply(i))
         subs = node.subqueries()
         for i in range(subs.size()):
-            walk(subs.apply(i))
+            yield from walk(subs.apply(i))
 
-    walk(df._jdf.queryExecution().executedPlan())
+    yield from walk(df._jdf.queryExecution().executedPlan())
+
+
+def node_counts(df: DataFrame) -> Counter:
+    """Executed-plan operator class name → occurrences (e.g.
+    ``ShuffleExchangeExec``, ``BroadcastHashJoinExec``) over
+    :func:`executed_nodes` — the structural form of a plan pin: it counts
+    plan nodes, not how often a word appears in the printed plan."""
+    return Counter(n.getClass().getSimpleName() for n in executed_nodes(df))
+
+
+def _scan_table(node) -> str | None:
+    """File name of a file-scan node's first root path, if it has one."""
+    try:
+        paths = node.relation().location().rootPaths()
+        return paths.apply(0).getName() if paths.size() else None
+    except Exception:
+        return None
+
+
+def executed_scan_counts(df: DataFrame) -> dict[str, int]:
+    """EXECUTED parquet scans per table file in the post-AQE physical plan
+    (run the query to a sink first) — the duplicate-scan audit primitive.
+    A persisted cache's scans count once however many branches read it,
+    and reused exchanges count zero (:func:`executed_nodes`)."""
+    counts: Counter = Counter()
+    for node in executed_nodes(df):
+        if node.getClass().getSimpleName().startswith("FileSourceScan"):
+            table = _scan_table(node)
+            if table:
+                counts[table] += 1
     return dict(counts)
 
 
@@ -122,39 +139,9 @@ def broadcast_build_rows(df: "DataFrame | Callable[[], DataFrame]") -> list[int]
     jobs fire while the operator function RUNS, so a broadcast inside a
     checkpointed subtree is invisible unless construction happens after
     the watermark. A pre-built DataFrame only measures the final action's
-    executions (fine for plain lazy plans).
-
-    The watermark is the max execution ID in the store, not
-    ``executionsCount()``: IDs are monotonic but the store evicts old
-    entries past ``spark.sql.ui.retainedExecutions`` (default 1000), so
-    in a long session count lags behind IDs and a count-based cutoff
-    would leak earlier queries' broadcasts into the measurement."""
-    spark = getattr(df, "sparkSession", None)
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-    store = spark._jsparkSession.sharedState().statusStore()
-    # settle any in-flight executions so the watermark is complete
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    before_max = -1
-    execs0 = store.executionsList()
-    for i in range(execs0.size()):
-        before_max = max(before_max, execs0.apply(i).executionId())
-    if callable(df) and not isinstance(df, DataFrame):
-        df = df()
-    df.write.format("noop").mode("overwrite").save()
-    # the status store is fed by an async listener bus — drain it so the
-    # just-finished execution's metrics are visible
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-
+    executions (fine for plain lazy plans)."""
     rows: list[int] = []
-    execs = store.executionsList()
-    for i in range(execs.size()):
-        ex = execs.apply(i)
-        eid = ex.executionId()
-        if eid <= before_max:
-            continue
-        mvals = store.executionMetrics(eid)
-        nodes = store.planGraph(eid).allNodes()
+    for mvals, nodes in _run_executions(df):
         for j in range(nodes.size()):
             node = nodes.apply(j)
             if node.name() != "BroadcastExchange":
@@ -168,6 +155,36 @@ def broadcast_build_rows(df: "DataFrame | Callable[[], DataFrame]") -> list[int]
                 if opt.isDefined():
                     rows.append(int(str(opt.get()).replace(",", "")))
     return sorted(rows, reverse=True)
+
+
+def _run_executions(fn: "DataFrame | Callable[[], DataFrame]") -> Iterator:
+    """Run ``fn`` (a DataFrame, or a zero-arg thunk that builds one, so
+    construction-time jobs are measured too) to a noop sink and yield
+    ``(metric values, plan-graph nodes)`` for every SQL execution it
+    triggered, read from the SQL status store.
+
+    Executions count from a watermark: the max execution ID in the store
+    before the run, not ``executionsCount()`` — IDs are monotonic but the
+    store evicts old entries past ``spark.sql.ui.retainedExecutions``, so
+    in a long session a count-based cutoff would leak earlier queries
+    into the measurement. The store is fed by an async listener bus,
+    drained before the watermark and after the run."""
+    spark = getattr(fn, "sparkSession", None) or SparkSession.getActiveSession()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    execs = store.executionsList()
+    before_max = max(
+        (execs.apply(i).executionId() for i in range(execs.size())), default=-1
+    )
+    df = fn() if callable(fn) and not isinstance(fn, DataFrame) else fn
+    df.write.format("noop").mode("overwrite").save()
+    bus.waitUntilEmpty()
+    execs = store.executionsList()
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        if eid > before_max:
+            yield store.executionMetrics(eid), store.planGraph(eid).allNodes()
 
 
 def executed_scan_counts_full(
@@ -210,29 +227,9 @@ def executed_scan_counts_full(
     build scan lands outside the window and the count under-reports."""
     import re
 
-    spark = getattr(fn, "sparkSession", None)
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-    store = spark._jsparkSession.sharedState().statusStore()
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    before_max = -1
-    execs0 = store.executionsList()
-    for i in range(execs0.size()):
-        before_max = max(before_max, execs0.apply(i).executionId())
-    df = fn() if callable(fn) and not isinstance(fn, DataFrame) else fn
-    df.write.format("noop").mode("overwrite").save()
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-
     table_re = re.compile(r"([A-Za-z0-9_.-]+\.parquet)")
     counts: dict[str, int] = {}
-    execs = store.executionsList()
-    for i in range(execs.size()):
-        ex = execs.apply(i)
-        eid = ex.executionId()
-        if eid <= before_max:
-            continue
-        mvals = store.executionMetrics(eid)
-        nodes = store.planGraph(eid).allNodes()
+    for mvals, nodes in _run_executions(fn):
         seen_accs: set[int] = set()
         for j in range(nodes.size()):
             node = nodes.apply(j)
@@ -268,52 +265,21 @@ def executed_scan_columns(df: DataFrame) -> list[dict]:
     that's the difference between reading 2 columns and reading 12.
     Same tree-walk contract as :func:`executed_scan_counts`."""
     out: list[dict] = []
-    seen_caches: set[str] = set()
-
-    def walk(node) -> None:
-        cls = node.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            walk(node.executedPlan())
-            return
-        if cls in ("ReusedExchangeExec", "ReusedSubqueryExec"):
-            return
-        if cls.endswith("QueryStageExec"):
-            walk(node.plan())
-            return
-        if cls == "InMemoryTableScanExec":
-            rel = node.relation()
-            key = rel.cachedPlan().canonicalized().toString()
-            if key not in seen_caches:
-                seen_caches.add(key)
-                walk(rel.cachedPlan())
-            return
-        if cls.startswith("FileSourceScan"):
-            try:
-                req = node.requiredSchema()
-                total = node.relation().dataSchema()
-                paths = node.relation().location().rootPaths()
-                out.append(
-                    {
-                        "table": (
-                            paths.apply(0).getName() if paths.size() else "?"
-                        ),
-                        "read": [
-                            str(req.apply(i).name())
-                            for i in range(req.size())
-                        ],
-                        "width": total.size(),
-                    }
-                )
-            except Exception:
-                pass
-        kids = node.children()
-        for i in range(kids.size()):
-            walk(kids.apply(i))
-        subs = node.subqueries()
-        for i in range(subs.size()):
-            walk(subs.apply(i))
-
-    walk(df._jdf.queryExecution().executedPlan())
+    for node in executed_nodes(df):
+        if not node.getClass().getSimpleName().startswith("FileSourceScan"):
+            continue
+        try:
+            req = node.requiredSchema()
+            width = node.relation().dataSchema().size()
+        except Exception:
+            continue
+        out.append(
+            {
+                "table": _scan_table(node) or "?",
+                "read": [str(req.apply(i).name()) for i in range(req.size())],
+                "width": width,
+            }
+        )
     return out
 
 

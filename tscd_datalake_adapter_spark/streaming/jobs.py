@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tscd_datalake_adapter_spark.functions import spark_decimal, spark_round
 from tscd_datalake_adapter_spark.sources import load_table
 from tscd_datalake_adapter_spark.streaming.batch_twins import tumbling_agg
 
@@ -162,7 +163,11 @@ def run_stateful_user_counter(
             total += float(pdf["value"].sum())
         state.update((n, total))
         yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
+            {
+                "user_id": [key[0]],
+                "n_events": [n],
+                "total_value": [spark_round(total, 2)],
+            }
         )
 
     out = stream.groupBy("user_id").applyInPandasWithState(
@@ -1067,20 +1072,15 @@ def run_anomaly_stream(
     At 100 TB with ordered-enough arrival + a watermark, the buffered
     history collapses to three longs per type (n, Σcents, Σcents²) updated
     Welford-style — the eviction twin of this job, exactly as
-    ``run_asof_stream_evicting`` bounds the as-of buffer. z rounds
-    half-up-6 (decimal quantize) to mirror Spark's HALF_UP round."""
+    ``run_asof_stream_evicting`` bounds the as-of buffer. z rounds with
+    :func:`functions.spark_round`."""
     import math
-    from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     stream = read_event_stream(spark, source_dir, max_files_per_trigger)
-
-    def _r6(x: float) -> float:
-        return float(Decimal(repr(x)).quantize(Decimal("0.000001"),
-                                               rounding=ROUND_HALF_UP))
 
     def _update(key, pdfs, state: GroupState):
         if state.exists:
@@ -1116,7 +1116,7 @@ def run_anomaly_stream(
                 var = (s2 - float(s) * s / n) / n
                 std = math.sqrt(var)
                 if std > 0:
-                    z = _r6((c - mean) / std)
+                    z = spark_round((c - mean) / std, 6)
                     if abs(z) > 3.0:
                         out_id.append(int(sid[k]))
                         out_cents.append(c)
@@ -1288,10 +1288,10 @@ def run_sprt_stream(
     ``run_anomaly_stream``). Emits one summary row per batch with seq;
     pytest pins the final row against the batch twin's constants.
 
-    Per-day LLR terms quantize half-up-12 via Decimal and accumulate as
-    exact Decimals — mirroring the twin's round-12 + DECIMAL(38,12)
-    window sum bit-for-bit."""
-    from decimal import ROUND_HALF_UP, Decimal
+    Per-day LLR terms accumulate as exact :func:`functions.spark_decimal`
+    values at 12 dp, mirroring the twin's round-12 + DECIMAL(38,12)
+    window sum."""
+    from decimal import Decimal
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -1339,14 +1339,10 @@ def run_sprt_stream(
             )
         )
         cum = Decimal(0)
-        q12 = Decimal("1e-12")
         first_day, decision = "", "continue"
         last_cum = 0.0
         for d, (n, p) in items:
-            term = Decimal(repr(p * lp + (n - p) * ln_)).quantize(
-                q12, rounding=ROUND_HALF_UP
-            )
-            cum += term
+            cum += spark_decimal(p * lp + (n - p) * ln_, 12)
             last_cum = float(cum)
             if decision == "continue":
                 if last_cum >= bound:
@@ -1357,7 +1353,7 @@ def run_sprt_stream(
             {
                 "first_decision_day": [first_day],
                 "decision": [decision],
-                "cum_llr_final": [round(last_cum, 6) + 0.0],
+                "cum_llr_final": [spark_round(last_cum, 6)],
                 "n_days": [len(items)],
                 "seq": [seq],
             }
@@ -1407,12 +1403,11 @@ def run_drift_monitor_stream(
     the SPRT day map.
 
     PSI = Σ (pᵢ−qᵢ)·ln(pᵢ/qᵢ) over 10 fixed-width value bins with ε
-    smoothing; ln terms quantize half-up-12 (Decimal) and accumulate
-    exactly, so the emitted number is a deterministic function of the
+    smoothing; ln terms accumulate as exact
+    :func:`functions.spark_decimal` values at 12 dp, so the emitted number is a deterministic function of the
     final counts (pytest recomputes it from the batch table)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     import math
+    from decimal import Decimal
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -1423,16 +1418,13 @@ def run_drift_monitor_stream(
     ).withColumn("g", F.lit(1))
 
     def _psi(ref, cur):
-        q12 = Decimal("1e-12")
         nr, nc = max(1, sum(ref)), max(1, sum(cur))
         total = Decimal(0)
         for r, c in zip(ref, cur):
             p = r / nr + eps
             q = c / nc + eps
             term = (p - q) * math.log(p / q)
-            total += Decimal(repr(term)).quantize(
-                q12, rounding=ROUND_HALF_UP
-            )
+            total += spark_decimal(term, 12)
         return float(total)
 
     def _update(key, pdfs, state: GroupState):
@@ -1456,7 +1448,7 @@ def run_drift_monitor_stream(
         state.update((ref, cur, seq))
         yield pd.DataFrame(
             {
-                "psi": [round(_psi(ref, cur), 6) + 0.0],
+                "psi": [spark_round(_psi(ref, cur), 6)],
                 "n_ref": [sum(ref)],
                 "n_cur": [sum(cur)],
                 "seq": [seq],
@@ -1532,7 +1524,7 @@ def run_ddsketch_stream(
             cum += c
             if c and cum >= rank:
                 est_cents = 2.0 * math.exp(i * ln_g) / (math.exp(ln_g) + 1.0)
-                return round(est_cents / 100.0, 6) + 0.0
+                return spark_round(est_cents / 100.0, 6)
         return 0.0
 
     def _update(key, pdfs, state: GroupState):
@@ -1748,7 +1740,7 @@ def run_type_stats_tws_stream(
                 {
                     "event_type": [key[0]],
                     "n": [n],
-                    "mean_value": [round(cents / n / 100.0, 6) + 0.0],
+                    "mean_value": [spark_round(cents / n / 100.0, 6)],
                     "seq": [seq],
                 }
             )
