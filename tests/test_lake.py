@@ -715,3 +715,189 @@ def test_erase_book_row_level_both_backends(
         bad.erase_book(22)
     with pytest.raises(InvalidBookId):
         lake.erase_book("nope")
+
+
+def _assert_answers_match_spark_scan(lake, misses) -> None:
+    """``list_books`` and ``exists`` (every live id, plus ``misses``)
+    equal the answers of a Spark scan of ``read()``."""
+    truth = sorted({r.book_id for r in lake.read().select("book_id").collect()})
+    assert lake.list_books() == truth
+    for bid in sorted(set(truth) | set(misses)):
+        assert lake.exists(bid) == (bid in truth), bid
+
+
+@pytest.mark.parametrize("backend", ["delta", "iceberg"])
+def test_metadata_answers_match_spark_scan(spark, tmp_path, backend):
+    """``exists``/``list_books`` answer from the table format's metadata
+    plus pyarrow reads of the ``book_id`` column; after every kind of
+    commit the adapter makes they must equal the Spark scan's answer."""
+    import json
+    import os
+
+    from tests.conftest import BOOK_NO_END, BOOK_UNICODE, BOOK_V1, BOOK_V2
+
+    # a root Spark's _metadata.file_path percent-encodes: position-delete
+    # files name data files by that URI, manifests by the plain path
+    root = tmp_path / f"d lake %20 {backend}"
+    lake = LakeAdapter(spark, str(root), backend=backend)
+    misses = [3, 4, 6, 7, 9, 12, 50, 999]
+    _assert_answers_match_spark_scan(lake, misses)
+
+    # bulk ingest with a malformed book: multi-id files, so in-range
+    # misses (4, 6, 7) must be settled by reading the column
+    raw = spark.createDataFrame(
+        [
+            (1, BOOK_V1),
+            (2, BOOK_V2),
+            (3, BOOK_NO_END),
+            (5, BOOK_UNICODE),
+            (8, BOOK_V1),
+        ],
+        "book_id long, raw string",
+    )
+    assert lake.ingest_raw_df(raw, TS) == 1
+    _assert_answers_match_spark_scan(lake, misses)
+
+    # single ingests: single-id files, answered from stats alone
+    for bid, text in ((11, BOOK_V1), (22, BOOK_V2), (33, BOOK_UNICODE)):
+        lake.ingest_text(bid, text, TS)
+    _assert_answers_match_spark_scan(lake, misses)
+
+    # the same ids again in a second partition
+    lake.ingest_text(11, BOOK_V1, TS2)
+    lake.ingest_text(2, BOOK_V2, TS2)
+    _assert_answers_match_spark_scan(lake, misses)
+
+    ts3 = dt.datetime(2026, 8, 15, 10, 0, 0)
+    updates = spark.createDataFrame(
+        [(22, "h", "merged body"), (44, "h44", "b44")],
+        "book_id long, header string, body string",
+    )
+    lake.merge_books(updates, ts3)
+    _assert_answers_match_spark_scan(lake, misses)
+
+    assert lake.compact("20260813", "14") == 6
+    _assert_answers_match_spark_scan(lake, misses)
+
+    assert lake.erase_book(5)["deleted_rows"] == 1
+    assert lake.erase_book(11)["deleted_rows"] == 2
+    _assert_answers_match_spark_scan(lake, misses + [5, 11])
+
+    if backend == "iceberg":
+        from tscd_datalake_adapter_spark.sources.iceberg_lite import (
+            delete_iceberg,
+        )
+
+        # position deletes: book 2 sits in the compacted multi-id file
+        # and alone in its TS2 file, whose stats still say min == max == 2
+        res = delete_iceberg(
+            spark, lake.lake_root, "book_id = 2", strategy="merge-on-read"
+        )
+        assert res["deleted_rows"] == 2 and res["delete_files"] == 1
+        _assert_answers_match_spark_scan(lake, misses + [2, 5, 11])
+        res = delete_iceberg(
+            spark, lake.lake_root, "book_id = 33", strategy="merge-on-read"
+        )
+        assert res["deleted_rows"] == 1
+        _assert_answers_match_spark_scan(lake, misses + [2, 5, 11, 33])
+    else:
+        # an add without stats: the file may hold any id, so it is read
+        lake.ingest_text(77, BOOK_V1, TS2)
+        log = os.path.join(lake.lake_root, "_delta_log")
+        last = max(f for f in os.listdir(log) if f.endswith(".json"))
+        actions = [
+            json.loads(ln)
+            for ln in open(os.path.join(log, last), encoding="utf-8")
+            if ln.strip()
+        ]
+        for a in actions:
+            if "add" in a:
+                del a["add"]["stats"]
+        with open(os.path.join(log, last), "w", encoding="utf-8") as fh:
+            fh.write("".join(json.dumps(a) + "\n" for a in actions))
+        _assert_answers_match_spark_scan(lake, misses + [5, 11, 76, 78])
+
+
+@pytest.mark.parametrize("backend", ["delta", "iceberg"])
+def test_metadata_answers_keep_read_checks(spark, tmp_path, book_dir, backend):
+    """The metadata path refuses what the Spark read refuses: a partition
+    value the file's hive path contradicts."""
+    import json
+    import os
+
+    lake = LakeAdapter(spark, str(tmp_path / f"clake_{backend}"), backend=backend)
+    lake.ingest_files(sorted(str(p) for p in book_dir.iterdir()), TS)
+    if backend == "delta":
+        log0 = os.path.join(lake.lake_root, "_delta_log", f"{0:020d}.json")
+        actions = [
+            json.loads(ln)
+            for ln in open(log0, encoding="utf-8")
+            if ln.strip()
+        ]
+        for a in actions:
+            if "add" in a:
+                a["add"]["partitionValues"]["ingest_hour"] = "15"
+        with open(log0, "w", encoding="utf-8") as fh:
+            fh.write("".join(json.dumps(a) + "\n" for a in actions))
+        match = "partitionValues mismatch"
+    else:
+        from tscd_datalake_adapter_spark.sources import avro_lite
+        from tscd_datalake_adapter_spark.sources.iceberg_lite import (
+            _snapshot_by_id,
+            load_metadata,
+        )
+
+        meta = load_metadata(lake.lake_root)
+        snap = _snapshot_by_id(meta, meta["current-snapshot-id"])
+        _, manifests = avro_lite.read_container(snap["manifest-list"])
+        mpath = manifests[0]["manifest_path"]
+        schema, entries = avro_lite.read_container(mpath)
+        for e in entries:
+            e["data_file"]["partition"]["ingest_ts_hour"] += 1
+        avro_lite.write_container(mpath, schema, entries)
+        match = "partition mismatch"
+    with pytest.raises(ValueError, match=match):
+        lake.read()
+    with pytest.raises(ValueError, match=match):
+        lake.exists(11)
+    with pytest.raises(ValueError, match=match):
+        lake.list_books()
+
+
+@pytest.mark.parametrize("backend", ["delta", "iceberg"])
+def test_status_and_list_start_no_spark_job(spark, tmp_path, book_dir, backend):
+    """Structure pin, not timing: ``IngestApi.status`` (hit and miss) and
+    ``IngestApi.list`` start no Spark job on the table-format backends."""
+    import uuid
+
+    from tests.conftest import BOOK_V1
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def job_ids(thunk) -> list[int]:
+        group = f"zero-job-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "lake request")
+        try:
+            thunk()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(tracker.getJobIdsForGroup(group))
+
+    lake = LakeAdapter(spark, str(tmp_path / f"zlake_{backend}"), backend=backend)
+    api = IngestApi(lake)
+    lake.ingest_files(sorted(str(p) for p in book_dir.iterdir()), TS)
+    raw = spark.createDataFrame(
+        [(1, BOOK_V1), (5, BOOK_V1)], "book_id long, raw string"
+    )
+    lake.ingest_raw_df(raw, TS2)  # one multi-id file: misses in 1..5 read it
+    assert job_ids(lambda: lake.read().count())  # the probe sees jobs
+    assert job_ids(lambda: api.status(22)["status"] == "available") == []
+    assert job_ids(lambda: api.status(3)) == []
+    assert job_ids(lambda: api.status(999)) == []
+    assert job_ids(api.list) == []
+    assert api.status(22)["status"] == "available"
+    assert api.status(3)["status"] == "not_found"
+    assert api.list()["books"] == [1, 5, 11, 22, 33]

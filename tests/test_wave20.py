@@ -52,6 +52,55 @@ def test_conformal_coverage_holds(spark, sf_dir):
     assert abs(covered / n_test - row.coverage) < 1e-3
 
 
+def test_conformal_tiny_calibration_set_nulls_only_q_upper(spark, tmp_path):
+    """With n_cal <= 8 no histogram bin reaches ceil(0.9 * (n_cal + 1)):
+    q_upper is NULL, but n_cal (and n_train, n_test) stay the true split
+    counts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tscd_datalake_adapter_spark.operators.mlprep import (
+        conformal_interval_coverage,
+    )
+
+    keys = list(range(1, 25))
+    items = {k: 1 + k % 4 for k in keys}
+    pq.write_table(
+        pa.table(
+            {
+                "o_orderkey": pa.array(keys, pa.int64()),
+                "o_totalprice": pa.array(
+                    [100.0 * items[k] + 7.0 * (k % 3) for k in keys]
+                ),
+            }
+        ),
+        str(tmp_path / "orders.parquet"),
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array(
+                    [k for k in keys for _ in range(items[k])], pa.int64()
+                )
+            }
+        ),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    split = {
+        k: int(hashlib.md5(f"cf:{k}".encode()).hexdigest()[:15], 16) % 10
+        for k in keys
+    }
+    n_cal = sum(s in (6, 7) for s in split.values())
+    assert 1 <= n_cal <= 8  # the degenerate case this fixture exists for
+
+    row = conformal_interval_coverage(spark, str(tmp_path)).collect()[0]
+    assert row.q_upper is None
+    assert row.n_cal == n_cal
+    assert row.n_train == sum(s <= 5 for s in split.values())
+    assert row.n_test == sum(s >= 8 for s in split.values())
+    assert row.coverage == 0.0  # no residual is <= a NULL half-width
+
+
 def test_skipgram_pairs_match_python(spark, sf_dir):
     from tscd_datalake_adapter_spark.operators.text import (
         skipgram_training_pairs,

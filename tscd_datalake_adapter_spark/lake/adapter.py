@@ -30,13 +30,16 @@ a fallback; both backends pass the same test suite except where physical
 deletion semantics differ (documented per method).
 
 Scale notes (100 TB): the write path appends and never lists the whole lake
-(the delta commit lists only its own staged files); ``exists`` is a
-filter+limit-1 whose predicate pushes into the parquet scan (min/max
-row-group pruning + bloom filter on ``book_id``); ``list_books`` is the
-scan→project→distinct→sort pipeline (reference R6) executed as a 2-phase
-distributed hash aggregate with only the ``book_id`` column read. No
-operator collects more than its result to the driver; the transaction log
-itself is metadata-scale (bytes per file, bounded by checkpoints).
+(the delta commit lists only its own staged files). On the delta and
+iceberg backends ``exists`` and ``list_books`` start no Spark job: they
+replay the table format's metadata (log or manifests: bytes per file,
+bounded by checkpoints) and read, driver-side with pyarrow, only the
+``book_id`` column of the files whose per-file stats cannot settle the
+answer. ``exists`` costs that metadata read plus the column of the files
+whose ``book_id`` range covers the id; ``list_books``' work on the Spark
+driver grows with its result, which was always collected there. The parquet
+fallback has no per-file stats to read and keeps Spark scans (a filtered
+limit-1 scan with row-group pruning; a 2-phase distributed distinct).
 """
 
 from __future__ import annotations
@@ -155,6 +158,33 @@ def _ts_ms(ts: dt.datetime) -> int:
     )
 
 
+def _single_book_id(f: dict) -> int | None:
+    """The id a live file provably holds and nothing else — at least one
+    record, ``book_id`` min == max, no deleted positions — from its
+    metadata alone; None when the file must be read."""
+    st = f["stats"] or {}
+    lo = st.get("minValues", {}).get("book_id")
+    hi = st.get("maxValues", {}).get("book_id")
+    if f["record_count"] and not f["deleted"] and lo is not None and lo == hi:
+        return int(lo)
+    return None
+
+
+def _file_book_ids(f: dict):
+    """The ``book_id`` column of one live file (numpy, read driver-side
+    with pyarrow), its deleted positions removed."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    ids = (
+        pq.ParquetFile(f["path"])
+        .read(columns=["book_id"])
+        .column("book_id")
+        .to_numpy()
+    )
+    return np.delete(ids, sorted(f["deleted"])) if f["deleted"] else ids
+
+
 class LakeAdapter:
     """Spark-backed book lake with the reference's operation surface.
 
@@ -216,8 +246,9 @@ class LakeAdapter:
         directory under a commit-uuid name, then the table format's
         metadata-only commit (``delta_lite.commit_files`` /
         ``iceberg_lite.commit_snapshot``) publishes it. Single-row files
-        carry exact min=max footer stats, so ``exists`` row-group pruning
-        works without the bloom filter the Spark write path adds."""
+        carry exact min=max footer stats, which the commit logs, so
+        ``exists`` and ``list_books`` answer for them from the metadata
+        without opening the file."""
         import uuid as _uuid
 
         import pyarrow as pa
@@ -403,39 +434,34 @@ class LakeAdapter:
             stamps = [s["timestamp_ms"] for s in snapshots(self.lake_root)]
         return max(stamps) if stamps else int(_time.time() * 1000)
 
+    def _live_files(self) -> list[dict]:
+        """The lake's live data files from the table format's metadata
+        (``delta_lite.live_files`` / ``iceberg_lite.live_files``: path,
+        record count, parsed stats, deleted positions, partition)."""
+        if self._empty():
+            return []
+        if self.backend == "delta":
+            from tscd_datalake_adapter_spark.sources.delta_lite import (
+                live_files,
+            )
+        else:
+            from tscd_datalake_adapter_spark.sources.iceberg_lite import (
+                live_files,
+            )
+        return live_files(self.lake_root)
+
     def _fmt_partition_tuples(self) -> set[tuple[str, str]]:
         """(ingest_date, ingest_hour) tuples with live files, from the
         format's metadata (no data read)."""
-        if self.backend == "delta":
-            from tscd_datalake_adapter_spark.sources.delta_lite import (
-                _replay,
-            )
-
-            state = _replay(self.lake_root, None)
-            return {
-                (
-                    add["partitionValues"]["ingest_date"],
-                    add["partitionValues"]["ingest_hour"],
-                )
-                for add in state["files"].values()
-            }
-        from tscd_datalake_adapter_spark.sources.iceberg_lite import (
-            _snapshot_by_id,
-            _snapshot_files,
-            load_metadata,
-        )
-
-        meta = load_metadata(self.lake_root)
-        if meta["current-snapshot-id"] == -1:
-            return set()
-        snap = _snapshot_by_id(meta, meta["current-snapshot-id"])
         out = set()
-        for f in _snapshot_files(meta, snap):
+        for f in self._live_files():
+            p = f["partition"]
+            if self.backend == "delta":
+                out.add((p["ingest_date"], p["ingest_hour"]))
+                continue
             # transformed ordinals back to the adapter's (yyyyMMdd, HH)
-            day_ord = f["partition"]["ingest_ts_day"]
-            hour_ord = f["partition"]["ingest_ts_hour"]
-            d = _EPOCH_DAY + dt.timedelta(days=day_ord)
-            out.add((d.strftime("%Y%m%d"), f"{hour_ord % 24:02d}"))
+            d = _EPOCH_DAY + dt.timedelta(days=p["ingest_ts_day"])
+            out.add((d.strftime("%Y%m%d"), f"{p['ingest_ts_hour'] % 24:02d}"))
         return out
 
     # -- write path (R2 + R4) ------------------------------------------------
@@ -670,10 +696,11 @@ class LakeAdapter:
         row-group stats can't prune point lookups when ids are scattered
         across the insert order (every row group spans most of the id
         domain), but a bloom filter answers "id definitely absent" per row
-        group regardless of layout — at 100 TB, :meth:`exists` then touches
-        footer bytes instead of data pages for the no-hit case (the
-        reference instead paid a full O(objects) key scan,
-        ``S3DatalakeStorage.java:64-86``).
+        group regardless of layout — at 100 TB, a Spark point lookup on
+        ``book_id`` (the parquet fallback's :meth:`exists`, or any
+        filtered :meth:`read`) then touches footer bytes instead of data
+        pages for the no-hit case (the reference instead paid a full
+        O(objects) key scan, ``S3DatalakeStorage.java:64-86``).
 
         On the delta backend the append is a logged commit whose caller
         timestamp is the INGEST time — the stamp :meth:`read_as_of`
@@ -815,30 +842,64 @@ class LakeAdapter:
 
     def exists(self, book_id: object) -> bool:
         """Reference R5 (``S3DatalakeStorage.java:64-86``) done right: the
-        reference pays an O(total objects) sequential key scan; here the
-        ``book_id = ?`` predicate pushes into the parquet scan (row-group
-        min/max pruning) and ``LIMIT 1`` short-circuits."""
+        reference pays an O(total objects) sequential key scan.
+
+        Delta and iceberg: no Spark job. Files whose stats prove
+        ``book_id = ?`` cannot match are dropped; a surviving file whose
+        stats pin it to exactly this id (and has no deleted positions)
+        answers without being opened; any other survivor has its
+        ``book_id`` column read. Cost: one metadata read plus that column
+        of the files whose id range covers the id. Parquet fallback: the
+        predicate pushes into a limit-1 Spark scan (row-group pruning)."""
         bid = validate_book_id(book_id)
-        if self._empty():
-            return False
-        return (
-            self.read().where(F.col("book_id") == bid).limit(1).count() > 0
+        if self.backend == "parquet":
+            if self._empty():
+                return False
+            return (
+                self.read().where(F.col("book_id") == bid).limit(1).count()
+                > 0
+            )
+        from tscd_datalake_adapter_spark.sources.delta_lite import (
+            _stats_may_match,
         )
 
+        unsettled = []
+        for f in self._live_files():
+            if not _stats_may_match(f["stats"], [("book_id", "=", bid)]):
+                continue
+            if _single_book_id(f) == bid:
+                return True
+            unsettled.append(f)
+        return any(bool((_file_book_ids(f) == bid).any()) for f in unsettled)
+
     def list_books(self) -> list[int]:
-        """Reference R6 (``S3DatalakeStorage.java:89-119``): scan → project →
-        distinct → ascending sort, as a 2-phase distributed aggregate that
-        reads only the ``book_id`` column."""
-        if self._empty():
-            return []
-        rows = (
-            self.read()
-            .select("book_id")
-            .distinct()
-            .orderBy("book_id")
-            .collect()
-        )
-        return [r.book_id for r in rows]
+        """Reference R6 (``S3DatalakeStorage.java:89-119``): the sorted
+        distinct ids.
+
+        Delta and iceberg: no Spark job. A file whose stats pin it to one
+        id contributes that id unopened; every other non-empty file has
+        its ``book_id`` column read. The work on the Spark driver grows
+        with the result, which is returned there anyway. Parquet fallback:
+        a 2-phase distributed distinct over the ``book_id`` column."""
+        if self.backend == "parquet":
+            if self._empty():
+                return []
+            rows = (
+                self.read()
+                .select("book_id")
+                .distinct()
+                .orderBy("book_id")
+                .collect()
+            )
+            return [r.book_id for r in rows]
+        ids: set[int] = set()
+        for f in self._live_files():
+            one = _single_book_id(f)
+            if one is not None:
+                ids.add(one)
+            elif f["record_count"] != 0:
+                ids.update(_file_book_ids(f).tolist())
+        return sorted(ids)
 
     def relative_path_for(self, book_id: object, ts: dt.datetime) -> str:
         """Reference R7 (``S3DatalakeStorage.java:121-124,142-150``):

@@ -2291,19 +2291,25 @@ def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     wall = Window.orderBy("score_bin").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    qhat = (
-        calhist.select(
-            "score_bin",
-            F.sum("c").over(w).alias("cum"),
-            F.sum("c").over(wall).cast("long").alias("n_cal"),
-        )
-        .where(
-            F.col("cum") >= F.ceil(0.9 * (F.col("n_cal") + 1))
-        )
-        .agg(
-            (F.min("score_bin") + 1).alias("q_upper"),
-            F.max("n_cal").alias("n_cal"),
-        )
+    # the quantile condition filters inside min(), not in a where: with
+    # n_cal <= 8 no bin reaches ceil(0.9 * (n_cal + 1)), and only q_upper
+    # may go NULL then — n_cal stays the unfiltered calibration count
+    # (0 for an empty calibration slice, as the oracle's count(*))
+    qhat = calhist.select(
+        "score_bin",
+        F.sum("c").over(w).alias("cum"),
+        F.sum("c").over(wall).cast("long").alias("n_cal"),
+    ).agg(
+        (
+            F.min(
+                F.when(
+                    F.col("cum") >= F.ceil(0.9 * (F.col("n_cal") + 1)),
+                    F.col("score_bin"),
+                )
+            )
+            + 1
+        ).alias("q_upper"),
+        F.coalesce(F.max("n_cal"), F.lit(0).cast("long")).alias("n_cal"),
     )
     test = (
         base.where(F.col("split") >= 8)

@@ -940,6 +940,48 @@ def commit_files(
     )
 
 
+def _check_partition_paths(state: dict, rels: list[str]) -> None:
+    """Raise ValueError unless each logged file's partitionValues equal
+    the values its hive path spells — the cross-check every read of
+    logged files makes, with Spark or without."""
+    pcols = tuple(state["metadata"]["partitionColumns"])
+    files = state["files"]
+    for rel in rels:
+        from_path = _partition_values(rel, pcols)
+        if from_path != files[rel].get("partitionValues", {}):
+            raise ValueError(
+                f"partitionValues mismatch for {rel}: log says "
+                f"{files[rel].get('partitionValues')}, path says "
+                f"{from_path}"
+            )
+
+
+def live_files(path: str) -> list[dict]:
+    """The data files of the latest version, from the log alone (no
+    Spark job, no data read): one ``{"path", "record_count", "stats",
+    "deleted", "partition"}`` record per file — its path, its
+    ``numRecords`` (None without stats), its parsed ``stats`` (None when
+    the add carries none), the row positions removed from it (always
+    empty: deletion vectors need reader version 3, which ``_replay``
+    refuses) and its logged partitionValues. Partition paths are
+    cross-checked as a Spark read checks them."""
+    state = _replay(path, None)
+    _check_partition_paths(state, list(state["files"]))
+    out = []
+    for rel, add in state["files"].items():
+        stats = _add_stats(add)
+        out.append(
+            {
+                "path": os.path.join(path, rel),
+                "record_count": stats.get("numRecords") if stats else None,
+                "stats": stats,
+                "deleted": frozenset(),
+                "partition": add.get("partitionValues", {}),
+            }
+        )
+    return out
+
+
 def _read_logged_files(
     spark: SparkSession, path: str, state: dict, rels: list[str]
 ) -> DataFrame:
@@ -950,16 +992,7 @@ def _read_logged_files(
     schema = _logged_schema(state["metadata"])
     if not rels:
         return spark.createDataFrame([], schema)
-    pcols = state["metadata"]["partitionColumns"]
-    files = state["files"]
-    for rel in rels:
-        from_path = _partition_values(rel, tuple(pcols))
-        if from_path != files[rel].get("partitionValues", {}):
-            raise ValueError(
-                f"partitionValues mismatch for {rel}: log says "
-                f"{files[rel].get('partitionValues')}, path says "
-                f"{from_path}"
-            )
+    _check_partition_paths(state, rels)
     paths = [os.path.join(path, rel) for rel in sorted(rels)]
     return (
         spark.read.schema(schema).option("basePath", path).parquet(*paths)
@@ -1013,9 +1046,19 @@ def _file_may_match(
     add: dict, conjuncts: list[tuple[str, str, object]]
 ) -> bool:
     """False only when the add's stats PROVE no row satisfies every
-    conjunct (missing stats → may match; incomparable types → may
-    match)."""
-    st = _add_stats(add)
+    conjunct (see :func:`_stats_may_match`)."""
+    return _stats_may_match(_add_stats(add), conjuncts)
+
+
+def _stats_may_match(
+    st: dict | None, conjuncts: list[tuple[str, str, object]]
+) -> bool:
+    """False only when parsed per-file stats (the spec's ``numRecords``,
+    ``minValues``, ``maxValues``, ``nullCount``, keyed by column name)
+    PROVE no row satisfies every conjunct (missing stats → may match;
+    incomparable types → may match). The one file-skipping test of both
+    in-repo formats: iceberg_lite converts its manifest bounds to this
+    shape."""
     if not st:
         return True
     if st.get("numRecords") == 0:

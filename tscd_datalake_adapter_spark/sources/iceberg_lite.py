@@ -1941,57 +1941,143 @@ def _live_delete_files(meta: dict) -> list[dict]:
     )
 
 
+def _bounds_stats(data_file: dict, schema: dict) -> dict:
+    """A manifest entry's record count, bounds and null counts in
+    delta_lite's parsed-stats shape (``numRecords``, ``minValues``,
+    ``maxValues``, ``nullCount``), keyed by top-level column name.
+    Bounds of a type with no single-value deserializer are left out —
+    absent bounds may match."""
+    by_id = {f["id"]: f for f in schema["fields"]}
+
+    def kv(key: str) -> dict:
+        return {
+            e["key"]: e["value"]
+            for e in (data_file.get(key) or [])
+            if e["key"] in by_id
+        }
+
+    lo, hi = kv("lower_bounds"), kv("upper_bounds")
+    mins: dict = {}
+    maxs: dict = {}
+    for fid in sorted(lo.keys() & hi.keys()):
+        f = by_id[fid]
+        a = _ice_deserialize(f["type"], lo[fid])
+        b = _ice_deserialize(f["type"], hi[fid])
+        if a is not None and b is not None:
+            mins[f["name"]], maxs[f["name"]] = a, b
+    return {
+        "numRecords": data_file.get("record_count"),
+        "minValues": mins,
+        "maxValues": maxs,
+        "nullCount": {
+            by_id[fid]["name"]: n
+            for fid, n in kv("null_value_counts").items()
+        },
+    }
+
+
 def _df_may_match(
     data_file: dict, schema: dict, conjuncts
 ) -> bool:
     """False only when the manifest entry's bounds PROVE no row matches
-    every conjunct (absent bounds → may match)."""
-    if data_file.get("record_count") == 0:
-        return False
-    lo_kv = {
-        kv["key"]: kv["value"]
-        for kv in (data_file.get("lower_bounds") or [])
+    every conjunct (absent bounds → may match) — delta_lite's file
+    skipping test over :func:`_bounds_stats`."""
+    from tscd_datalake_adapter_spark.sources.delta_lite import (
+        _stats_may_match,
+    )
+
+    return _stats_may_match(_bounds_stats(data_file, schema), conjuncts)
+
+
+def _fs_path(p: str) -> str:
+    """One spelling of a data-file reference, an absolute local path:
+    manifests store the path the writer was given, while Spark's
+    ``_metadata.file_path`` — the ``file_path`` column of position-delete
+    files — is a percent-encoded ``file:`` URI."""
+    if p.startswith("file:"):
+        from urllib.parse import unquote, urlparse
+
+        p = unquote(urlparse(p).path)
+    return os.path.abspath(p)
+
+
+def _check_partition_paths(
+    path: str, files: list[dict], descriptors: list[dict]
+) -> None:
+    """Raise ValueError unless each manifest entry's partition tuple
+    matches the hive segments of its path — delta_lite's partitionValues
+    cross-check, made by every read of live files, with Spark or
+    without. Transformed values compare through their path spelling
+    (day=2026-08-13, ...)."""
+    data_root = os.path.join(path, "data")
+    pnames = tuple(d["name"] for d in descriptors)
+    for f in files:
+        rel = os.path.relpath(f["file_path"], data_root)
+        from_path = _partition_values(rel, pnames)
+        for d in descriptors:
+            want = f["partition"].get(d["name"])
+            got = from_path.get(d["name"])
+            if got is not None and (
+                want is None or _transform_path_str(d, want) != str(got)
+            ):
+                raise ValueError(
+                    f"partition mismatch for {rel}: manifest says "
+                    f"{want!r}, path says {got!r}"
+                )
+
+
+def _snapshot_view(meta: dict, snap: dict) -> tuple[dict, list[dict]]:
+    """(metadata with the snapshot's schema current, partition
+    descriptors): the schema a snapshot's files were written with."""
+    snap_meta = {
+        **meta,
+        "current-schema-id": snap.get(
+            "schema-id", meta["current-schema-id"]
+        ),
     }
-    hi_kv = {
-        kv["key"]: kv["value"]
-        for kv in (data_file.get("upper_bounds") or [])
-    }
-    null_kv = {
-        kv["key"]: kv["value"]
-        for kv in (data_file.get("null_value_counts") or [])
-    }
-    by_name = {f["name"]: f for f in schema["fields"]}
-    for col, op, v in conjuncts:
-        f = by_name.get(col)
-        if f is None:
-            continue
-        if op in ("isnull", "notnull"):
-            # null-predicate skipping from the spec's null_value_counts
-            # (r10, mirroring delta_lite nullCount)
-            if f["id"] in null_kv:
-                if op == "isnull" and null_kv[f["id"]] == 0:
-                    return False
-                if op == "notnull" and null_kv[f["id"]] == data_file.get(
-                    "record_count"
-                ):
-                    return False
-            continue
-        if f["id"] not in lo_kv or f["id"] not in hi_kv:
-            continue
-        lo = _ice_deserialize(f["type"], lo_kv[f["id"]])
-        hi = _ice_deserialize(f["type"], hi_kv[f["id"]])
-        if lo is None or hi is None:
-            continue
-        try:
-            if op in (">", ">=") and (hi < v or (op == ">" and hi == v)):
-                return False
-            if op in ("<", "<=") and (lo > v or (op == "<" and lo == v)):
-                return False
-            if op == "=" and (v < lo or v > hi):
-                return False
-        except TypeError:
-            continue
-    return True
+    descriptors = [
+        _transform_of_spec_field(pf, _current_schema(snap_meta))
+        for pf in _current_spec(meta)["fields"]
+    ]
+    return snap_meta, descriptors
+
+
+def live_files(path: str) -> list[dict]:
+    """The data files of the current snapshot, from the metadata alone
+    (no Spark job, no data read): one ``{"path", "record_count",
+    "stats", "deleted", "partition"}`` record per file — its path, its
+    manifest record count, its bounds as :func:`_bounds_stats`, the row
+    positions live position-delete files remove from it, and its
+    manifest partition tuple. Partition paths are cross-checked as a
+    Spark read checks them; unsupported format versions and transforms
+    are refused by :func:`load_metadata`."""
+    import pyarrow.parquet as pq
+
+    meta = load_metadata(path)
+    if meta["current-snapshot-id"] == -1:
+        return []
+    snap = _snapshot_by_id(meta, meta["current-snapshot-id"])
+    snap_meta, descriptors = _snapshot_view(meta, snap)
+    files = _snapshot_files(meta, snap)
+    _check_partition_paths(path, files, descriptors)
+    deleted: dict[str, set[int]] = {}
+    for d in _snapshot_delete_files(meta, snap):
+        t = pq.ParquetFile(d["file_path"]).read(columns=["file_path", "pos"])
+        for fp, pos in zip(
+            t.column("file_path").to_pylist(), t.column("pos").to_pylist()
+        ):
+            deleted.setdefault(_fs_path(fp), set()).add(pos)
+    schema = _current_schema(snap_meta)
+    return [
+        {
+            "path": f["file_path"],
+            "record_count": f["record_count"],
+            "stats": _bounds_stats(f, schema),
+            "deleted": frozenset(deleted.get(_fs_path(f["file_path"]), ())),
+            "partition": f["partition"],
+        }
+        for f in files
+    ]
 
 
 def read_iceberg(
@@ -2030,10 +2116,7 @@ def read_iceberg(
         snapshot_id = meta["current-snapshot-id"]
     # schema as of that snapshot (schema-id pinned in the snapshot)
     snap = _snapshot_by_id(meta, snapshot_id)
-    snap_meta = json.loads(json.dumps(meta))
-    snap_meta["current-schema-id"] = snap.get(
-        "schema-id", meta["current-schema-id"]
-    )
+    snap_meta, descriptors = _snapshot_view(meta, snap)
     schema = _spark_schema_of(snap_meta)
     if snapshot_id == -1:
         return spark.createDataFrame([], schema)
@@ -2047,10 +2130,6 @@ def read_iceberg(
                 for k, v in partition_filter.items()
             )
         ]
-    descriptors = [
-        _transform_of_spec_field(pf, _current_schema(snap_meta))
-        for pf in _current_spec(meta)["fields"]
-    ]
     if where:
         from tscd_datalake_adapter_spark.sources.delta_lite import (
             _parse_conjuncts,
@@ -2074,23 +2153,7 @@ def read_iceberg(
         return out.where(where) if where else out
     data_root = os.path.join(path, "data")
     paths = sorted(f["file_path"] for f in files)
-    # cross-check manifests against the physical layout (hive segments),
-    # mirroring delta_lite's partitionValues check; transformed values
-    # compare through their path serialization (day=2026-08-13, ...)
-    pnames = tuple(d["name"] for d in descriptors)
-    for f in files:
-        rel = os.path.relpath(f["file_path"], data_root)
-        from_path = _partition_values(rel, pnames)
-        for d in descriptors:
-            want = f["partition"].get(d["name"])
-            got = from_path.get(d["name"])
-            if got is not None and (
-                want is None or _transform_path_str(d, want) != str(got)
-            ):
-                raise ValueError(
-                    f"partition mismatch for {rel}: manifest says "
-                    f"{want!r}, path says {got!r}"
-                )
+    _check_partition_paths(path, files, descriptors)
     delete_files = _snapshot_delete_files(meta, snap)
     df = (
         spark.read.schema(schema)
@@ -2334,20 +2397,14 @@ def materialize_deletes(
         ).select("file_path", "pos")
     )
     # distinct files with pending deletes: bounded by the delete set
-    affected_uris = {
-        r["file_path"]
+    affected_paths = {
+        _fs_path(r["file_path"])
         for r in del_df.select("file_path").distinct().collect()
     }
-
-    def _uri_path(u: str) -> str:
-        return u.split(":", 1)[1] if u.startswith("file:") else u
-
-    affected_posix = {_uri_path(u) for u in affected_uris}
     affected = sorted(
         f["file_path"]
         for f in files
-        if f["file_path"] in affected_posix
-        or f["file_path"] in affected_uris
+        if _fs_path(f["file_path"]) in affected_paths
     )
     if not affected:
         raise ValueError(
