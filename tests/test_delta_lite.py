@@ -986,6 +986,63 @@ def test_merge_upsert_replaces_and_inserts(spark, sf_dir, tmp_path):
     ).count() == 0
 
 
+def test_merge_pruning_keeps_statless_files_and_empty_updates(
+    spark, sf_dir, tmp_path
+):
+    """merge_delta's stats pruning skips a file only when its key range
+    misses the update range: a file without stats is rewritten, and an
+    empty update set (no range) rewrites every file, rows unchanged."""
+    from tscd_datalake_adapter_spark.sources.delta_lite import (
+        _replay,
+        merge_delta,
+    )
+
+    path = str(tmp_path / "t")
+    src = (
+        _orders(spark, sf_dir)
+        .select("o_orderkey", "o_totalprice")
+        .where("o_orderkey < 2000")
+        .repartitionByRange(4, "o_orderkey")
+        .sortWithinPartitions("o_orderkey")
+    )
+    write_delta(src, path)
+    log0 = os.path.join(path, "_delta_log", f"{0:020d}.json")
+    with open(log0, encoding="utf-8") as fh:
+        actions = [json.loads(ln) for ln in fh if ln.strip()]
+    adds = [a["add"] for a in actions if "add" in a]
+    assert len(adds) == 4
+    def lo(add):
+        return json.loads(add["stats"])["minValues"]["o_orderkey"]
+
+    top = max(adds, key=lo)
+    del top["stats"]
+    with open(log0, "w", encoding="utf-8") as fh:
+        fh.write("".join(json.dumps(a) + "\n" for a in actions))
+
+    def removed(v):
+        log = os.path.join(path, "_delta_log", f"{v:020d}.json")
+        with open(log, encoding="utf-8") as fh:
+            return {
+                json.loads(ln)["remove"]["path"]
+                for ln in fh
+                if '"remove"' in ln
+            }
+
+    lowest = min((a for a in adds if "stats" in a), key=lo)
+    key = lo(lowest)
+    low = src.where(F.col("o_orderkey") == key).withColumn(
+        "o_totalprice", F.col("o_totalprice") * 0
+    )
+    v = merge_delta(spark, path, low, key="o_orderkey")
+    assert removed(v) == {lowest["path"], top["path"]}
+
+    before = sorted(map(tuple, read_delta(spark, path).collect()))
+    live = set(_replay(path, None)["files"])
+    v = merge_delta(spark, path, src.limit(0), key="o_orderkey")
+    assert removed(v) == live
+    assert sorted(map(tuple, read_delta(spark, path).collect())) == before
+
+
 def test_vacuum_deletes_unreferenced_files_and_breaks_old_travel(
     spark, sf_dir, tmp_path
 ):

@@ -1132,6 +1132,39 @@ def test_delete_iceberg_row_level_copy_on_write(spark, sf_dir, tmp_path):
         )
 
 
+def test_merge_iceberg_empty_updates_rewrite_every_file(
+    spark, sf_dir, tmp_path
+):
+    """merge_iceberg's bounds pruning needs an update range: an empty
+    update set rewrites every live file, rows unchanged."""
+    from tscd_datalake_adapter_spark.sources.iceberg_lite import (
+        _snapshot_by_id,
+        _snapshot_files,
+        merge_iceberg,
+    )
+
+    def live(path):
+        meta = load_metadata(path)
+        snap = _snapshot_by_id(meta, meta["current-snapshot-id"])
+        return {f["file_path"] for f in _snapshot_files(meta, snap)}
+
+    path = str(tmp_path / "t")
+    src = (
+        _orders(spark, sf_dir)
+        .select("o_orderkey", "o_totalprice")
+        .where("o_orderkey < 2000")
+        .repartitionByRange(4, "o_orderkey")
+    )
+    write_iceberg(src, path, mode="append")
+    before = live(path)
+    assert len(before) == 4
+    merge_iceberg(spark, path, src.limit(0), "o_orderkey")
+    assert not live(path) & before
+    assert sorted(map(tuple, read_iceberg(spark, path).collect())) == sorted(
+        map(tuple, src.collect())
+    )
+
+
 def test_merge_iceberg_upsert_bounds_pruned(spark, sf_dir, tmp_path):
     """r11: MERGE (upsert by key) on iceberg_lite — the format twin of
     merge_delta. Bounds-pruned: only files whose key range intersects

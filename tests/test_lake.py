@@ -864,27 +864,28 @@ def test_metadata_answers_keep_read_checks(spark, tmp_path, book_dir, backend):
         lake.list_books()
 
 
+def _job_ids(spark, thunk) -> list[int]:
+    """Ids of the Spark jobs ``thunk`` starts, read from ``statusTracker``
+    under a fresh job group after the listener bus drained."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "lake call")
+    try:
+        thunk()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("backend", ["delta", "iceberg"])
 def test_status_and_list_start_no_spark_job(spark, tmp_path, book_dir, backend):
     """Structure pin, not timing: ``IngestApi.status`` (hit and miss) and
     ``IngestApi.list`` start no Spark job on the table-format backends."""
-    import uuid
-
     from tests.conftest import BOOK_V1
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def job_ids(thunk) -> list[int]:
-        group = f"zero-job-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "lake request")
-        try:
-            thunk()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return list(tracker.getJobIdsForGroup(group))
 
     lake = LakeAdapter(spark, str(tmp_path / f"zlake_{backend}"), backend=backend)
     api = IngestApi(lake)
@@ -893,11 +894,201 @@ def test_status_and_list_start_no_spark_job(spark, tmp_path, book_dir, backend):
         [(1, BOOK_V1), (5, BOOK_V1)], "book_id long, raw string"
     )
     lake.ingest_raw_df(raw, TS2)  # one multi-id file: misses in 1..5 read it
-    assert job_ids(lambda: lake.read().count())  # the probe sees jobs
-    assert job_ids(lambda: api.status(22)["status"] == "available") == []
-    assert job_ids(lambda: api.status(3)) == []
-    assert job_ids(lambda: api.status(999)) == []
-    assert job_ids(api.list) == []
+    assert _job_ids(spark, lambda: lake.read().count())  # the probe sees jobs
+    assert _job_ids(spark, lambda: api.status(22)["status"] == "available") == []
+    assert _job_ids(spark, lambda: api.status(3)) == []
+    assert _job_ids(spark, lambda: api.status(999)) == []
+    assert _job_ids(spark, api.list) == []
     assert api.status(22)["status"] == "available"
     assert api.status(3)["status"] == "not_found"
     assert api.list()["books"] == [1, 5, 11, 22, 33]
+
+
+UPDATE_SCHEMA = "book_id long, header string, body string"
+TS_A = dt.datetime(2026, 8, 13, 14, 30, 0)
+TS_B = dt.datetime(2026, 8, 13, 15, 0, 0)
+TS_D = dt.datetime(2026, 8, 12, 7, 0, 0)
+TS3 = dt.datetime(2026, 8, 15, 10, 0, 0)
+
+
+def _merge_fixture_lake(spark, root, backend) -> LakeAdapter:
+    """Multi-row bulk files in three partitions (one per bulk ingest),
+    single-row ingests, id 2 in two partitions, and a partition (TS_D)
+    holding only ids 55 and 56."""
+    from tests.conftest import BOOK_UNICODE, BOOK_V1, BOOK_V2
+
+    lake = LakeAdapter(spark, root, backend=backend)
+    texts = (BOOK_V1, BOOK_V2, BOOK_UNICODE)
+    bulks = ((TS_A, (1, 2, 5, 8)), (TS_B, (20, 21, 30)), (TS2, (40, 45, 50)))
+    for ts, ids in bulks:
+        raw = spark.createDataFrame(
+            [(b, texts[b % 3]) for b in ids], "book_id long, raw string"
+        ).coalesce(1)
+        assert lake.ingest_raw_df(raw, ts) == 0
+    for bid, ts in ((11, TS_A), (2, TS2), (33, TS2), (55, TS_D), (56, TS_D)):
+        lake.ingest_text(bid, texts[bid % 3], ts)
+    return lake
+
+
+def _live_paths(lake) -> dict[str, set[int]]:
+    """Every live data file (normalized path) with the ids it holds,
+    read from the format's live-file list and each file's parquet."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    if lake.backend == "delta":
+        from tscd_datalake_adapter_spark.sources.delta_lite import live_files
+    else:
+        from tscd_datalake_adapter_spark.sources.iceberg_lite import live_files
+    return {
+        os.path.normpath(f["path"]): set(
+            pq.read_table(f["path"], columns=["book_id"])
+            .column("book_id")
+            .to_pylist()
+        )
+        for f in live_files(lake.lake_root)
+    }
+
+
+@pytest.mark.parametrize("case", ["updates", "empty"])
+@pytest.mark.parametrize("backend", ["delta", "iceberg"])
+def test_merge_books_matches_python_model(spark, tmp_path, backend, case):
+    """Differential check of the file-scoped merge: the lake after
+    ``merge_books`` equals the merge computed in Python from the
+    pre-merge rows, the commit removes exactly the files that held an
+    updated id (delta: the log's remove actions; iceberg: the new
+    manifest carries every other file as EXISTING), and a partition
+    whose every row was updated is physically gone."""
+    import json
+    import os
+
+    root = str(tmp_path / f"m lake {backend}")
+    lake = _merge_fixture_lake(spark, root, backend)
+    cols = [f.name for f in BOOK_SCHEMA.fields]
+    before = [tuple(r[c] for c in cols) for r in lake.read().collect()]
+    live_before = _live_paths(lake)
+    # 2: a multi-row file and a single-row file in two partitions;
+    # 21: a multi-row file; 55, 56: their whole partition; 44: a new id
+    # inside the range of the multi-row (40, 45, 50) file
+    upd = (
+        [(b, f"h{b}", f"merged {b}") for b in (2, 21, 55, 56, 44)]
+        if case == "updates"
+        else []
+    )
+    ids = {b for b, _, _ in upd}
+    lake.merge_books(spark.createDataFrame(upd, UPDATE_SCHEMA), TS3)
+
+    day, hour = TS3.strftime("%Y%m%d"), TS3.strftime("%H")
+    expected = sorted(
+        [r for r in before if r[0] not in ids]
+        + [(b, h, body, TS3, day, hour) for b, h, body in upd]
+    )
+    after = sorted(tuple(r[c] for c in cols) for r in lake.read().collect())
+    assert after == expected
+
+    holding = {p for p, held in live_before.items() if held & ids}
+    assert len(holding) == (5 if case == "updates" else 0)
+    live_after = _live_paths(lake)
+    assert set(live_before) - set(live_after) == holding
+    if backend == "delta":
+        log = os.path.join(lake.lake_root, "_delta_log")
+        last = max(f for f in os.listdir(log) if f.endswith(".json"))
+        with open(os.path.join(log, last), encoding="utf-8") as fh:
+            actions = [json.loads(ln) for ln in fh if ln.strip()]
+        ops = [a["commitInfo"]["operation"] for a in actions if "commitInfo" in a]
+        assert ops == ["MERGE"]
+        removed = {
+            os.path.normpath(os.path.join(lake.lake_root, a["remove"]["path"]))
+            for a in actions
+            if "remove" in a
+        }
+        assert removed == holding
+    else:
+        from tscd_datalake_adapter_spark.sources import avro_lite
+        from tscd_datalake_adapter_spark.sources.iceberg_lite import (
+            _snapshot_by_id,
+            load_metadata,
+        )
+
+        meta = load_metadata(lake.lake_root)
+        snap = _snapshot_by_id(meta, meta["current-snapshot-id"])
+        assert snap["summary"]["operation"] == "MERGE"
+        _, manifests = avro_lite.read_container(snap["manifest-list"])
+        status = {}
+        for m in manifests:
+            for e in avro_lite.read_container(m["manifest_path"])[1]:
+                fp = os.path.normpath(e["data_file"]["file_path"])
+                status[fp] = e["status"]
+        # 0 = EXISTING (carried unread), 1 = ADDED
+        carried = {p for p, s in status.items() if s == 0}
+        added = {p for p, s in status.items() if s == 1}
+        assert carried == set(live_before) - holding
+        assert not added & set(live_before)
+
+    part_d = (
+        ("ingest_date=20260812", "ingest_hour=07")
+        if backend == "delta"
+        else ("data", "ingest_ts_day=2026-08-12", "ingest_ts_hour=2026-08-12-07")
+    )
+    part_d_left = os.path.isdir(os.path.join(lake.lake_root, *part_d))
+    assert part_d_left == (case == "empty")
+
+
+@pytest.mark.parametrize("backend", ["delta", "iceberg"])
+def test_merge_books_job_count_and_cache_state(spark, tmp_path, backend):
+    """Structure pins: ``merge_books`` on a Python-list update frame
+    starts at most 3 Spark jobs (collect the ids, build the broadcast,
+    write); an uncached frame leaves no persisted RDD behind, also when
+    the merge raises, and a frame the caller cached stays cached."""
+    from pyspark import StorageLevel
+
+    lake = _merge_fixture_lake(spark, str(tmp_path / f"j_{backend}"), backend)
+    persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
+    updates = spark.createDataFrame(
+        [(2, "h", "b"), (21, "h", "b"), (44, "h", "b")], UPDATE_SCHEMA
+    )
+    jobs = _job_ids(spark, lambda: lake.merge_books(updates, TS3))
+    assert 0 < len(jobs) <= 3, jobs
+    assert updates.storageLevel == StorageLevel.NONE
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
+
+    cached = spark.createDataFrame(
+        [(55, "h", "b"), (99, "h", "b")], UPDATE_SCHEMA
+    ).cache()
+    try:
+        assert cached.count() == 2
+        lake.merge_books(cached, TS3 + dt.timedelta(hours=1))
+        assert cached.storageLevel != StorageLevel.NONE
+    finally:
+        cached.unpersist()
+    assert lake.list_books() == [
+        1, 2, 5, 8, 11, 20, 21, 30, 33, 40, 44, 45, 50, 55, 56, 99
+    ]
+
+    # a null id is refused before anything is written, cache released
+    with pytest.raises(InvalidBookId, match="null book_id"):
+        lake.merge_books(
+            spark.createDataFrame([(None, "h", "b")], UPDATE_SCHEMA), TS3
+        )
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
+    assert lake.list_books()[-1] == 99
+
+
+def test_merge_books_refuses_live_position_deletes(spark, tmp_path):
+    """Iceberg: a merge over pending merge-on-read deletes raises the
+    partial-overwrite ValueError and leaves the lake as it was."""
+    from tscd_datalake_adapter_spark.sources.iceberg_lite import delete_iceberg
+
+    lake = _merge_fixture_lake(spark, str(tmp_path / "p_iceberg"), "iceberg")
+    res = delete_iceberg(
+        spark, lake.lake_root, "book_id = 45", strategy="merge-on-read"
+    )
+    assert res["delete_files"] == 1
+    before = sorted(lake.read().collect())
+    updates = spark.createDataFrame(
+        [(2, "h", "b"), (40, "h", "b")], UPDATE_SCHEMA
+    )
+    with pytest.raises(ValueError, match="live position-delete files"):
+        lake.merge_books(updates, TS3)
+    assert sorted(lake.read().collect()) == before

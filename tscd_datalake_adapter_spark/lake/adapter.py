@@ -37,9 +37,15 @@ bounded by checkpoints) and read, driver-side with pyarrow, only the
 ``book_id`` column of the files whose per-file stats cannot settle the
 answer. ``exists`` costs that metadata read plus the column of the files
 whose ``book_id`` range covers the id; ``list_books``' work on the Spark
-driver grows with its result, which was always collected there. The parquet
-fallback has no per-file stats to read and keeps Spark scans (a filtered
-limit-1 scan with row-group pruning; a 2-phase distributed distinct).
+driver grows with its result, which was always collected there.
+``merge_books`` plans from the same metadata: it collects the update ids
+(the set its broadcast anti-join holds on the driver anyway), chooses the
+files that hold one of them as ``exists`` does, and rewrites only those
+files, in three Spark jobs whatever the lake's size; its read and write
+grow with the touched files and the updates, not with the touched
+partitions. The parquet fallback has no per-file stats to read and keeps
+Spark scans (a filtered limit-1 scan with row-group pruning; a 2-phase
+distributed distinct; a merge that rewrites every affected partition).
 """
 
 from __future__ import annotations
@@ -183,6 +189,25 @@ def _file_book_ids(f: dict):
         .to_numpy()
     )
     return np.delete(ids, sorted(f["deleted"])) if f["deleted"] else ids
+
+
+def _with_new_rows(
+    keep: DataFrame, updates: DataFrame, ts: dt.datetime
+) -> DataFrame:
+    """A merge's output: the kept rows plus the ``(book_id, header,
+    body)`` updates stamped into the ``ts`` partition, in BOOK_SCHEMA
+    column order."""
+    day, hour = partition_values(ts)
+    cols = [f.name for f in BOOK_SCHEMA.fields]
+    new_rows = updates.select(
+        "book_id",
+        "header",
+        "body",
+        F.lit(naive_utc(ts)).cast("timestamp").alias("ingest_ts"),
+        F.lit(day).alias("ingest_date"),
+        F.lit(hour).alias("ingest_hour"),
+    )
+    return keep.select(*cols).unionByName(new_rows.select(*cols))
 
 
 class LakeAdapter:
@@ -350,18 +375,21 @@ class LakeAdapter:
                 operation="INGEST",
             )
 
-    def _fmt_replace_partitions(
+    def _fmt_overwrite(
         self,
         df: DataFrame,
-        parts: list[dict],
         ts_ms: int,
         operation: str,
         purge: bool,
+        parts: list[dict] | None = None,
+        paths: list[str] | None = None,
     ) -> None:
-        """One partition-scoped overwrite commit; with ``purge`` the
-        files referenced only by pre-commit versions are physically
-        deleted (delta: targeted purge of this commit's tombstones;
-        iceberg: snapshot expiry to the new snapshot)."""
+        """One scoped overwrite commit: ``df`` replaces the files of the
+        named ``parts`` (partition dicts) or exactly the named live
+        ``paths`` (absolute, as :meth:`_live_files` spells them). With
+        ``purge`` the files referenced only by pre-commit versions are
+        physically deleted (delta: targeted purge of this commit's
+        tombstones; iceberg: snapshot expiry to the new snapshot)."""
         if self.backend == "delta":
             from tscd_datalake_adapter_spark.sources.delta_lite import (
                 purge_removed,
@@ -374,6 +402,9 @@ class LakeAdapter:
                 mode="overwrite",
                 partition_by=_PARTITION_COLS,
                 replace_partitions=parts,
+                replace_paths=None
+                if paths is None
+                else [os.path.relpath(p, self.lake_root) for p in paths],
                 writer_options=_BLOOM_OPTIONS,
                 commit_timestamp_ms=ts_ms,
                 operation=operation,
@@ -392,7 +423,8 @@ class LakeAdapter:
                 self.lake_root,
                 mode="overwrite",
                 partition_transforms=_ICEBERG_TRANSFORMS,
-                replace_partitions=_iceberg_parts(parts),
+                replace_partitions=parts and _iceberg_parts(parts),
+                replace_paths=paths,
                 writer_options=_BLOOM_OPTIONS,
                 commit_timestamp_ms=ts_ms,
                 operation=operation,
@@ -449,6 +481,77 @@ class LakeAdapter:
                 live_files,
             )
         return live_files(self.lake_root)
+
+    def _files_holding(self, ids: set[int]) -> Iterator[dict]:
+        """The live files that hold at least one of ``ids``, from the
+        table format's metadata: a file whose stats rule out every id is
+        dropped, a single-id file (:func:`_single_book_id`) is settled
+        from its stats, and every other survivor has its ``book_id``
+        column read — lazily, after every stats-settled file was
+        yielded, so a caller that stops at a stats-settled hit reads no
+        column."""
+        import bisect
+
+        import numpy as np
+
+        from tscd_datalake_adapter_spark.sources.delta_lite import (
+            _stats_may_match,
+        )
+
+        wanted = sorted(ids)
+        unsettled = []
+        for f in self._live_files():
+            lo = (f["stats"] or {}).get("minValues", {}).get("book_id")
+            # the smallest wanted id the file's range could still hold
+            i = 0 if lo is None else bisect.bisect_left(wanted, lo)
+            if i == len(wanted) or not _stats_may_match(
+                f["stats"], [("book_id", "=", wanted[i])]
+            ):
+                continue
+            one = _single_book_id(f)
+            if one is None:
+                unsettled.append(f)
+            elif one in ids:
+                yield f
+        for f in unsettled:
+            if np.isin(_file_book_ids(f), wanted).any():
+                yield f
+
+    def _fmt_read_files(self, paths: list[str]) -> DataFrame:
+        """Exactly the given live files (absolute, as :meth:`_live_files`
+        spells them) through the table format's own file-subset reader:
+        logged/snapshot schema, partition paths cross-checked."""
+        if not paths:
+            return self.spark.createDataFrame([], BOOK_SCHEMA)
+        if self.backend == "delta":
+            from tscd_datalake_adapter_spark.sources.delta_lite import (
+                _read_logged_files,
+                _replay,
+            )
+
+            return _read_logged_files(
+                self.spark,
+                self.lake_root,
+                _replay(self.lake_root, None),
+                [os.path.relpath(p, self.lake_root) for p in paths],
+            )
+        from tscd_datalake_adapter_spark.sources.iceberg_lite import (
+            _read_data_files,
+            _snapshot_by_id,
+            _snapshot_files,
+            load_metadata,
+        )
+
+        meta = load_metadata(self.lake_root)
+        snap = _snapshot_by_id(meta, meta["current-snapshot-id"])
+        want = set(paths)
+        return _read_data_files(
+            self.spark,
+            self.lake_root,
+            meta,
+            snap,
+            [f for f in _snapshot_files(meta, snap) if f["file_path"] in want],
+        )
 
     def _fmt_partition_tuples(self) -> set[tuple[str, str]]:
         """(ingest_date, ingest_hour) tuples with live files, from the
@@ -859,18 +962,7 @@ class LakeAdapter:
                 self.read().where(F.col("book_id") == bid).limit(1).count()
                 > 0
             )
-        from tscd_datalake_adapter_spark.sources.delta_lite import (
-            _stats_may_match,
-        )
-
-        unsettled = []
-        for f in self._live_files():
-            if not _stats_may_match(f["stats"], [("book_id", "=", bid)]):
-                continue
-            if _single_book_id(f) == bid:
-                return True
-            unsettled.append(f)
-        return any(bool((_file_book_ids(f) == bid).any()) for f in unsettled)
+        return next(self._files_holding({bid}), None) is not None
 
     def list_books(self) -> list[int]:
         """Reference R6 (``S3DatalakeStorage.java:89-119``): the sorted
@@ -919,28 +1011,70 @@ class LakeAdapter:
         partition (delete-and-insert, the Delta MERGE semantic).
 
         ``updates`` has schema ``(book_id long, header string, body string)``.
-        Fully declarative — no driver-side id collection: affected partitions
-        are discovered by join; untouched partitions are never read or
-        written.
 
-        Delta backend (default since r9): ONE partition-scoped overwrite
-        commit (``replace_partitions`` — the connector's replaceWhere):
-        the affected partitions' files are tombstoned, the merged rows'
-        files added, atomically; a partition whose every row is updated
-        away simply gets no new files and is thereby DROPPED — the exact
-        semantics the plain-parquet layout could only approximate with a
-        post-write directory delete (the r5–r8 documented caveat, now
-        closed). ``purge=True`` physically unlinks the tombstoned files
-        right after the commit (the targeted vacuum); pass ``purge=False``
-        to retain them for time travel to pre-merge versions.
+        Delta and iceberg: a file-scoped copy-on-write planned from the
+        table format's metadata, the connector's find-touched-files-then-
+        rewrite shape, in three Spark jobs. ``updates`` is persisted for
+        the call unless the caller already cached it. Job 1 collects its
+        ``book_id`` set to the driver — the same set the rewrite's
+        broadcast anti-join builds, so the driver held it before too. The
+        touched files are then chosen from the live-file metadata as
+        :meth:`exists` chooses them (stats drop files that hold no updated
+        id, single-id files settle from stats, the rest have their
+        ``book_id`` column read with pyarrow). Only those files are read
+        and anti-joined against the broadcast ids (job 2 builds the
+        broadcast), unioned with the new rows, and committed as ONE
+        ``replace_paths`` overwrite (job 3 writes): the touched files are
+        removed and the merged files added atomically; every other file,
+        in touched partitions too, keeps its add/manifest entry unread.
+        A partition whose every row is updated away gets no new files and
+        is thereby dropped. ``purge=True`` physically unlinks the removed
+        files right after the commit (delta: targeted purge; iceberg:
+        snapshot expiry) and prunes the emptied partition directories;
+        pass ``purge=False`` to retain them for time travel to pre-merge
+        versions. Iceberg refuses the commit while live position-delete
+        files are pending (``materialize_deletes`` first).
 
-        Parquet backend: the pre-round-9 dynamic-partition-overwrite +
-        observed-survivor-set directory delete (kept verbatim as the
-        fallback; its crash window degrades to superseded rows that
-        :meth:`read_latest` still resolves correctly).
+        Parquet backend: the pre-round-9 dynamic-partition-overwrite of
+        the affected partitions (found by a join, fed back as a literal
+        partition predicate) + observed-survivor-set directory delete
+        (kept as the fallback; its crash window degrades to superseded
+        rows that :meth:`read_latest` still resolves correctly).
         """
+        if self.backend == "parquet":
+            self._merge_parquet(updates, ts)
+            return
+        from pyspark import StorageLevel
+
+        from tscd_datalake_adapter_spark.functions import persist_corpus
+
+        cached = updates.storageLevel != StorageLevel.NONE
+        upd = updates if cached else persist_corpus(updates)
+        try:
+            ids = {r.book_id for r in upd.select("book_id").collect()}
+            if None in ids:
+                raise InvalidBookId("merge_books updates hold a null book_id")
+            # chosen after the collect, so the window between choosing
+            # the files and the commit's own log/metadata read holds no
+            # Spark job
+            touched = [f["path"] for f in self._files_holding(ids)]
+            keep = self._fmt_read_files(touched).join(
+                F.broadcast(upd.select("book_id")), "book_id", "left_anti"
+            )
+            self._fmt_overwrite(
+                _with_new_rows(keep, upd, ts),
+                _ts_ms(ts),
+                "MERGE",
+                purge,
+                paths=touched,
+            )
+        finally:
+            if not cached:
+                upd.unpersist()
+
+    def _merge_parquet(self, updates: DataFrame, ts: dt.datetime) -> None:
+        """:meth:`merge_books` on the log-free layout."""
         day, hour = partition_values(ts)
-        ts_naive = naive_utc(ts)
         lake = self.read()
         ids = updates.select("book_id").distinct()
         affected = (
@@ -973,29 +1107,7 @@ class LakeAdapter:
         keep = lake.where(part_pred).join(
             F.broadcast(ids), "book_id", "left_anti"
         )
-        new_rows = updates.select(
-            "book_id",
-            "header",
-            "body",
-            F.lit(ts_naive).cast("timestamp").alias("ingest_ts"),
-            F.lit(day).alias("ingest_date"),
-            F.lit(hour).alias("ingest_hour"),
-        )
-        cols = [f.name for f in BOOK_SCHEMA.fields]
-        out = keep.select(*cols).unionByName(new_rows.select(*cols))
-
-        if self.backend != "parquet":
-            self._fmt_replace_partitions(
-                out,
-                [
-                    {"ingest_date": d, "ingest_hour": h}
-                    for d, h in sorted(part_rows)
-                ],
-                _ts_ms(ts),
-                "MERGE",
-                purge,
-            )
-            return
+        out = _with_new_rows(keep, updates, ts)
 
         from pyspark.sql import Observation
 
@@ -1074,19 +1186,19 @@ class LakeAdapter:
                 ingest_hour,
             ) not in self._fmt_partition_tuples():
                 return 0
-            self._fmt_replace_partitions(
+            self._fmt_overwrite(
                 part_df.coalesce(target_files),
-                [
-                    {
-                        "ingest_date": ingest_date,
-                        "ingest_hour": ingest_hour,
-                    }
-                ],
                 # stamped at the newest ingest time, not the wall clock
                 # (ADVICE r9): see _maintenance_ts_ms
                 self._maintenance_ts_ms(),
                 "OPTIMIZE",
                 purge=True,
+                parts=[
+                    {
+                        "ingest_date": ingest_date,
+                        "ingest_hour": ingest_hour,
+                    }
+                ],
             )
             return int(obs.get["n"])
         prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -1124,17 +1236,17 @@ class LakeAdapter:
             }
             if not expired:
                 return 0
-            self._fmt_replace_partitions(
+            self._fmt_overwrite(
                 self.spark.createDataFrame([], BOOK_SCHEMA),
-                [
-                    {"ingest_date": d, "ingest_hour": h}
-                    for d, h in sorted(expired)
-                ],
                 # stamped at the newest ingest time, not the wall clock
                 # (ADVICE r9): see _maintenance_ts_ms
                 self._maintenance_ts_ms(),
                 "EXPIRE",
                 purge=True,
+                parts=[
+                    {"ingest_date": d, "ingest_hour": h}
+                    for d, h in sorted(expired)
+                ],
             )
             return len({d for d, _ in expired})
         removed = 0

@@ -1374,27 +1374,11 @@ def merge_delta(
     rng = updates.agg(
         F.min(key).alias("lo"), F.max(key).alias("hi")
     ).first()
-    umin, umax = rng["lo"], rng["hi"]
-    rewrite: list[str] = []
-    for rel, add in state["files"].items():
-        st = _add_stats(add)
-        prunable = bool(st) and st.get("numRecords") == 0
-        if (
-            not prunable
-            and st
-            and umin is not None
-            and key in st.get("minValues", {})
-            and key in st.get("maxValues", {})
-        ):
-            try:
-                prunable = (
-                    st["maxValues"][key] < umin
-                    or st["minValues"][key] > umax
-                )
-            except TypeError:
-                prunable = False  # incomparable types: rewrite
-        if not prunable:
-            rewrite.append(rel)
+    # an empty update set has no range (None bounds compare as
+    # incomparable), so every non-empty file rewrites
+    in_range = [(key, ">=", rng["lo"]), (key, "<=", rng["hi"])]
+    files = state["files"]
+    rewrite = [rel for rel in files if _file_may_match(files[rel], in_range)]
     touched = _read_logged_files(spark, path, state, rewrite)
     merged = touched.join(
         updates.select(key).distinct(), on=key, how="left_anti"

@@ -85,6 +85,7 @@ from tscd_datalake_adapter_spark.sources.delta_lite import (
     ConcurrentWriteError,
     DeltaSchemaError,
     _partition_values,
+    _prune_empty_dirs,
     _schema_fingerprint,
     _write_data_files,
 )
@@ -2080,6 +2081,33 @@ def live_files(path: str) -> list[dict]:
     ]
 
 
+def _read_data_files(
+    spark: SparkSession,
+    path: str,
+    meta: dict,
+    snap: dict,
+    files: list[dict],
+) -> DataFrame:
+    """DataFrame over exactly the given manifest entries of ``snap``,
+    read with the snapshot's schema (hive partition values cast to their
+    declared types — never type-inferred), after cross-checking each
+    entry's partition tuple against its hive path: the twin of
+    :func:`delta_lite._read_logged_files`. Partition discovery appends
+    the derived path columns of a transformed spec (``col_day=...``) to
+    the schema; callers that need only the table's columns project them
+    out (after any join on Spark's ``_metadata`` columns)."""
+    snap_meta, descriptors = _snapshot_view(meta, snap)
+    schema = _spark_schema_of(snap_meta)
+    if not files:
+        return spark.createDataFrame([], schema)
+    _check_partition_paths(path, files, descriptors)
+    return (
+        spark.read.schema(schema)
+        .option("basePath", os.path.join(path, "data"))
+        .parquet(*sorted(f["file_path"] for f in files))
+    )
+
+
 def read_iceberg(
     spark: SparkSession,
     path: str,
@@ -2148,18 +2176,8 @@ def read_iceberg(
                 # a temporal-transformed table exists for
                 and _partition_may_match(f, descriptors, conjuncts)
             ]
-    if not files:
-        out = spark.createDataFrame([], schema)
-        return out.where(where) if where else out
-    data_root = os.path.join(path, "data")
-    paths = sorted(f["file_path"] for f in files)
-    _check_partition_paths(path, files, descriptors)
-    delete_files = _snapshot_delete_files(meta, snap)
-    df = (
-        spark.read.schema(schema)
-        .option("basePath", data_root)
-        .parquet(*paths)
-    )
+    df = _read_data_files(spark, path, meta, snap, files)
+    delete_files = _snapshot_delete_files(meta, snap) if files else []
     if delete_files:
         # merge-on-read position deletes (r11): anti-join the selected
         # rows against the delete files' (file_path, pos) sets. Both
@@ -2284,13 +2302,8 @@ def delete_iceberg(
             "rewritten_files": 0,
         }
     schema = _spark_schema_of(meta)
-    data_root = os.path.join(path, "data")
     paths = sorted(f["file_path"] for f in candidates)
-    df = (
-        spark.read.schema(schema)
-        .option("basePath", data_root)
-        .parquet(*paths)
-    )
+    df = _read_data_files(spark, path, meta, snap, candidates)
     # NULL predicate keeps the row: DELETE removes only proven-TRUE rows
     match = F.coalesce(F.expr(where), F.lit(False))
 
@@ -2323,7 +2336,7 @@ def delete_iceberg(
             matched.repartition(1).sortWithinPartitions(
                 "file_path", "pos"
             ),
-            data_root,
+            os.path.join(path, "data"),
             (),
             commit_uuid,
             None,
@@ -2401,23 +2414,16 @@ def materialize_deletes(
         _fs_path(r["file_path"])
         for r in del_df.select("file_path").distinct().collect()
     }
-    affected = sorted(
-        f["file_path"]
-        for f in files
-        if _fs_path(f["file_path"]) in affected_paths
-    )
+    affected = [
+        f for f in files if _fs_path(f["file_path"]) in affected_paths
+    ]
     if not affected:
         raise ValueError(
             "live delete files name no live data file — the delete set "
             "is stale (was the table rewritten around the guard?)"
         )
     schema = _spark_schema_of(meta)
-    data_root = os.path.join(path, "data")
-    df = (
-        spark.read.schema(schema)
-        .option("basePath", data_root)
-        .parquet(*affected)
-    )
+    df = _read_data_files(spark, path, meta, snap, affected)
     kept = (
         df.withColumns(
             {
@@ -2438,7 +2444,7 @@ def materialize_deletes(
         kept,
         path,
         mode="overwrite",
-        replace_paths=affected,
+        replace_paths=sorted(f["file_path"] for f in affected),
         operation="REWRITE",
         summary_extra={"removed-position-deletes": str(removed)},
         commit_timestamp_ms=commit_timestamp_ms,
@@ -2488,51 +2494,15 @@ def merge_iceberg(
     rng = updates.agg(
         F.min(key).alias("lo"), F.max(key).alias("hi")
     ).first()
-    umin, umax = rng["lo"], rng["hi"]
+    # an empty update set has no range (None bounds compare as
+    # incomparable), so every non-empty file rewrites
+    in_range = [(key, ">=", rng["lo"]), (key, "<=", rng["hi"])]
     ice_schema = _current_schema(meta)
-    kf = next(
-        (f for f in ice_schema["fields"] if f["name"] == key), None
-    )
-    rewrite: list[dict] = []
-    for f in files:
-        prunable = f.get("record_count") == 0
-        lb = ub = None
-        if kf is not None:
-            lo_kv = {
-                kv["key"]: kv["value"]
-                for kv in (f.get("lower_bounds") or [])
-            }
-            hi_kv = {
-                kv["key"]: kv["value"]
-                for kv in (f.get("upper_bounds") or [])
-            }
-            if kf["id"] in lo_kv and kf["id"] in hi_kv:
-                lb = _ice_deserialize(kf["type"], lo_kv[kf["id"]])
-                ub = _ice_deserialize(kf["type"], hi_kv[kf["id"]])
-        if (
-            not prunable
-            and umin is not None
-            and lb is not None
-            and ub is not None
-        ):
-            try:
-                prunable = ub < umin or lb > umax
-            except TypeError:
-                prunable = False  # incomparable types: rewrite
-        if not prunable:
-            rewrite.append(f)
+    rewrite = [f for f in files if _df_may_match(f, ice_schema, in_range)]
     schema = _spark_schema_of(meta)
-    data_root = os.path.join(path, "data")
-    if rewrite:
-        paths = sorted(f["file_path"] for f in rewrite)
-        touched = (
-            spark.read.schema(schema)
-            .option("basePath", data_root)
-            .parquet(*paths)
-            .select(*[f.name for f in schema.fields])
-        )
-    else:
-        touched = spark.createDataFrame([], schema)
+    touched = _read_data_files(spark, path, meta, snap, rewrite).select(
+        *[f.name for f in schema.fields]
+    )
     merged = touched.join(
         updates.select(key).distinct(), on=key, how="left_anti"
     ).unionByName(updates)
@@ -2615,13 +2585,9 @@ def update_iceberg(
             "rewritten_files": 0,
         }
     schema = _spark_schema_of(meta)
-    data_root = os.path.join(path, "data")
     paths = sorted(f["file_path"] for f in candidates)
-    df = (
-        spark.read.schema(schema)
-        .option("basePath", data_root)
-        .parquet(*paths)
-        .select(*[f.name for f in schema.fields])
+    df = _read_data_files(spark, path, meta, snap, candidates).select(
+        *[f.name for f in schema.fields]
     )
     match = F.coalesce(F.expr(where), F.lit(False))
     updated = df.where(match).count()
@@ -2951,8 +2917,9 @@ def expire_snapshots(path: str, keep_last: int = 1) -> list[str]:
     """Expire all but the newest ``keep_last`` snapshots: commit a new
     metadata version without them, delete their manifest lists/manifests,
     and physically delete data files referenced ONLY by expired
-    snapshots — the spec's expire-snapshots maintenance (time travel past
-    the horizon then correctly fails). Returns deleted file paths."""
+    snapshots, then the partition directories that left empty — the
+    spec's expire-snapshots maintenance (time travel past the horizon
+    then correctly fails). Returns deleted file paths."""
     meta = load_metadata(path)
     cur_v = _current_version(path)
     snaps = meta["snapshots"]
@@ -3007,6 +2974,8 @@ def expire_snapshots(path: str, keep_last: int = 1) -> list[str]:
     for p in sorted(expired_avro - keep_avro):
         if os.path.exists(p):
             os.unlink(p)
+    if deleted:
+        _prune_empty_dirs(os.path.join(path, "data"))
     meta = json.loads(json.dumps(meta))
     meta["snapshots"] = keep
     kept_ids = {s["snapshot-id"] for s in keep}
