@@ -108,8 +108,8 @@ def test_compaction(lake, book_dir, spark):
     assert before == after  # data byte-identical
     assert lake.list_books() == [11, 22, 33]
 
-    # missing partition: observed 0 rows, empty dynamic overwrite is a
-    # no-op — nothing deleted elsewhere (round-5 one-pass compact)
+    # missing partition: no live files, so no commit — nothing deleted
+    # elsewhere
     assert lake.compact("19990101", "03") == 0
     assert sorted(tuple(r) for r in lake.read().collect()) == after
 
@@ -245,10 +245,10 @@ def test_merge_physically_drops_fully_superseded_partition(
     lake, book_dir, spark
 ):
     """A partition whose EVERY row is updated away must physically
-    disappear (the r6 documented caveat, closed in r7): dynamic partition
-    overwrite alone would skip the now-empty partition; merge_books now
-    observes the surviving partition set during the rewrite and drops the
-    rest partition-level. read_latest output is unchanged by the delete."""
+    disappear: the merge's commit removes the partition's only file and
+    writes nothing back there, and the purge unlinks the file and prunes
+    the emptied partition directories. read_latest output is unchanged by
+    the delete."""
     import os
 
     # book 55 alone in its own partition; 11/22/33 together in another
@@ -288,9 +288,10 @@ def test_merge_physically_drops_fully_superseded_partition(
 
 
 def test_read_latest_resolves_superseded_versions(lake, book_dir, spark):
-    """read_latest() must show exactly one (the newest) version per book even
-    when merge_books leaves stale physical rows behind (its documented
-    partition-overwrite caveat)."""
+    """read_latest() must show exactly one (the newest) version per book:
+    a merged book resolves to its merge version, and the other books'
+    append-created duplicates (two ingest partitions) to their newest
+    ingest."""
     lake.ingest_files(sorted(str(p) for p in book_dir.iterdir()), TS)
     lake.ingest_files(sorted(str(p) for p in book_dir.iterdir()), TS2)
 
@@ -411,8 +412,42 @@ def test_api_shapes(lake, book_dir):
     assert api.delete(41)["status"] == "not_found"
     assert api.delete("x")["error"]["code"] == "invalid_book_id"
     # idempotent even on a lake no ingest ever touched (no table yet)
-    empty = IngestApi(LakeAdapter(lake.spark, str(book_dir) + "_void"))
+    empty = IngestApi(
+        LakeAdapter(lake.spark, str(book_dir) + "_void", backend=lake.backend)
+    )
     assert empty.delete(7)["status"] == "not_found"
+
+
+class TestOnIceberg:
+    """The layout-agnostic tests above, on ``backend="iceberg"``: the
+    class's ``lake`` fixture overrides the module's delta one. Tests that
+    look at delta's ``ingest_date=`` directories or ``_delta_log`` stay
+    delta-only."""
+
+    @pytest.fixture()
+    def lake(self, spark, tmp_path):
+        return LakeAdapter(spark, str(tmp_path / "lake"), backend="iceberg")
+
+    test_ingest_list_exists_roundtrip = staticmethod(
+        test_ingest_list_exists_roundtrip
+    )
+    test_duplicate_ingest_idempotent_listing = staticmethod(
+        test_duplicate_ingest_idempotent_listing
+    )
+    test_empty_lake = staticmethod(test_empty_lake)
+    test_invalid_book_id = staticmethod(test_invalid_book_id)
+    test_distributed_bulk_ingest = staticmethod(test_distributed_bulk_ingest)
+    test_retention_expire = staticmethod(test_retention_expire)
+    test_merge_upsert = staticmethod(test_merge_upsert)
+    test_read_latest_resolves_superseded_versions = staticmethod(
+        test_read_latest_resolves_superseded_versions
+    )
+    test_read_as_of_time_travel = staticmethod(test_read_as_of_time_travel)
+    test_read_as_of_tz_aware_consistency = staticmethod(
+        test_read_as_of_tz_aware_consistency
+    )
+    test_wholetext_dir_ingest = staticmethod(test_wholetext_dir_ingest)
+    test_api_shapes = staticmethod(test_api_shapes)
 
 
 def test_lake_log_history_and_stray_file_invisibility(
@@ -420,8 +455,7 @@ def test_lake_log_history_and_stray_file_invisibility(
 ):
     """The delta-backed lake (r9): every mutation is a logged commit —
     history() names them — and a stray parquet file dropped into the lake
-    directory (a crashed writer, a manual copy) is INVISIBLE to reads,
-    the read contract the plain-parquet layout could not give."""
+    directory (a crashed writer, a manual copy) is INVISIBLE to reads."""
     import glob
     import os
     import shutil
@@ -448,8 +482,7 @@ def test_lake_log_history_and_stray_file_invisibility(
 
 def test_merge_without_purge_keeps_time_travel(lake, book_dir, spark):
     """merge_books(purge=False) retains the tombstoned files, so log time
-    travel to the pre-merge state still works — the choice the plain
-    layout never had (its superseded rows were garbage, not a version)."""
+    travel to the pre-merge state still works."""
     lake.ingest_files(sorted(str(p) for p in book_dir.iterdir()), TS)
     updates = spark.createDataFrame(
         [(22, "new header", "new body")],
@@ -468,32 +501,14 @@ def test_merge_without_purge_keeps_time_travel(lake, book_dir, spark):
     assert "new body" not in by_id[22].body
 
 
-def test_parquet_fallback_backend(spark, tmp_path, book_dir):
-    """backend="parquet" keeps the pre-round-9 log-free layout working:
-    ingest/list/merge/read_as_of round-trip, and responses carry the
-    fallback's backend label."""
-    lake = LakeAdapter(spark, str(tmp_path / "plake"), backend="parquet")
-    res = lake.ingest_files(
-        sorted(str(p) for p in book_dir.iterdir()), TS
-    )
-    assert all(r["backend"] == "spark-parquet" for r in res)
-    assert lake.list_books() == [11, 22, 33]
-    import os
-
-    assert not os.path.isdir(os.path.join(lake.lake_root, "_delta_log"))
-    as_of = lake.read_as_of(dt.datetime(2026, 8, 13, 23, 0, 0))
-    assert {r.book_id for r in as_of.collect()} == {11, 22, 33}
-    updates = spark.createDataFrame(
-        [(22, "h", "b2"), (44, "h44", "b44")],
-        "book_id long, header string, body string",
-    )
-    lake.merge_books(updates, TS2)
-    assert lake.list_books() == [11, 22, 33, 44]
-    assert (
-        lake.read().where(F.col("book_id") == 22).first().body == "b2"
-    )
-    with pytest.raises(NotImplementedError):
-        lake.history()
+def test_parquet_fallback_backend(spark, tmp_path):
+    """A backend other than delta or iceberg (the log-free parquet
+    layout among them) is refused at construction, naming both, and
+    nothing is written."""
+    root = tmp_path / "plake"
+    with pytest.raises(ValueError, match="'delta' or 'iceberg'"):
+        LakeAdapter(spark, str(root), backend="parquet")
+    assert not root.exists()
 
 
 def test_lake_write_carries_bloom_filter(spark, tmp_path):
@@ -708,11 +723,6 @@ def test_erase_book_row_level_both_backends(
     assert 22 not in remaining
     assert {11, 33} <= remaining
 
-    bad = LakeAdapter(
-        spark, str(tmp_path / "plake_e"), backend="parquet"
-    )
-    with pytest.raises(NotImplementedError, match="table-format"):
-        bad.erase_book(22)
     with pytest.raises(InvalidBookId):
         lake.erase_book("nope")
 

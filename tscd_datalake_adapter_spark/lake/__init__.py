@@ -1,7 +1,7 @@
 """Lake adapter: the reference's actual surface, rebuilt on Spark.
 
 - :mod:`gutenberg` — marker-split parsing (reference R2).
-- :mod:`adapter` — partitioned-parquet lake with ingest / exists / list
+- :mod:`adapter` — delta or iceberg book lake with ingest / exists / list
   (reference R1, R4, R5, R6, R7).
 - :mod:`api` — dict-shaped API facade (reference R9-R13).
 """

@@ -4,48 +4,43 @@ The reference stores each ingested book as two text objects under
 ``{prefix}datalake/{yyyyMMdd}/{HH}/{id}.{part}.txt`` (``S3DatalakeStorage
 .java:145-150``) and answers ``exists``/``listBooks`` with O(total-objects)
 paginated key scans (``S3DatalakeStorage.java:64-119``). Here the lake is a
-Hive-partitioned parquet dataset:
+table in one of two open formats, both implemented in-repo from their
+public specs: ``backend="delta"`` (the default) keeps a
+``sources.delta_lite`` transaction log over Hive-partitioned parquet
 
     <root>/ingest_date=<yyyyMMdd>/ingest_hour=<HH>/part-*.parquet
 
-with one row per book: ``(book_id, header, body, ingest_ts)``. Differences
-from the reference, all deliberate (SURVEY.md §1.1):
+and ``backend="iceberg"`` keeps ``sources.iceberg_lite`` snapshots and
+Avro manifests over ``<root>/data/``, partitioned by ``day(ingest_ts)``
+and ``hour(ingest_ts)``. Either way the table holds one row per book:
+``(book_id, header, body, ingest_ts, ingest_date, ingest_hour)``. Every
+write is a logged commit, reads replay the log (stray or half-written
+files are invisible), ``read_as_of`` is log time travel, and MERGE
+physically drops fully superseded partitions. Differences from the
+reference, all deliberate (SURVEY.md §1.1):
 
 - UTC partition values (the reference uses server-local wall clock,
   ``Main.java:105``).
 - No accidental ``datalakedatalake/`` double prefix
   (``S3DatalakeStorage.java:146``).
-- The header+body pair is committed atomically (one row, one committer
-  transaction) — the reference's two sequential putObject calls can leave a
+- The header+body pair is committed atomically (one row, one log
+  commit) — the reference's two sequential putObject calls can leave a
   body-only book visible (SURVEY.md §3.1 step 7).
 
-Since round 9 the default backend is the ``sources.delta_lite``
-transaction log (the open Delta protocol, implemented in-repo): every
-write is a logged commit, reads replay the log (stray/half-written files
-are invisible), ``read_as_of`` is log time travel, and MERGE can
-physically drop fully-superseded partitions — the caveat the plain-parquet
-layout carried since round 5. ``backend="parquet"`` keeps the original
-log-free layout (same directory shape, max-``ingest_ts`` conventions) as
-a fallback; both backends pass the same test suite except where physical
-deletion semantics differ (documented per method).
-
 Scale notes (100 TB): the write path appends and never lists the whole lake
-(the delta commit lists only its own staged files). On the delta and
-iceberg backends ``exists`` and ``list_books`` start no Spark job: they
-replay the table format's metadata (log or manifests: bytes per file,
-bounded by checkpoints) and read, driver-side with pyarrow, only the
-``book_id`` column of the files whose per-file stats cannot settle the
-answer. ``exists`` costs that metadata read plus the column of the files
-whose ``book_id`` range covers the id; ``list_books``' work on the Spark
-driver grows with its result, which was always collected there.
-``merge_books`` plans from the same metadata: it collects the update ids
-(the set its broadcast anti-join holds on the driver anyway), chooses the
-files that hold one of them as ``exists`` does, and rewrites only those
-files, in three Spark jobs whatever the lake's size; its read and write
-grow with the touched files and the updates, not with the touched
-partitions. The parquet fallback has no per-file stats to read and keeps
-Spark scans (a filtered limit-1 scan with row-group pruning; a 2-phase
-distributed distinct; a merge that rewrites every affected partition).
+(a commit lists only its own staged files). ``exists`` and ``list_books``
+start no Spark job: they replay the table format's metadata (log or
+manifests: bytes per file, bounded by checkpoints) and read, driver-side
+with pyarrow, only the ``book_id`` column of the files whose per-file
+stats cannot settle the answer. ``exists`` costs that metadata read plus
+the column of the files whose ``book_id`` range covers the id;
+``list_books``' work on the Spark driver grows with its result, which was
+always collected there. ``merge_books`` plans from the same metadata: it
+collects the update ids (the set its broadcast anti-join holds on the
+driver anyway), chooses the files that hold one of them as ``exists``
+does, and rewrites only those files, in three Spark jobs whatever the
+lake's size; its read and write grow with the touched files and the
+updates, not with the touched partitions.
 """
 
 from __future__ import annotations
@@ -116,6 +111,13 @@ def partition_values(ts: dt.datetime) -> tuple[str, str]:
     return ts.strftime("%Y%m%d"), ts.strftime("%H")
 
 
+# A parquet bloom filter on book_id for every Spark-written file: min/max
+# row-group stats can't prune point lookups when ids are scattered across
+# the insert order (every row group spans most of the id domain), but a
+# bloom filter answers "id definitely absent" per row group regardless of
+# layout — so a filtered read on book_id touches footer bytes, not data
+# pages, for the no-hit case (the reference paid a full O(objects) key
+# scan, S3DatalakeStorage.java:64-86).
 _BLOOM_OPTIONS = {
     "parquet.bloom.filter.enabled#book_id": "true",
     "parquet.bloom.filter.expected.ndv#book_id": "100000",
@@ -213,12 +215,11 @@ def _with_new_rows(
 class LakeAdapter:
     """Spark-backed book lake with the reference's operation surface.
 
-    ``backend="delta"`` (default) runs every mutation through the
+    ``backend="delta"`` (default) runs every operation through the
     ``sources.delta_lite`` transaction log; ``backend="iceberg"`` runs
     the same operations through the ``sources.iceberg_lite`` table
-    format (snapshots + Avro manifests) — the whole reference surface is
-    format-agnostic behind this class; ``backend="parquet"`` is the
-    pre-round-9 log-free layout, kept as a fallback."""
+    format (snapshots + Avro manifests). The whole reference surface is
+    format-agnostic behind this class."""
 
     def __init__(
         self,
@@ -227,8 +228,10 @@ class LakeAdapter:
         backend: str = "delta",
         checkpoint_every: int = 32,
     ):
-        if backend not in ("delta", "iceberg", "parquet"):
-            raise ValueError(f"unsupported backend {backend!r}")
+        if backend not in ("delta", "iceberg"):
+            raise ValueError(
+                f"unsupported backend {backend!r}: use 'delta' or 'iceberg'"
+            )
         self.spark = spark
         self.lake_root = lake_root
         self.backend = backend
@@ -345,6 +348,9 @@ class LakeAdapter:
     # -- format dispatch (delta / iceberg) ------------------------------------
 
     def _fmt_append(self, df: DataFrame, ts: dt.datetime) -> None:
+        """Append ``df`` as one logged commit whose caller timestamp is
+        the INGEST time ``ts`` — the stamp :meth:`read_as_of` resolves
+        versions against."""
         if self.backend == "delta":
             from tscd_datalake_adapter_spark.sources.delta_lite import (
                 write_delta,
@@ -447,7 +453,6 @@ class LakeAdapter:
         log (no timeline to join)."""
         import time as _time
 
-        stamps: list[int] = []
         if self.backend == "delta":
             from tscd_datalake_adapter_spark.sources.delta_lite import (
                 table_history,
@@ -458,7 +463,7 @@ class LakeAdapter:
                 for h in table_history(self.lake_root)
                 if h["timestamp"] is not None
             ]
-        elif self.backend == "iceberg":
+        else:
             from tscd_datalake_adapter_spark.sources.iceberg_lite import (
                 snapshots,
             )
@@ -582,22 +587,14 @@ class LakeAdapter:
         if not res.ok:
             raise IngestFailed(f"gutenberg markers missing/mis-ordered for {bid}")
         day, hour = partition_values(ts)
-        if self.backend != "parquet":
-            # metadata-scale fast path: ONE row does not need a Spark
-            # job — write the parquet file driver-side (pyarrow) into
-            # its hive directory and commit it through the table format
-            # (delta log commit / iceberg snapshot). At the reference's
-            # one-request-per-book ingest rate this is the difference
-            # between ~2.5 ms and a full cluster round-trip per
-            # POST /ingest/{id}; bulk paths (ingest_raw_df) stay fully
-            # distributed.
-            self._ingest_single_row_fast(
-                bid, res.header, res.body, ts, day, hour
-            )
-        else:
-            row = [(bid, res.header, res.body, naive_utc(ts), day, hour)]
-            df = self.spark.createDataFrame(row, BOOK_SCHEMA)
-            self._write(df, ts)
+        # metadata-scale fast path: ONE row does not need a Spark job —
+        # write the parquet file driver-side (pyarrow) into its hive
+        # directory and commit it through the table format (delta log
+        # commit / iceberg snapshot). At the reference's one-request-per-
+        # book ingest rate this is the difference between ~2.5 ms and a
+        # full cluster round-trip per POST /ingest/{id}; bulk paths
+        # (ingest_raw_df) stay fully distributed.
+        self._ingest_single_row_fast(bid, res.header, res.body, ts, day, hour)
         return {
             "book_id": bid,
             "status": "ingested",
@@ -663,7 +660,7 @@ class LakeAdapter:
         split_df = raw_counted.mapInPandas(_split, schema=BOOK_SCHEMA).observe(
             obs_out, F.count(F.lit(1)).alias("n")
         )
-        self._write(split_df, ts)
+        self._fmt_append(split_df, ts)
         before = obs_in.get["n"]
         written = obs_out.get["n"]
         return before - min(before, written)
@@ -794,54 +791,26 @@ class LakeAdapter:
             raise IngestFailed(f"fetch failed for {bid}: {exc}") from exc
         return self.ingest_text(bid, raw, ts or dt.datetime.now(dt.timezone.utc))
 
-    def _write(self, df: DataFrame, ts: dt.datetime) -> None:
-        """Append with a parquet bloom filter on ``book_id``: min/max
-        row-group stats can't prune point lookups when ids are scattered
-        across the insert order (every row group spans most of the id
-        domain), but a bloom filter answers "id definitely absent" per row
-        group regardless of layout — at 100 TB, a Spark point lookup on
-        ``book_id`` (the parquet fallback's :meth:`exists`, or any
-        filtered :meth:`read`) then touches footer bytes instead of data
-        pages for the no-hit case (the reference instead paid a full
-        O(objects) key scan, ``S3DatalakeStorage.java:64-86``).
-
-        On the delta backend the append is a logged commit whose caller
-        timestamp is the INGEST time — the stamp :meth:`read_as_of`
-        resolves versions against."""
-        if self.backend != "parquet":
-            self._fmt_append(df, ts)
-            return
-        writer = df.write.mode("append")
-        for k, v in _BLOOM_OPTIONS.items():
-            writer = writer.option(k, v)
-        writer.partitionBy(*_PARTITION_COLS).parquet(self.lake_root)
-
     # -- read path (R5 + R6 + R7) --------------------------------------------
 
     def read(self) -> DataFrame:
         """The whole lake as a DataFrame (partition columns read as
-        strings). Delta backend: log replay — only COMMITTED files are
+        strings), by log/snapshot replay — only COMMITTED files are
         visible (a crashed writer's stray parquet cannot surface); an
         uncreated lake reads as the empty book table."""
-        if self.backend != "parquet":
-            if self._empty():
-                return self.spark.createDataFrame([], BOOK_SCHEMA)
-            if self.backend == "delta":
-                from tscd_datalake_adapter_spark.sources.delta_lite import (
-                    read_delta,
-                )
-
-                return read_delta(self.spark, self.lake_root)
-            from tscd_datalake_adapter_spark.sources.iceberg_lite import (
-                read_iceberg,
+        if self._empty():
+            return self.spark.createDataFrame([], BOOK_SCHEMA)
+        if self.backend == "delta":
+            from tscd_datalake_adapter_spark.sources.delta_lite import (
+                read_delta,
             )
 
-            return read_iceberg(self.spark, self.lake_root)
-        return (
-            self.spark.read.option("basePath", self.lake_root)
-            .schema(BOOK_SCHEMA)
-            .parquet(self.lake_root)
+            return read_delta(self.spark, self.lake_root)
+        from tscd_datalake_adapter_spark.sources.iceberg_lite import (
+            read_iceberg,
         )
+
+        return read_iceberg(self.spark, self.lake_root)
 
     @staticmethod
     def _newest_version_per_book(df: DataFrame) -> DataFrame:
@@ -864,13 +833,11 @@ class LakeAdapter:
 
     def read_latest(self) -> DataFrame:
         """The newest-version-per-book view. Plain APPENDS of the same id
-        legitimately coexist as multiple versions on BOTH backends (the
+        legitimately coexist as multiple versions on both backends (the
         reference's duplicate-ingest behavior), so content queries that
-        want one row per book read this. On the delta backend MERGE
-        removes superseded rows transactionally, so only append-created
-        duplicates remain; on the parquet fallback a crashed merge can
-        additionally leave superseded rows, which this view also resolves.
-        At 100 TB this is one window shuffle keyed on ``book_id``."""
+        want one row per book read this; MERGE removes superseded rows
+        transactionally, so only append-created duplicates remain. At
+        100 TB this is one window shuffle keyed on ``book_id``."""
         return self._newest_version_per_book(self.read())
 
     def read_as_of(self, ts: dt.datetime) -> DataFrame:
@@ -878,56 +845,43 @@ class LakeAdapter:
         the newest version with ``ingest_ts <= ts``; books first ingested
         after ``ts`` are absent.
 
-        Delta backend: resolved through the TRANSACTION LOG (r8 verdict
-        item 1) — the snapshot version is the latest commit whose caller
-        timestamp (the ingest time every adapter write stamps into its
-        commit) is <= the cutoff, so commits after the cutoff contribute
-        NO FILES to the scan at all; the ``ingest_ts`` cutoff filter and
-        the newest-version window then resolve rows within the snapshot
-        (exact under backdated out-of-order ingests too, where version
-        resolution alone would over-include the backdated commit's
-        prefix). Parquet backend: the pre-round-9 convention — partition
-        filter prunes the scan, same filter+window on top."""
+        Resolved through the TRANSACTION LOG (r8 verdict item 1): the
+        snapshot is the latest commit (delta version / iceberg snapshot)
+        whose caller timestamp — the ingest time every adapter write
+        stamps into its commit — is <= the cutoff, so commits after the
+        cutoff contribute NO FILES to the scan at all; the ``ingest_ts``
+        cutoff filter and the newest-version window then resolve rows
+        within the snapshot (exact under backdated out-of-order ingests
+        too, where version resolution alone would over-include the
+        backdated commit's prefix)."""
         ts = naive_utc(ts)
-        day, _ = partition_values(ts)
-        if self.backend != "parquet":
-            if self._empty():
-                return self.spark.createDataFrame([], BOOK_SCHEMA)
-            if self.backend == "delta":
-                from tscd_datalake_adapter_spark.sources.delta_lite import (
-                    read_delta,
-                    version_as_of,
-                )
-
-                v = version_as_of(
-                    self.lake_root, _ts_ms(ts), field="timestamp"
-                )
-                if v is None:
-                    return self.spark.createDataFrame([], BOOK_SCHEMA)
-                snapshot = read_delta(
-                    self.spark, self.lake_root, version=v
-                )
-            else:
-                from tscd_datalake_adapter_spark.sources.iceberg_lite import (
-                    read_iceberg,
-                )
-
-                try:
-                    snapshot = read_iceberg(
-                        self.spark,
-                        self.lake_root,
-                        as_of_timestamp_ms=_ts_ms(ts),
-                    )
-                except ValueError:  # cutoff predates the first commit
-                    return self.spark.createDataFrame([], BOOK_SCHEMA)
-            return self._newest_version_per_book(
-                snapshot.where(F.col("ingest_ts") <= F.lit(ts))
+        if self._empty():
+            return self.spark.createDataFrame([], BOOK_SCHEMA)
+        if self.backend == "delta":
+            from tscd_datalake_adapter_spark.sources.delta_lite import (
+                read_delta,
+                version_as_of,
             )
+
+            v = version_as_of(self.lake_root, _ts_ms(ts), field="timestamp")
+            if v is None:
+                return self.spark.createDataFrame([], BOOK_SCHEMA)
+            snapshot = read_delta(self.spark, self.lake_root, version=v)
+        else:
+            from tscd_datalake_adapter_spark.sources.iceberg_lite import (
+                read_iceberg,
+            )
+
+            try:
+                snapshot = read_iceberg(
+                    self.spark,
+                    self.lake_root,
+                    as_of_timestamp_ms=_ts_ms(ts),
+                )
+            except ValueError:  # cutoff predates the first commit
+                return self.spark.createDataFrame([], BOOK_SCHEMA)
         return self._newest_version_per_book(
-            self.read()
-            # partition-level prune first (scan-time), exact cutoff second
-            .where(F.col("ingest_date") <= F.lit(day))
-            .where(F.col("ingest_ts") <= F.lit(ts))
+            snapshot.where(F.col("ingest_ts") <= F.lit(ts))
         )
 
     def _empty(self) -> bool:
@@ -935,55 +889,33 @@ class LakeAdapter:
             return not os.path.isdir(
                 os.path.join(self.lake_root, "_delta_log")
             )
-        if self.backend == "iceberg":
-            from tscd_datalake_adapter_spark.sources.iceberg_lite import (
-                _current_version,
-            )
+        from tscd_datalake_adapter_spark.sources.iceberg_lite import (
+            _current_version,
+        )
 
-            return _current_version(self.lake_root) is None
-        return not os.path.isdir(self.lake_root)
+        return _current_version(self.lake_root) is None
 
     def exists(self, book_id: object) -> bool:
         """Reference R5 (``S3DatalakeStorage.java:64-86``) done right: the
         reference pays an O(total objects) sequential key scan.
 
-        Delta and iceberg: no Spark job. Files whose stats prove
-        ``book_id = ?`` cannot match are dropped; a surviving file whose
-        stats pin it to exactly this id (and has no deleted positions)
-        answers without being opened; any other survivor has its
-        ``book_id`` column read. Cost: one metadata read plus that column
-        of the files whose id range covers the id. Parquet fallback: the
-        predicate pushes into a limit-1 Spark scan (row-group pruning)."""
+        No Spark job. Files whose stats prove ``book_id = ?`` cannot
+        match are dropped; a surviving file whose stats pin it to exactly
+        this id (and has no deleted positions) answers without being
+        opened; any other survivor has its ``book_id`` column read. Cost:
+        one metadata read plus that column of the files whose id range
+        covers the id."""
         bid = validate_book_id(book_id)
-        if self.backend == "parquet":
-            if self._empty():
-                return False
-            return (
-                self.read().where(F.col("book_id") == bid).limit(1).count()
-                > 0
-            )
         return next(self._files_holding({bid}), None) is not None
 
     def list_books(self) -> list[int]:
         """Reference R6 (``S3DatalakeStorage.java:89-119``): the sorted
         distinct ids.
 
-        Delta and iceberg: no Spark job. A file whose stats pin it to one
-        id contributes that id unopened; every other non-empty file has
-        its ``book_id`` column read. The work on the Spark driver grows
-        with the result, which is returned there anyway. Parquet fallback:
-        a 2-phase distributed distinct over the ``book_id`` column."""
-        if self.backend == "parquet":
-            if self._empty():
-                return []
-            rows = (
-                self.read()
-                .select("book_id")
-                .distinct()
-                .orderBy("book_id")
-                .collect()
-            )
-            return [r.book_id for r in rows]
+        No Spark job. A file whose stats pin it to one id contributes
+        that id unopened; every other non-empty file has its ``book_id``
+        column read. The work on the Spark driver grows with the result,
+        which is returned there anyway."""
         ids: set[int] = set()
         for f in self._live_files():
             one = _single_book_id(f)
@@ -1012,8 +944,8 @@ class LakeAdapter:
 
         ``updates`` has schema ``(book_id long, header string, body string)``.
 
-        Delta and iceberg: a file-scoped copy-on-write planned from the
-        table format's metadata, the connector's find-touched-files-then-
+        A file-scoped copy-on-write planned from the table format's
+        metadata, the connector's find-touched-files-then-
         rewrite shape, in three Spark jobs. ``updates`` is persisted for
         the call unless the caller already cached it. Job 1 collects its
         ``book_id`` set to the driver — the same set the rewrite's
@@ -1034,16 +966,7 @@ class LakeAdapter:
         pass ``purge=False`` to retain them for time travel to pre-merge
         versions. Iceberg refuses the commit while live position-delete
         files are pending (``materialize_deletes`` first).
-
-        Parquet backend: the pre-round-9 dynamic-partition-overwrite of
-        the affected partitions (found by a join, fed back as a literal
-        partition predicate) + observed-survivor-set directory delete
-        (kept as the fallback; its crash window degrades to superseded
-        rows that :meth:`read_latest` still resolves correctly).
         """
-        if self.backend == "parquet":
-            self._merge_parquet(updates, ts)
-            return
         from pyspark import StorageLevel
 
         from tscd_datalake_adapter_spark.functions import persist_corpus
@@ -1072,83 +995,6 @@ class LakeAdapter:
             if not cached:
                 upd.unpersist()
 
-    def _merge_parquet(self, updates: DataFrame, ts: dt.datetime) -> None:
-        """:meth:`merge_books` on the log-free layout."""
-        day, hour = partition_values(ts)
-        lake = self.read()
-        ids = updates.select("book_id").distinct()
-        affected = (
-            lake.join(F.broadcast(ids), "book_id")
-            .select("ingest_date", "ingest_hour")
-            .distinct()
-        )
-        # the affected-partition list is metadata-scale (bounded by the
-        # lake's partition count, never by row count) — collect it once and
-        # feed the literal back so the rewrite job doesn't re-derive it
-        part_rows = {
-            (r["ingest_date"], r["ingest_hour"]) for r in affected.collect()
-        }
-        part_rows.add((day, hour))
-        # r12 (guide §6): the affected-partition restriction is a LITERAL
-        # disjunction of (date, hour) conjuncts, not a broadcast join —
-        # literals PUSH DOWN into the scan (hive partition pruning), so
-        # the rewrite job physically reads only the affected partitions
-        # (the docstring's "untouched partitions are never read" promise,
-        # which the old join form only delivered post-scan), and the
-        # per-commit broadcast-build job for the 2-column partition list
-        # is gone. The predicate's size is metadata-scale (bounded by the
-        # lake's affected-partition count, same bound as the collect
-        # above).
-        part_pred = F.lit(False)
-        for pd_, ph_ in sorted(part_rows):
-            part_pred = part_pred | (
-                (F.col("ingest_date") == pd_) & (F.col("ingest_hour") == ph_)
-            )
-        keep = lake.where(part_pred).join(
-            F.broadcast(ids), "book_id", "left_anti"
-        )
-        out = _with_new_rows(keep, updates, ts)
-
-        from pyspark.sql import Observation
-
-        obs = Observation("merge_surviving_parts")
-        observed = out.observe(
-            obs,
-            F.collect_set(
-                F.struct("ingest_date", "ingest_hour")
-            ).alias("parts"),
-        )
-        prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                observed.write.mode("overwrite")
-                .partitionBy("ingest_date", "ingest_hour")
-                .parquet(self.lake_root)
-            )
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        survivors = {
-            (p["ingest_date"], p["ingest_hour"]) for p in obs.get["parts"]
-        }
-        for pd, ph in sorted(part_rows - survivors):
-            self._drop_partition_dir(pd, ph)
-
-    def _drop_partition_dir(self, ingest_date: str, ingest_hour: str) -> None:
-        """Partition-level physical delete (``expire``'s primitive, one
-        partition): remove ``ingest_date=D/ingest_hour=H`` and, if that
-        leaves the day directory empty, the day directory too."""
-        import shutil
-
-        day_dir = os.path.join(self.lake_root, f"ingest_date={ingest_date}")
-        hour_dir = os.path.join(day_dir, f"ingest_hour={ingest_hour}")
-        if os.path.isdir(hour_dir):
-            shutil.rmtree(hour_dir)
-        if os.path.isdir(day_dir) and not os.listdir(day_dir):
-            os.rmdir(day_dir)
-
     # -- maintenance ---------------------------------------------------------
 
     def compact(self, ingest_date: str, ingest_hour: str, target_files: int = 1) -> int:
@@ -1156,18 +1002,18 @@ class LakeAdapter:
         every append-only ingest lake needs at scale: each single-book ingest
         commits its own file; queries want few large files).
 
-        Rewrites the partition into ``target_files`` files via dynamic
-        partition overwrite — other partitions are untouched, and the swap is
-        committer-atomic. Returns the row count of the compacted partition,
-        observed DURING the rewrite (Observation API, the same one-pass
-        pattern as ``ingest_raw_df``) — one read of the partition, not a
-        separate ``count()`` pass, and no race window between counting and
-        rewriting under concurrent ingests. An empty/missing partition
-        yields an empty write, which dynamic overwrite treats as a no-op
-        (no partitions in the data → nothing replaced).
+        OPTIMIZE as one replace-partitions commit: the partition's live
+        files are replaced by ``target_files`` coalesced files and purged,
+        atomically; other partitions are untouched. Returns the row count
+        of the compacted partition, observed DURING the rewrite
+        (Observation API, the same one-pass pattern as ``ingest_raw_df``)
+        — one read of the partition, not a separate ``count()`` pass. A
+        partition with no live files returns 0 without a commit.
         """
         from pyspark.sql import Observation
 
+        if (ingest_date, ingest_hour) not in self._fmt_partition_tuples():
+            return 0
         obs = Observation("compact_rows")
         part_df = (
             self.read()
@@ -1175,43 +1021,15 @@ class LakeAdapter:
             .where(F.col("ingest_hour") == ingest_hour)
             .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        if self.backend != "parquet":
-            # OPTIMIZE as a replace-partition commit: old files replaced
-            # + purged, the coalesced file added, atomically. An absent
-            # partition (no live files) is a no-op WITHOUT a commit.
-            if self._empty():
-                return 0
-            if (
-                ingest_date,
-                ingest_hour,
-            ) not in self._fmt_partition_tuples():
-                return 0
-            self._fmt_overwrite(
-                part_df.coalesce(target_files),
-                # stamped at the newest ingest time, not the wall clock
-                # (ADVICE r9): see _maintenance_ts_ms
-                self._maintenance_ts_ms(),
-                "OPTIMIZE",
-                purge=True,
-                parts=[
-                    {
-                        "ingest_date": ingest_date,
-                        "ingest_hour": ingest_hour,
-                    }
-                ],
-            )
-            return int(obs.get["n"])
-        prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                part_df.coalesce(target_files)
-                .write.mode("overwrite")
-                .partitionBy("ingest_date", "ingest_hour")
-                .parquet(self.lake_root)
-            )
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        self._fmt_overwrite(
+            part_df.coalesce(target_files),
+            # stamped at the newest ingest time, not the wall clock
+            # (ADVICE r9): see _maintenance_ts_ms
+            self._maintenance_ts_ms(),
+            "OPTIMIZE",
+            purge=True,
+            parts=[{"ingest_date": ingest_date, "ingest_hour": ingest_hour}],
+        )
         return int(obs.get["n"])
 
     def expire(self, before_date: str) -> int:
@@ -1219,54 +1037,32 @@ class LakeAdapter:
         before ``before_date`` (``yyyyMMdd``). Returns the number of DAY
         partitions removed.
 
-        Delta backend: one remove-only commit (an empty write replacing
-        exactly the expired partitions) followed by a physical purge —
-        readers of the latest version never see a partial delete. Parquet
-        backend: direct partition-directory deletes (the only safe
-        physical delete on a log-free lake)."""
-        import shutil
-
-        if self._empty():
+        One remove-only commit (an empty write replacing exactly the
+        expired partitions) followed by a physical purge — readers of the
+        latest version never see a partial delete."""
+        expired = {
+            (d, h) for d, h in self._fmt_partition_tuples() if d < before_date
+        }
+        if not expired:
             return 0
-        if self.backend != "parquet":
-            expired = {
-                (d, h)
-                for d, h in self._fmt_partition_tuples()
-                if d < before_date
-            }
-            if not expired:
-                return 0
-            self._fmt_overwrite(
-                self.spark.createDataFrame([], BOOK_SCHEMA),
-                # stamped at the newest ingest time, not the wall clock
-                # (ADVICE r9): see _maintenance_ts_ms
-                self._maintenance_ts_ms(),
-                "EXPIRE",
-                purge=True,
-                parts=[
-                    {"ingest_date": d, "ingest_hour": h}
-                    for d, h in sorted(expired)
-                ],
-            )
-            return len({d for d, _ in expired})
-        removed = 0
-        for entry in sorted(os.listdir(self.lake_root)):
-            if not entry.startswith("ingest_date="):
-                continue
-            if entry.split("=", 1)[1] < before_date:
-                shutil.rmtree(os.path.join(self.lake_root, entry))
-                removed += 1
-        return removed
+        self._fmt_overwrite(
+            self.spark.createDataFrame([], BOOK_SCHEMA),
+            # stamped at the newest ingest time, not the wall clock
+            # (ADVICE r9): see _maintenance_ts_ms
+            self._maintenance_ts_ms(),
+            "EXPIRE",
+            purge=True,
+            parts=[
+                {"ingest_date": d, "ingest_hour": h} for d, h in sorted(expired)
+            ],
+        )
+        return len({d for d, _ in expired})
 
     def log_position(self) -> int | None:
         """Opaque resume cursor for :meth:`books_ingested_since` — the
         newest commit the log currently holds (delta: latest version;
         iceberg: current snapshot id). None on an empty lake (= "from
         the beginning")."""
-        if self.backend == "parquet":
-            raise NotImplementedError(
-                "log_position() requires a table-format backend"
-            )
         if self._empty():
             return None
         if self.backend == "delta":
@@ -1295,11 +1091,6 @@ class LakeAdapter:
         (MERGE/OPTIMIZE/EXPIRE) rewrite surviving rows; they are NOT new
         books and are skipped by the operation filter. Uniform
         BOOK_SCHEMA columns across backends."""
-        if self.backend == "parquet":
-            raise NotImplementedError(
-                "books_ingested_since() requires a table-format backend "
-                "(the parquet layout has no commit log to resume from)"
-            )
         cols = [f.name for f in BOOK_SCHEMA.fields]
         if self._empty():
             return self.spark.createDataFrame([], BOOK_SCHEMA)
@@ -1330,13 +1121,8 @@ class LakeAdapter:
         ).select(*cols)
 
     def history(self) -> list[dict]:
-        """DESCRIBE HISTORY of the lake's transaction log (delta backend
-        only): one record per commit with operation and counts."""
-        if self.backend == "parquet":
-            raise NotImplementedError(
-                "history() requires a table-format backend (the parquet "
-                "layout has no transaction log)"
-            )
+        """DESCRIBE HISTORY of the lake's log: one record per commit
+        (delta) or snapshot (iceberg) with its operation."""
         if self._empty():
             return []
         if self.backend == "delta":
@@ -1353,13 +1139,9 @@ class LakeAdapter:
 
     def vacuum(self, retain_versions: int = 1) -> list[str]:
         """Physically delete data files referenced only by versions older
-        than the newest ``retain_versions`` (delta backend only) — the
-        retention cleanup that pairs with log time travel."""
-        if self.backend == "parquet":
-            raise NotImplementedError(
-                "vacuum() requires a table-format backend; the parquet "
-                "layout deletes partition directories directly (expire)"
-            )
+        than the newest ``retain_versions`` (delta: VACUUM; iceberg:
+        snapshot expiry) — the retention cleanup that pairs with log time
+        travel."""
         if self.backend == "delta":
             from tscd_datalake_adapter_spark.sources.delta_lite import (
                 vacuum_delta,
@@ -1392,12 +1174,6 @@ class LakeAdapter:
         Returns ``{"book_id", "deleted_rows", "rewritten_files",
         "erased_files", "backend"}``."""
         bid = validate_book_id(book_id)
-        if self.backend == "parquet":
-            raise NotImplementedError(
-                "erase_book() requires a table-format backend; the "
-                "parquet layout can only drop whole partition "
-                "directories (expire)"
-            )
         if self.backend == "delta":
             from tscd_datalake_adapter_spark.sources.delta_lite import (
                 delete_delta,

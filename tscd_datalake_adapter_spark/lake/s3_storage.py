@@ -20,12 +20,13 @@ Spark-first scale additions the reference lacks (its listing cost note is
 in BASELINE.md): ``list_books_distributed`` fans the day prefixes out to
 EXECUTOR tasks (one boto3 client per task, each paginating only its own
 ``datalake/{day}/`` prefix — listing parallelism = number of day
-partitions, the same partition-pruning idea the parquet lake uses), and
-``fetch_books_df`` GETs object bodies inside ``mapInPandas`` so bulk
+partitions, the same partition-pruning idea the lake's hive layout uses),
+and ``fetch_books_df`` GETs object bodies inside ``mapInPandas`` so bulk
 retrieval scales with executors instead of the driver NIC. For query-able
-lake state at 100 TB, the parquet ``LakeAdapter`` remains the real path
-(its ``exists`` is a pushed-filter probe, not a bucket scan) — this module
-proves the object-store wire protocol and layout parity.
+lake state at 100 TB, ``LakeAdapter`` (delta or iceberg) remains the real
+path (its ``exists`` answers from the table format's per-file metadata,
+not a bucket scan) — this module proves the object-store wire protocol and
+layout parity.
 
 The test suite runs all of it against a real S3 wire-protocol server
 (``moto.server.ThreadedMotoServer``) — requests go over HTTP, so paging,
@@ -51,7 +52,8 @@ def _require_boto3():
     if boto3 is None:  # pragma: no cover
         raise NotImplementedError(
             "S3DatalakeStorage requires boto3 (not installed in this "
-            "environment); the parquet LakeAdapter is the supported backend"
+            "environment); LakeAdapter (delta or iceberg) is the supported "
+            "backend"
         )
 
 

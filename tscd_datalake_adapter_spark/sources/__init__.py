@@ -1,10 +1,10 @@
 """Sources & sinks (SURVEY.md §2.2 scans block).
 
 Thin, schema-aware readers over the fixture tables plus generic
-csv/json/text readers and partitioned writers. Delta/Iceberg formats are
-feature-gated: the connector jars are not in this environment, so
-``write_table(fmt="delta")`` raises a clear error unless the runtime has the
-connector on the classpath.
+csv/json/text readers and partitioned writers. The Delta/Iceberg connector
+jars are not in this environment, so ``write_table(fmt="delta")`` fails in
+Spark with ``DATA_SOURCE_NOT_FOUND``; both formats are implemented in-repo
+instead (``delta_lite``, ``iceberg_lite``).
 """
 
 from tscd_datalake_adapter_spark.sources.tables import (

@@ -1,9 +1,9 @@
 """delta_lite — a minimal pure-Python implementation of the open Delta
 Lake transaction-log protocol (delta.io PROTOCOL.md), over Spark parquet.
 
-The environment has no ``delta-spark`` connector jar (the §2.2
-"Delta/Iceberg write+read" row has been honestly feature-gated since
-round 1: ``sources.tables.write_table``). The LOG format itself, however,
+The environment has no ``delta-spark`` connector jar (without it,
+``sources.tables.write_table(fmt="delta")`` fails in Spark with
+``DATA_SOURCE_NOT_FOUND``). The LOG format itself, however,
 is an open JSON specification — so the write+read semantics the row asks
 for can be implemented from the public spec without the connector:
 

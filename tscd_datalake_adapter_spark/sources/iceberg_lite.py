@@ -2,8 +2,9 @@
 Iceberg TABLE FORMAT (format-version 2) over Spark parquet, from the
 public spec (iceberg.apache.org/spec/), completing the §2.2
 "Delta/Iceberg write+read" row's second half without the connector jar
-(``sources.delta_lite`` is the Delta half; the jar-backed DataSource path
-remains feature-gated in ``sources.tables.write_table``).
+(``sources.delta_lite`` is the Delta half; without the jar,
+``sources.tables.write_table(fmt="iceberg")`` fails in Spark with
+``DATA_SOURCE_NOT_FOUND``).
 
 An Iceberg filesystem table ("HadoopTables" layout) is:
 

@@ -161,9 +161,6 @@ def read_lake_evolved(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(path)
 
 
-_LAKEHOUSE_FORMATS = {"delta", "iceberg"}
-
-
 def write_table(
     df: DataFrame,
     path: str,
@@ -171,27 +168,18 @@ def write_table(
     mode: str = "append",
     partition_by: tuple[str, ...] = (),
 ) -> None:
-    """Generic sink. ``fmt`` in {parquet, delta, iceberg}; lakehouse formats
-    require their connector on the classpath (feature-gated: SURVEY.md §2.2).
-    WITHOUT the connectors, both open formats are implemented in-repo from
-    their public specs: ``sources.delta_lite`` (JSON transaction log:
+    """Generic sink through Spark's DataSource API: ``df.write.format(fmt)``.
+    ``fmt="delta"``/``"iceberg"`` need their connector on the classpath;
+    without it Spark fails the call at entry with ``DATA_SOURCE_NOT_FOUND``
+    and writes nothing. The connector jars are not in this environment,
+    so both open formats are implemented in-repo from their public specs:
+    ``sources.delta_lite`` (JSON transaction log:
     write/read/time-travel/MERGE/VACUUM/checkpoints) and
     ``sources.iceberg_lite`` (metadata.json + Avro manifests via
     ``sources.avro_lite``: snapshots, manifest-reusing appends, partition
     pruning, expiry) — see ``delta_lite_roundtrip_agg`` /
-    ``iceberg_lite_roundtrip_agg`` and siblings in the registry; this gate
-    covers only the jar-backed DataSource path.
+    ``iceberg_lite_roundtrip_agg`` and siblings in the registry.
     """
-    if fmt in _LAKEHOUSE_FORMATS:
-        jars = df.sparkSession.conf.get("spark.jars.packages", "") or ""
-        if fmt not in jars:
-            raise NotImplementedError(
-                f"{fmt} connector not on classpath; add the {fmt} package to "
-                "spark.jars.packages (feature-gated — parquet is the default "
-                "format in this environment; sources.delta_lite and "
-                "sources.iceberg_lite provide pure-Python open-format "
-                "write/read paths without the jars)"
-            )
     writer = df.write.format(fmt).mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)

@@ -1686,8 +1686,7 @@ def run_type_stats_tws_stream(
             "transformWithStateInPandas needs the google.protobuf package "
             "for its state-server protocol; it is absent in this "
             "environment (and installs are not permitted). The job body "
-            "below is the ready path — re-check each round, like the "
-            "Delta/Iceberg gate in sources.write_table."
+            "below is the ready path once the package is present."
         ) from exc
 
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
