@@ -182,3 +182,17 @@ def test_tests_do_not_walk_the_plan_tree_themselves():
         f"plan-tree walk copied into tests: {found}; use "
         "plans.executed_nodes / plans.node_counts"
     )
+
+
+@pytest.mark.smoke
+def test_lake_has_one_data_file_writer():
+    """The lake writes parquet data files on the driver in one place,
+    ``LakeAdapter._write_book_files`` (its ``ParquetWriter`` and
+    ``write_table`` calls); single ingests and small rewrites both go
+    through it."""
+    pattern = r"\bwrite_table\(|\bParquetWriter\(|\bwrite_to_dataset\(|\bwrite_dataset\("
+    found = _sites(os.path.join(PKG, "lake"), pattern)
+    assert found == {"adapter.py": 2}, (
+        f"driver-side parquet writers under lake/ changed: {found}; write "
+        "data files through LakeAdapter._write_book_files"
+    )

@@ -1048,8 +1048,9 @@ def test_merge_books_matches_python_model(spark, tmp_path, backend, case):
 @pytest.mark.parametrize("backend", ["delta", "iceberg"])
 def test_merge_books_job_count_and_cache_state(spark, tmp_path, backend):
     """Structure pins: ``merge_books`` on a Python-list update frame
-    starts at most 3 Spark jobs (collect the ids, build the broadcast,
-    write); an uncached frame leaves no persisted RDD behind, also when
+    whose updates fit in one input split runs on the driver and starts
+    at most 2 Spark jobs (collect the ids and sizes, collect the update
+    rows); an uncached frame leaves no persisted RDD behind, also when
     the merge raises, and a frame the caller cached stays cached."""
     from pyspark import StorageLevel
 
@@ -1059,7 +1060,7 @@ def test_merge_books_job_count_and_cache_state(spark, tmp_path, backend):
         [(2, "h", "b"), (21, "h", "b"), (44, "h", "b")], UPDATE_SCHEMA
     )
     jobs = _job_ids(spark, lambda: lake.merge_books(updates, TS3))
-    assert 0 < len(jobs) <= 3, jobs
+    assert 0 < len(jobs) <= 2, jobs
     assert updates.storageLevel == StorageLevel.NONE
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
 
@@ -1102,3 +1103,245 @@ def test_merge_books_refuses_live_position_deletes(spark, tmp_path):
     with pytest.raises(ValueError, match="live position-delete files"):
         lake.merge_books(updates, TS3)
     assert sorted(lake.read().collect()) == before
+
+
+def _rows(lake) -> list[tuple]:
+    cols = [f.name for f in BOOK_SCHEMA.fields]
+    return sorted(tuple(r[c] for c in cols) for r in lake.read().collect())
+
+
+def _parquet_on_disk(root) -> set[str]:
+    import glob
+
+    return set(glob.glob(f"{root}/**/*.parquet", recursive=True))
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+@pytest.mark.parametrize("backend", ["delta", "iceberg"])
+def test_rewrite_paths_agree(spark, tmp_path, backend, path):
+    """``merge_books`` leaves the same lake whether it rewrites on the
+    driver or in Spark (selected here by shrinking the session's input
+    split, ``spark.sql.files.maxPartitionBytes``, to 1k, below the
+    updates' 1.5 KB), and the driver-side ``compact`` reads what either
+    path wrote: the rows
+    ``read()`` returns, ``list_books()``, the operations ``history()``
+    records and ``compact``'s counts all equal one Python model. The
+    first compaction's partition mixes a Spark-written file
+    (``ingest_ts`` stored as INT96) with a pyarrow-written one; on the
+    Spark path the second one compacts the Spark-written merge output.
+    ``compact`` starts no Spark job on either path; ``merge_books``
+    starts at most 2 on the driver path and 3 on the Spark path.
+    On iceberg a row deleted merge-on-read stays gone: ``compact``
+    refuses while the delete is pending, before writing any file, and
+    after ``materialize_deletes`` compacts without it."""
+    from tests.conftest import BOOK_V1
+    from tscd_datalake_adapter_spark.lake.gutenberg import split_book
+
+    lake = _merge_fixture_lake(spark, str(tmp_path / f"r {path}"), backend)
+    model = _rows(lake)
+    ops = ["INGEST"] * 8
+    key = "spark.sql.files.maxPartitionBytes"
+    split = spark.conf.get(key)
+    if path == "spark":
+        spark.conf.set(key, "1k")
+    try:
+        counts = []
+
+        def compact(day, hour, k=1):
+            jobs = _job_ids(
+                spark, lambda: counts.append(lake.compact(day, hour, k))
+            )
+            assert not jobs, jobs
+            ops.append("OPTIMIZE")
+
+        # a Spark-written bulk file (1, 2, 5, 8) and a pyarrow-written
+        # single ingest (11)
+        compact("20260813", "14")
+        assert _rows(lake) == model
+
+        # 1.5 KB of updates: above the shrunk split, within the default
+        upd = [(b, f"h{b}", f"merged {b} " + "x" * 300) for b in (2, 21, 44, 55, 56)]
+        jobs = _job_ids(
+            spark,
+            lambda: lake.merge_books(
+                spark.createDataFrame(upd, UPDATE_SCHEMA), TS3
+            ),
+        )
+        # the Spark path's broadcast and write jobs show it was taken
+        if path == "driver":
+            assert 0 < len(jobs) <= 2, jobs
+        else:
+            assert len(jobs) == 3, jobs
+        ops.append("MERGE")
+        day, hour = TS3.strftime("%Y%m%d"), TS3.strftime("%H")
+        model = sorted(
+            [r for r in model if r[0] not in {b for b, _, _ in upd}]
+            + [(b, h, body, TS3, day, hour) for b, h, body in upd]
+        )
+        lake.ingest_text(77, BOOK_V1, TS3)
+        ops.append("INGEST")
+        book = split_book(BOOK_V1)
+        model = sorted(model + [(77, book.header, book.body, TS3, day, hour)])
+        compact(day, hour, 2)
+
+        assert _rows(lake) == model
+        assert lake.list_books() == sorted({r[0] for r in model})
+        assert counts == [5, 6]
+        history = [h["operation"] for h in lake.history()]
+        # iceberg's purge expires every snapshot but the newest
+        assert history == (ops if backend == "delta" else ops[-1:])
+
+        if backend == "iceberg":
+            from tscd_datalake_adapter_spark.sources.iceberg_lite import (
+                delete_iceberg,
+                materialize_deletes,
+            )
+
+            res = delete_iceberg(
+                spark, lake.lake_root, "book_id = 45", strategy="merge-on-read"
+            )
+            assert res["deleted_rows"] == 1
+            model = [r for r in model if r[0] != 45]
+            on_disk = _parquet_on_disk(lake.lake_root)
+            with pytest.raises(ValueError, match="live position-delete files"):
+                lake.compact("20260814", "09")
+            assert _parquet_on_disk(lake.lake_root) == on_disk
+            assert _rows(lake) == model
+            materialize_deletes(spark, lake.lake_root)
+            compact("20260814", "09")
+            assert counts[-1] == 3  # 40, 50 and the single ingest 33
+            assert _rows(lake) == model
+    finally:
+        spark.conf.set(key, split)
+
+
+@pytest.mark.parametrize("backend", ["delta", "iceberg"])
+def test_live_files_size_is_file_size(spark, tmp_path, backend):
+    """``live_files`` reports each live file's byte size from the
+    metadata (delta ``add.size``, iceberg ``file_size_in_bytes``): it
+    equals the size on disk, for Spark-written and pyarrow-written
+    files alike."""
+    import os
+
+    if backend == "delta":
+        from tscd_datalake_adapter_spark.sources.delta_lite import live_files
+    else:
+        from tscd_datalake_adapter_spark.sources.iceberg_lite import live_files
+
+    lake = _merge_fixture_lake(spark, str(tmp_path / "s"), backend)
+    lake.merge_books(
+        spark.createDataFrame([(2, "h", "b"), (44, "h", "b")], UPDATE_SCHEMA),
+        TS3,
+    )
+    lake.compact("20260813", "14")
+    files = live_files(lake.lake_root)
+    assert len(files) > 1
+    for f in files:
+        assert f["size"] == os.path.getsize(f["path"]), f["path"]
+
+
+def test_refused_table_reports_unsupported_table(spark, tmp_path, book_dir):
+    """A table the reader refuses (a delta log that requires reader
+    version 3) is reported as ``unsupported_table``, with the reader's
+    message, by ``status``, ``list`` and ``delete`` alike."""
+    import json
+    import os
+
+    lake = LakeAdapter(spark, str(tmp_path / "v3"))
+    lake.ingest_files(sorted(str(p) for p in book_dir.iterdir()), TS)
+    log0 = os.path.join(lake.lake_root, "_delta_log", f"{0:020d}.json")
+    actions = [json.loads(ln) for ln in open(log0, encoding="utf-8") if ln.strip()]
+    for a in actions:
+        if "protocol" in a:
+            a["protocol"]["minReaderVersion"] = 3
+    with open(log0, "w", encoding="utf-8") as fh:
+        fh.write("".join(json.dumps(a) + "\n" for a in actions))
+    api = IngestApi(lake)
+    for res in (api.status(11), api.list(), api.delete(11)):
+        assert res["error"]["code"] == "unsupported_table", res
+        assert "minReaderVersion 3" in res["error"]["message"], res
+
+
+def test_row_groups_pack_small_tables_up_to_the_largest():
+    """The driver writer's row groups keep the input rows in order, drop
+    empty tables, let consecutive small tables share a row group, and
+    never outgrow the largest table read so far."""
+    import pyarrow as pa
+
+    from tscd_datalake_adapter_spark.lake.adapter import _row_groups
+
+    shapes = ((10, 1000), (1, 10), (1, 10), (0, 1), (5, 1000), (20, 1000), (1, 5))
+    tables = [
+        pa.table({"v": pa.array([str(i) * width] * rows, pa.string())})
+        for i, (rows, width) in enumerate(shapes)
+    ]
+    groups = list(_row_groups(tables))
+    assert [g.num_rows for g in groups] == [10, 7, 20, 1]
+    assert pa.concat_tables(groups).equals(pa.concat_tables(tables))
+    assert max(g.nbytes for g in groups) == max(t.nbytes for t in tables)
+
+
+@pytest.mark.parametrize("backend", ["delta", "iceberg"])
+def test_rewrite_reads_one_row_group_at_a_time(spark, tmp_path, backend):
+    """The driver-side rewrites read a live file as one BOOK_SCHEMA
+    arrow table per row group, never the whole file: ``ingest_ts``
+    stored as INT96 (as Spark writes it) comes back at microseconds and
+    delta's partition columns come back from the logged
+    partitionValues."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tscd_datalake_adapter_spark.lake.adapter import _arrow_book_schema
+
+    lake = LakeAdapter(spark, str(tmp_path / "rg"), backend=backend)
+    schema = _arrow_book_schema()
+    rows = pa.table(
+        {
+            "book_id": list(range(1, 6)),
+            "header": [f"h{i}" for i in range(1, 6)],
+            "body": [f"b{i}" for i in range(1, 6)],
+            "ingest_ts": [TS] * 5,
+            "ingest_date": ["20260813"] * 5,
+            "ingest_hour": ["14"] * 5,
+        },
+        schema=schema,
+    )
+    path = str(tmp_path / "in.parquet")
+    pq.write_table(
+        rows.select(lake._file_columns()),
+        path,
+        row_group_size=2,
+        use_deprecated_int96_timestamps=True,
+    )
+    assert pq.ParquetFile(path).schema.column(3).physical_type == "INT96"
+    partition = {"ingest_date": "20260813", "ingest_hour": "14"}
+    tables = list(lake._read_book_row_groups({"path": path, "partition": partition}))
+    assert [t.num_rows for t in tables] == [2, 2, 1]
+    assert all(t.schema == schema for t in tables)
+    assert pa.concat_tables(tables).equals(rows)
+
+
+@pytest.mark.parametrize("backend", ["delta", "iceberg"])
+def test_compact_splits_runs_by_logged_bytes(spark, tmp_path, backend):
+    """``compact(target_files=k)`` writes each consecutive run of about
+    a k-th of the partition's logged bytes into one file: a large bulk
+    file keeps a file of its own instead of sharing one with every
+    other small single-ingest file."""
+    from tests.conftest import BOOK_V2
+
+    lake = LakeAdapter(spark, str(tmp_path / "k"), backend=backend)
+    big = (
+        "Header\n*** START OF THE PROJECT GUTENBERG EBOOK X ***\n"
+        + "word " * 800
+        + "\n*** END OF THE PROJECT GUTENBERG EBOOK X ***\n"
+    )
+    raw = spark.createDataFrame(
+        [(b, big) for b in range(1, 7)], "book_id long, raw string"
+    ).coalesce(1)
+    assert lake.ingest_raw_df(raw, TS) == 0
+    for bid in (7, 8, 9):
+        lake.ingest_text(bid, BOOK_V2, TS)
+    day, hour = TS.strftime("%Y%m%d"), TS.strftime("%H")
+    assert lake.compact(day, hour, target_files=2) == 9
+    counts = sorted(f["record_count"] for f in lake._live_files())
+    assert counts == [3, 6]

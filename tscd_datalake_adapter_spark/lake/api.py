@@ -5,7 +5,9 @@ Python methods returning the same JSON-shaped dicts; there is deliberately no
 HTTP server (SURVEY.md §7 non-goals — the driver tests a library, not a port).
 Error mapping follows ``Main.java:100-110,147-169``: invalid ids →
 ``invalid_book_id``; parse/fetch failures → ``download_failed``; lake write
-failures → ``datalake_move_failed``.
+failures → ``datalake_move_failed``; a table the format's reader refuses
+(e.g. a delta log that requires a newer reader version) →
+``unsupported_table`` on status, list and delete.
 """
 
 from __future__ import annotations
@@ -47,6 +49,8 @@ class IngestApi:
             ok = self.adapter.exists(book_id)
         except InvalidBookId as exc:
             return _error("invalid_book_id", str(exc))
+        except NotImplementedError as exc:  # the reader refused the table
+            return _error("unsupported_table", str(exc))
         return {
             "book_id": int(str(book_id)),
             "status": "available" if ok else "not_found",
@@ -55,7 +59,10 @@ class IngestApi:
 
     def list(self) -> dict:
         """GET /ingest/list (``Main.java:138-145``)."""
-        books = self.adapter.list_books()
+        try:
+            books = self.adapter.list_books()
+        except NotImplementedError as exc:  # the reader refused the table
+            return _error("unsupported_table", str(exc))
         return {
             "count": len(books),
             "books": books,
@@ -73,8 +80,8 @@ class IngestApi:
             res = self.adapter.erase_book(book_id, physical=physical)
         except InvalidBookId as exc:
             return _error("invalid_book_id", str(exc))
-        except NotImplementedError as exc:
-            return _error("unsupported_backend", str(exc))
+        except NotImplementedError as exc:  # the reader refused the table
+            return _error("unsupported_table", str(exc))
         except FileNotFoundError:
             # idempotent DELETE: a lake with no table yet holds no books
             return {

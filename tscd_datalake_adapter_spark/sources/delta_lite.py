@@ -956,16 +956,20 @@ def _check_partition_paths(state: dict, rels: list[str]) -> None:
             )
 
 
-def live_files(path: str) -> list[dict]:
+def live_files(path: str, state: dict | None = None) -> list[dict]:
     """The data files of the latest version, from the log alone (no
-    Spark job, no data read): one ``{"path", "record_count", "stats",
-    "deleted", "partition"}`` record per file — its path, its
-    ``numRecords`` (None without stats), its parsed ``stats`` (None when
-    the add carries none), the row positions removed from it (always
-    empty: deletion vectors need reader version 3, which ``_replay``
-    refuses) and its logged partitionValues. Partition paths are
-    cross-checked as a Spark read checks them."""
-    state = _replay(path, None)
+    Spark job, no data read): one ``{"path", "size", "record_count",
+    "stats", "deleted", "partition"}`` record per file — its path, its
+    logged byte size, its ``numRecords`` (None without stats), its
+    parsed ``stats`` (None when the add carries none), the row positions
+    removed from it (always empty: deletion vectors need reader version
+    3, which ``_replay`` refuses) and its logged partitionValues.
+    Partition paths are cross-checked as a Spark read checks them.
+    ``state`` is a ``_replay(path)`` result to list instead of replaying
+    the log again (a caller that commits against that same state passes
+    it to :func:`commit_files` as ``_state``)."""
+    if state is None:
+        state = _replay(path, None)
     _check_partition_paths(state, list(state["files"]))
     out = []
     for rel, add in state["files"].items():
@@ -973,6 +977,7 @@ def live_files(path: str) -> list[dict]:
         out.append(
             {
                 "path": os.path.join(path, rel),
+                "size": add["size"],
                 "record_count": stats.get("numRecords") if stats else None,
                 "stats": stats,
                 "deleted": frozenset(),

@@ -2046,8 +2046,9 @@ def _snapshot_view(meta: dict, snap: dict) -> tuple[dict, list[dict]]:
 
 def live_files(path: str) -> list[dict]:
     """The data files of the current snapshot, from the metadata alone
-    (no Spark job, no data read): one ``{"path", "record_count",
-    "stats", "deleted", "partition"}`` record per file — its path, its
+    (no Spark job, no data read): one ``{"path", "size",
+    "record_count", "stats", "deleted", "partition"}`` record per file —
+    its path, its manifest byte size (``file_size_in_bytes``), its
     manifest record count, its bounds as :func:`_bounds_stats`, the row
     positions live position-delete files remove from it, and its
     manifest partition tuple. Partition paths are cross-checked as a
@@ -2073,6 +2074,7 @@ def live_files(path: str) -> list[dict]:
     return [
         {
             "path": f["file_path"],
+            "size": f["file_size_in_bytes"],
             "record_count": f["record_count"],
             "stats": _bounds_stats(f, schema),
             "deleted": frozenset(deleted.get(_fs_path(f["file_path"]), ())),
