@@ -1,10 +1,14 @@
-"""Snapshot `.explain("formatted")` output for named queries into
-plans/r12/<query>_<tag>.txt (optimization-round evidence artifacts).
+"""Snapshot the formatted physical plans (``plans.formatted_plan``) of
+named queries into plans/r12/<query>_<tag>.txt — the repo's one plan-dump
+tool (optimization-round evidence artifacts).
 
 Usage: python scripts/plan_snapshot.py <tag> query1 query2 ...
        python scripts/plan_snapshot.py <tag> --headline
        python scripts/plan_snapshot.py <tag> --top N   (slowest N from the
                                                         latest families bench)
+       python scripts/plan_snapshot.py <tag> --headline --top 10
+                                   (the headline queries plus the ten
+                                    slowest: the set PLANS.md records)
 
 Plans are captured at sf0.1 (the bench scale) so AQE thresholds and scan
 statistics match what the bench actually executes.
@@ -61,7 +65,7 @@ def main() -> int:
     names = args[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from tscd_datalake_adapter_spark import get_spark
+    from tscd_datalake_adapter_spark import get_spark, plans
     from tscd_datalake_adapter_spark.operators import load_all
 
     spark = get_spark("plan-snapshot", master="local[8]")
@@ -88,10 +92,7 @@ def main() -> int:
         if name in seen:
             continue
         seen.add(name)
-        df = registry[name].fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plans.formatted_plan(registry[name].fn(spark, sf_dir))
         path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

@@ -196,3 +196,32 @@ def test_lake_has_one_data_file_writer():
         f"driver-side parquet writers under lake/ changed: {found}; write "
         "data files through LakeAdapter._write_book_files"
     )
+
+
+@pytest.mark.smoke
+def test_plan_text_comes_from_one_place():
+    """``plans.formatted_plan`` is the one reader of ``explain()`` text in
+    the package and ``scripts/``; plan facts come from the plan tree
+    (``plans.executed_nodes`` and the helpers over it)."""
+    pattern = r"explainString|\.explain\("
+    found = _sites(PKG, pattern)
+    found.update(
+        (f"scripts/{k}", n)
+        for k, n in _sites(os.path.join(ROOT, "scripts"), pattern).items()
+    )
+    assert found == {"plans/__init__.py": 1}, (
+        f"explain-text readers changed: {found}; dump plans with "
+        "plans.formatted_plan and pin plan facts with plans.node_counts / "
+        "executed_scan_columns"
+    )
+
+
+@pytest.mark.smoke
+def test_delta_latest_version_has_one_helper():
+    """Only ``delta_lite`` reads the checkpoint pointer; everything else
+    asks ``delta_lite._log_head`` for the log's latest version."""
+    found = _sites(PKG, r"\b_last_checkpoint_version\b")
+    assert set(found) == {"sources/delta_lite.py"}, (
+        f"_last_checkpoint_version used outside delta_lite: {found}; call "
+        "delta_lite._log_head"
+    )

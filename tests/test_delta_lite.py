@@ -1128,6 +1128,27 @@ def test_checkpoint_cleanup_bounds_time_travel(spark, sf_dir, tmp_path):
     assert read_delta(spark, path).count() == o.count() + f.count()
 
 
+def test_log_head_ends_at_a_version_zero_checkpoint(spark, sf_dir, tmp_path):
+    """The log's latest version is max(last JSON commit, last checkpoint):
+    a log cleaned up down to a version-0 checkpoint ends at 0 (not -1), so
+    an incremental read of version 0 reports the cleaned-up commit; a
+    directory with no log is not a table."""
+    from tscd_datalake_adapter_spark.sources.delta_lite import (
+        _log_head,
+        checkpoint_delta,
+        read_delta_changes,
+    )
+
+    path = str(tmp_path / "t")
+    write_delta(_orders(spark, sf_dir), path)
+    assert checkpoint_delta(path, cleanup=True) == 0
+    assert _log_head(path) == ([], 0, 0)
+    with pytest.raises(ValueError, match="cleaned up"):
+        read_delta_changes(spark, path, 0)
+    with pytest.raises(FileNotFoundError):
+        _log_head(str(tmp_path / "no_table"))
+
+
 def test_checkpointed_partitioned_table_roundtrips(spark, sf_dir, tmp_path):
     from tscd_datalake_adapter_spark.sources.delta_lite import (
         checkpoint_delta,

@@ -3,11 +3,13 @@ spent on queries that can still produce new signal."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from tscd_datalake_adapter_spark.operators import load_all
 from tscd_datalake_adapter_spark.operators._rotation import (
-    _R1_GREEN,
     VERIFIED,
     _correctness_rows,
     _greens_from_correctness_files,
@@ -20,15 +22,27 @@ pytestmark = pytest.mark.smoke
 
 def test_greens_parsed_from_correctness_files():
     g = _greens_from_correctness_files()
-    # r1's recorded greens must all be discovered from CORRECTNESS_r01.json
-    assert set(_R1_GREEN) <= g
+    # r1's recorded greens (49 of the 50 checked; media_feature_extract
+    # errored) must all be discovered from CORRECTNESS_r01.json
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "CORRECTNESS_r01.json")) as f:
+        r01 = json.load(f)
+    r1_green = {
+        name
+        for name, row in r01.items()
+        if row.get("rows_match") is True
+        and row.get("schema_match") is True
+        and row.get("hash_match") is True
+    }
+    assert len(r1_green) == 49
+    assert r1_green <= g
     # invariant (round-independent): a name whose recorded rows are ALL real
     # errors (crashes — NOT the driver's rows-only `no_oracle` record kind)
     # has produced no usable signal — it must be in neither the verified set
     # nor the recorded set.  (A later round turning such a name green removes
     # it from errored_only, so this never goes stale.)
     by_name: dict[str, list[dict]] = {}
-    for name, row in _correctness_rows():
+    for _round, name, row in _correctness_rows():
         by_name.setdefault(name, []).append(row)
     errored_only = {
         name
@@ -49,19 +63,19 @@ def test_no_oracle_rows_retire_queries():
     the front window (the round-3 bug: requiring ``err is None`` kept the 5
     oracle-less queries in slots 1-5 of every window forever)."""
     synthetic = [
-        ("ann_fake", {"rows_match": None, "schema_match": None,
-                      "hash_match": None, "spark_rows": 45,
-                      "oracle_rows": None, "err": "no_oracle"}),
-        ("crashed_fake", {"rows_match": None, "schema_match": None,
-                          "hash_match": None, "spark_rows": None,
-                          "oracle_rows": None, "err": "AnalysisException"}),
-        ("green_fake", {"rows_match": True, "schema_match": True,
-                        "hash_match": True, "spark_rows": 3,
-                        "oracle_rows": 3, "err": None}),
+        (3, "ann_fake", {"rows_match": None, "schema_match": None,
+                         "hash_match": None, "spark_rows": 45,
+                         "oracle_rows": None, "err": "no_oracle"}),
+        (3, "crashed_fake", {"rows_match": None, "schema_match": None,
+                             "hash_match": None, "spark_rows": None,
+                             "oracle_rows": None, "err": "AnalysisException"}),
+        (3, "green_fake", {"rows_match": True, "schema_match": True,
+                           "hash_match": True, "spark_rows": 3,
+                           "oracle_rows": 3, "err": None}),
         # a no_oracle record whose query never produced rows is NOT a record
-        ("never_ran_fake", {"rows_match": None, "schema_match": None,
-                            "hash_match": None, "spark_rows": None,
-                            "oracle_rows": None, "err": "no_oracle"}),
+        (3, "never_ran_fake", {"rows_match": None, "schema_match": None,
+                               "hash_match": None, "spark_rows": None,
+                               "oracle_rows": None, "err": "no_oracle"}),
     ]
     recorded = _recorded_without_error(synthetic)
     assert "ann_fake" in recorded

@@ -1291,13 +1291,10 @@ class LakeAdapter:
             return None
         if self.backend == "delta":
             from tscd_datalake_adapter_spark.sources.delta_lite import (
-                _existing_versions,
-                _last_checkpoint_version,
+                _log_head,
             )
 
-            vs = _existing_versions(self.lake_root)
-            cp = _last_checkpoint_version(self.lake_root)
-            return max(vs[-1] if vs else -1, cp if cp is not None else -1)
+            return _log_head(self.lake_root)[2]
         from tscd_datalake_adapter_spark.sources.iceberg_lite import (
             load_metadata,
         )

@@ -32,16 +32,6 @@ class QuerySpec:
     never-verified query; rotation promotes them automatically once the
     round lands and the window frees up."""
 
-    construction: bool | None = None
-    """Whether the query BUILDS its own data (write-path demo: temp
-    tables, lakehouse commits, index construction) before reading it —
-    so its bench time includes construction cost, not just read cost
-    (r11, r10 verdict item 6). ``None`` = auto-detect at registration
-    from the function source (``is_construction`` resolves it); set
-    explicitly only to override. ``bench.py --families`` splits family
-    subtotals into construction-inclusive vs pure-read using this, so a
-    read-path regression isn't chased through demo-write noise."""
-
 
 _CONSTRUCTION_MARKERS = (
     "_tmp(",          # tempfile table/dir demos (operators/io.py)
@@ -58,12 +48,14 @@ _CONSTRUCTION_MARKERS = (
 
 
 def is_construction(spec: "QuerySpec") -> bool:
-    """Resolve a spec's construction flag: the explicit value when set,
-    else source-marker auto-detection (a query whose own function writes
-    data is construction-inclusive). Inspect failures (callables without
-    retrievable source) default to False."""
-    if spec.construction is not None:
-        return spec.construction
+    """Whether the query BUILDS its own data (write-path demo: temp
+    tables, lakehouse commits, index construction) before reading it, so
+    its bench time includes construction cost, not just read cost.
+    Detected from the function source: a query whose own function writes
+    data is construction-inclusive. Inspect failures (callables without
+    retrievable source) default to False. ``bench.py --families`` splits
+    family subtotals into construction-inclusive vs pure-read using this,
+    so a read-path regression isn't chased through demo-write noise."""
     import inspect
 
     try:
@@ -82,14 +74,12 @@ def register(
     headline: bool = False,
     tags: tuple[str, ...] = (),
     defer: bool = False,
-    construction: bool | None = None,
 ):
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name}")
         REGISTRY[name] = QuerySpec(
-            fn=fn, oracle=oracle, headline=headline, tags=tags,
-            defer=defer, construction=construction,
+            fn=fn, oracle=oracle, headline=headline, tags=tags, defer=defer
         )
         return fn
 

@@ -11,10 +11,8 @@ first; already-verified queries (still guarded every round by pytest's
 Green names are discovered automatically: every ``CORRECTNESS_r*.json`` at
 the repo root is scanned at load time for rows with rows/schema/hash all
 true, so each new round's results rotate the window with no code change.
-``_R1_GREEN`` is kept as a pinned fallback (and regression record) in case
-the JSON files are absent in some execution context.  Errored or unchecked
-names never enter the verified set, so they stay in the front window until
-they earn a green row.
+Errored or unchecked names never enter the verified set, so they stay in
+the front window until they earn a green row.
 """
 
 from __future__ import annotations
@@ -34,9 +32,12 @@ def _round_of(path: str) -> int:
         return 0
 
 
-def _correctness_rows() -> list[tuple[str, dict]]:
+def _correctness_rows() -> list[tuple[int, str, dict]]:
+    """``(round, name, row)`` for every row of every ``CORRECTNESS_r*.json``
+    at the repo root — the one reader of those files; the green set, the
+    recorded set and each name's last recorded round derive from it."""
     root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    out: list[tuple[str, dict]] = []
+    out: list[tuple[int, str, dict]] = []
     for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         try:
             with open(path) as f:
@@ -44,55 +45,31 @@ def _correctness_rows() -> list[tuple[str, dict]]:
         except (OSError, ValueError):
             continue
         if isinstance(rows, dict):
+            rnd = _round_of(path)
             out.extend(
-                (name, row) for name, row in rows.items() if isinstance(row, dict)
+                (rnd, name, row)
+                for name, row in rows.items()
+                if isinstance(row, dict)
             )
     return out
 
 
-def _last_recorded_round() -> dict[str, int]:
-    """name → the NEWEST round that recorded a usable row for it (green,
-    or rows-only for oracle-less queries). Drives the r9+ re-verification
-    rotation: with the whole registry verified, the driver's 50-slot
-    window is best spent re-confirming the STALEST greens — r1-green
-    queries have since been rewritten by fold sweeps and their old rows
-    prove nothing about today's code."""
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+def _is_green(row: dict) -> bool:
+    return (
+        row.get("rows_match") is True
+        and row.get("schema_match") is True
+        and row.get("hash_match") is True
     )
-    out: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        rnd = _round_of(path)
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            green = (
-                row.get("rows_match") is True
-                and row.get("schema_match") is True
-                and row.get("hash_match") is True
-            )
-            if green or _is_rows_only_record(row):
-                out[name] = max(out.get(name, 0), rnd)
-    return out
 
 
 def _greens_from_correctness_files(
-    rows: list[tuple[str, dict]] | None = None,
+    rows: list[tuple[int, str, dict]] | None = None,
 ) -> set[str]:
     """Names with a fully-green driver row in any CORRECTNESS_r*.json."""
     return {
         name
-        for name, row in (_correctness_rows() if rows is None else rows)
-        if row.get("rows_match") is True
-        and row.get("schema_match") is True
-        and row.get("hash_match") is True
+        for _, name, row in (_correctness_rows() if rows is None else rows)
+        if _is_green(row)
     }
 
 
@@ -106,7 +83,7 @@ def _is_rows_only_record(row: dict) -> bool:
 
 
 def _recorded_without_error(
-    rows: list[tuple[str, dict]] | None = None,
+    rows: list[tuple[int, str, dict]] | None = None,
 ) -> set[str]:
     """Names the driver ran and recorded a best-possible row for: a normal
     ``err: null`` row for oracle-backed queries, or a rows-only
@@ -114,70 +91,27 @@ def _recorded_without_error(
     front-window slot has done its job and the query retires."""
     return {
         name
-        for name, row in (_correctness_rows() if rows is None else rows)
+        for _, name, row in (_correctness_rows() if rows is None else rows)
         if (row.get("err") is None and row.get("rows_match") is not None)
         or _is_rows_only_record(row)
     }
 
-# Green rows in CORRECTNESS_r01.json (49 of the 50 checked;
-# media_feature_extract errored and so stays in the unverified front set).
-_R1_GREEN = [
-    "asof_join_purchase_view",
-    "dedup_exact",
-    "jaccard_near_dup",
-    "minhash_lsh_near_dup",
-    "simhash_fingerprints",
-    "dedup_clusters",
-    "simhash_near_dup",
-    "ngram_jaccard_near_dup",
-    "multimodal_metadata",
-    "png_header_parse",
-    "text_stats",
-    "term_frequencies",
-    "quality_scores",
-    "token_count_regex",
-    "language_id",
-    "tfidf_top_terms",
-    "doc_fingerprints",
-    "corpus_curation",
-    "unpivot_lineitem_metrics",
-    "pricing_summary",
-    "global_agg",
-    "count_distinct_by_status",
-    "rollup_counts",
-    "cube_counts",
-    "distinct_segments",
-    "stats_by_returnflag",
-    "collect_sorted_segments",
-    "revenue_by_segment",
-    "local_supplier_volume",
-    "customer_order_histogram",
-    "semi_join_customers",
-    "anti_join_customers",
-    "theta_join_part_pairs",
-    "cross_join_region_status",
-    "customers_per_region",
-    "full_outer_nation_counts",
-    "shipping_priority",
-    "revenue_forecast",
-    "returned_items",
-    "window_rank_orders",
-    "window_lag_orders",
-    "window_running_sum",
-    "window_ntile_customers",
-    "window_range_frame",
-    "topk_orders_global",
-    "exists_probe",
-    "list_distinct_custkeys",
-    "sort_multi_key_nulls",
-    "union_all_overlap",
-]
 
-VERIFIED_BY_ROUND: dict[int, list[str]] = {1: _R1_GREEN}
+def _last_recorded_round(rows: list[tuple[int, str, dict]]) -> dict[str, int]:
+    """name → the NEWEST round that recorded a usable row for it (green,
+    or rows-only for oracle-less queries). Drives the r9+ re-verification
+    rotation: with the whole registry verified, the 50-slot CORRECTNESS
+    window is best spent re-confirming the STALEST greens — r1-green
+    queries have since been rewritten by fold sweeps and their old rows
+    prove nothing about today's code."""
+    out: dict[str, int] = {}
+    for rnd, name, row in rows:
+        if _is_green(row) or _is_rows_only_record(row):
+            out[name] = max(out.get(name, 0), rnd)
+    return out
 
-VERIFIED: frozenset[str] = frozenset(
-    name for names in VERIFIED_BY_ROUND.values() for name in names
-) | frozenset(_greens_from_correctness_files())
+
+VERIFIED: frozenset[str] = frozenset(_greens_from_correctness_files())
 
 
 def rotate(registry: dict) -> dict:
@@ -202,8 +136,9 @@ def rotate(registry: dict) -> dict:
        "no_oracle"`` row for them, so they sort behind everything — also
        stalest-first within the tier.
     """
-    recorded = _recorded_without_error()
-    last_round = _last_recorded_round()
+    rows = _correctness_rows()
+    recorded = _recorded_without_error(rows)
+    last_round = _last_recorded_round(rows)
 
     def tier(name: str, spec) -> int:
         if spec.oracle is not None:

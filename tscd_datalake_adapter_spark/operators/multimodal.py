@@ -308,13 +308,6 @@ def extract_media_features(media_df: DataFrame) -> DataFrame:
     return media_df.mapInPandas(_decode, schema=MEDIA_FEATURE_SCHEMA)
 
 
-def _sha_byte(i: int) -> str:
-    """DuckDB SQL for byte ``i`` of a lowercase-hex sha256 column ``hx``."""
-    hi = f"(strpos('0123456789abcdef', substr(hx, {2 * i + 1}, 1)) - 1)"
-    lo = f"(strpos('0123456789abcdef', substr(hx, {2 * i + 2}, 1)) - 1)"
-    return f"({hi} * 16 + {lo})"
-
-
 # DuckDB expressions mirroring the deterministic generators:
 # image pixel (x, y) of doc d = (7x + 13y + d) % 256, dims (8+d%9, 6+d%7);
 # audio sample i of doc d = (11d + 5i) % 256, n = 50 + d%20.

@@ -2,9 +2,11 @@
 
 The engine's performance contract is declarative: filters reach the parquet
 scan, dimension joins broadcast, top-k avoids full sorts, codegen spans stay
-wide. These helpers read ``explain('formatted')`` output or walk the
-executed plan tree (:func:`executed_nodes`) so tests can pin those
-properties instead of hoping for them.
+wide. These helpers walk the executed plan tree (:func:`executed_nodes`)
+or read Spark's SQL status store so tests can pin those properties
+instead of hoping for them. Only :func:`formatted_plan` reads
+``explain()`` text: the plan dump for people, and the text pins no
+structural helper covers yet.
 """
 
 from __future__ import annotations
@@ -22,10 +24,6 @@ def formatted_plan(df: DataFrame) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df)
 
 
 def executed_nodes(df: DataFrame) -> Iterator:
@@ -255,15 +253,34 @@ def executed_scan_counts_full(
     return counts
 
 
+def _split_filters(text: str) -> list[str]:
+    """``"[a(x,1), In(y, [1,2])]"`` → ``["a(x,1)", "In(y, [1,2])"]``:
+    split a scan's printed filter list on its top-level commas only."""
+    out: list[str] = []
+    depth, start = 0, 1
+    for i, ch in enumerate(text):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        if (ch == "," and depth == 1) or (ch == "]" and depth == 0):
+            if text[start:i].strip():
+                out.append(text[start:i].strip())
+            start = i + 1
+    return out
+
+
 def executed_scan_columns(df: DataFrame) -> list[dict]:
-    """Per-scan column pruning in the post-AQE physical plan (run the
-    query to a sink first): one record per FileSourceScan with the table
-    file name, the columns actually read (``requiredSchema``), and the
-    table's full width — the projection-pruning audit primitive. A scan
-    whose read width equals the table width on a wide table means
-    column pruning never fired for it; at 100 TB on columnar parquet
-    that's the difference between reading 2 columns and reading 12.
-    Same tree-walk contract as :func:`executed_scan_counts`."""
+    """Per-scan column pruning and filter pushdown in the post-AQE
+    physical plan (run the query to a sink first): one record per
+    FileSourceScan with the table file name, the columns actually read
+    (``requiredSchema``), the table's full width and the filters pushed
+    into the parquet reader (``pushed``) — the projection-pruning and
+    pushdown audit primitive. A scan whose read width equals the table
+    width on a wide table means column pruning never fired for it; at
+    100 TB on columnar parquet that's the difference between reading 2
+    columns and reading 12. Same tree-walk contract as
+    :func:`executed_scan_counts`."""
     out: list[dict] = []
     for node in executed_nodes(df):
         if not node.getClass().getSimpleName().startswith("FileSourceScan"):
@@ -278,38 +295,10 @@ def executed_scan_columns(df: DataFrame) -> list[dict]:
                 "table": _scan_table(node) or "?",
                 "read": [str(req.apply(i).name()) for i in range(req.size())],
                 "width": width,
+                "pushed": _split_filters(node.metadata().apply("PushedFilters")),
             }
         )
     return out
-
-
-def has_pushed_filters(df: DataFrame) -> bool:
-    plan = formatted_plan(df)
-    return "PushedFilters: [" in plan and "PushedFilters: []" not in plan.split(
-        "PushedFilters: ["
-    )[0]
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    out = []
-    for line in formatted_plan(df).splitlines():
-        line = line.strip()
-        if line.startswith("PushedFilters:"):
-            body = line.split(":", 1)[1].strip().strip("[]")
-            if body:
-                out.extend(f.strip() for f in body.split(","))
-    return out
-
-
-def read_schema_columns(df: DataFrame, table_hint: str = "") -> list[str]:
-    """Columns actually read from the scan (column-pruning check)."""
-    cols: list[str] = []
-    for line in formatted_plan(df).splitlines():
-        line = line.strip()
-        if line.startswith("ReadSchema:") and (table_hint in line):
-            body = line.split("struct<", 1)[-1].rstrip(">")
-            cols.extend(c.split(":")[0] for c in body.split(",") if c)
-    return cols
 
 
 def forced_broadcast_base_tables(df: DataFrame, tables: list[str]) -> set[str]:
@@ -427,21 +416,6 @@ def unpartitioned_windows_over_unaggregated_input(df: DataFrame) -> list[str]:
 
     walk(df._jdf.queryExecution().sparkPlan())
     return out
-
-
-def has_take_ordered(df: DataFrame) -> bool:
-    return "TakeOrderedAndProject" in formatted_plan(df)
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of distinct whole-stage-codegen stages in the *executed* plan
-    (AQE hides codegen until stages materialize, so this triggers execution —
-    use on test-scale inputs). Stages appear as ``*(N)`` operator prefixes."""
-    import re
-
-    df.collect()  # count() would plan a different query; collect fills this one
-    text = df._jdf.queryExecution().executedPlan().toString()
-    return len(set(re.findall(r"\*\((\d+)\)", text)))
 
 
 def partition_skew_report(df: DataFrame) -> dict:

@@ -67,12 +67,6 @@ def _write_bytes(buf: io.BytesIO, b: bytes) -> None:
     buf.write(b)
 
 
-def _is_null_default(schema) -> bool:
-    return schema == "null" or (
-        isinstance(schema, dict) and schema.get("type") == "null"
-    )
-
-
 def write_datum(buf: io.BytesIO, schema, value) -> None:
     """Binary-encode ``value`` per ``schema`` (parsed Avro JSON)."""
     if isinstance(schema, str):

@@ -255,18 +255,26 @@ def _read_checkpoint(path: str, version: int) -> dict:
     }
 
 
+def _log_head(path: str) -> tuple[list[int], int | None, int]:
+    """``(JSON commit versions, newest checkpoint version or None, latest
+    version)`` of the log, where latest = max(last JSON commit, last
+    checkpoint): a log cleaned up past a checkpoint still ends at it.
+    Raises FileNotFoundError when the log holds neither."""
+    versions = _existing_versions(path)
+    cp_version = _last_checkpoint_version(path)
+    if not versions and cp_version is None:
+        raise FileNotFoundError(f"not a delta_lite table (no log): {path}")
+    cp_v = -1 if cp_version is None else cp_version
+    return versions, cp_version, max(versions[-1] if versions else -1, cp_v)
+
+
 def _replay(path: str, version: int | None = None) -> dict:
     """Replay the log up to ``version`` (inclusive; latest if None),
     resuming from the newest checkpoint at or below it when one exists
     (the spec's read path: checkpoint state + later JSON commits).
     Returns {"files": {relpath: add_action}, "tombstones":
     {relpath: remove_action}, "metadata": …, "version": int}."""
-    versions = _existing_versions(path)
-    cp_version = _last_checkpoint_version(path)
-    if not versions and cp_version is None:
-        raise FileNotFoundError(f"not a delta_lite table (no log): {path}")
-    cp_v = -1 if cp_version is None else cp_version
-    latest = max(versions[-1] if versions else -1, cp_v)
+    versions, cp_version, latest = _log_head(path)
     if version is None:
         version = latest
     if version > latest or version < 0:
@@ -1047,14 +1055,6 @@ def _parse_conjuncts(where: str) -> list[tuple[str, str, object]] | None:
     return out
 
 
-def _file_may_match(
-    add: dict, conjuncts: list[tuple[str, str, object]]
-) -> bool:
-    """False only when the add's stats PROVE no row satisfies every
-    conjunct (see :func:`_stats_may_match`)."""
-    return _stats_may_match(_add_stats(add), conjuncts)
-
-
 def _stats_may_match(
     st: dict | None, conjuncts: list[tuple[str, str, object]]
 ) -> bool:
@@ -1147,7 +1147,7 @@ def read_delta(
             rels = [
                 rel
                 for rel in rels
-                if _file_may_match(files[rel], conjuncts)
+                if _stats_may_match(_add_stats(files[rel]), conjuncts)
             ]
     df = _read_logged_files(spark, path, state, rels)
     return df.where(where) if where else df
@@ -1262,13 +1262,7 @@ def read_delta_changes(
     are not new data."""
     from pyspark.sql import functions as F
 
-    versions = _existing_versions(path)
-    if not versions and _last_checkpoint_version(path) is None:
-        raise FileNotFoundError(f"not a delta_lite table (no log): {path}")
-    latest = max(
-        versions[-1] if versions else -1,
-        _last_checkpoint_version(path) or -1,
-    )
+    versions, _, latest = _log_head(path)
     end = latest if ending_version is None else int(ending_version)
     start = int(starting_version)
     if start < 0 or end > latest or start > end:
@@ -1383,7 +1377,11 @@ def merge_delta(
     # incomparable), so every non-empty file rewrites
     in_range = [(key, ">=", rng["lo"]), (key, "<=", rng["hi"])]
     files = state["files"]
-    rewrite = [rel for rel in files if _file_may_match(files[rel], in_range)]
+    rewrite = [
+        rel
+        for rel in files
+        if _stats_may_match(_add_stats(files[rel]), in_range)
+    ]
     touched = _read_logged_files(spark, path, state, rewrite)
     merged = touched.join(
         updates.select(key).distinct(), on=key, how="left_anti"
@@ -1429,7 +1427,9 @@ def delete_delta(
     conjuncts = _parse_conjuncts(where)
     if conjuncts:
         rewrite = [
-            rel for rel in files if _file_may_match(files[rel], conjuncts)
+            rel
+            for rel in files
+            if _stats_may_match(_add_stats(files[rel]), conjuncts)
         ]
     else:
         rewrite = list(files)
@@ -1616,7 +1616,9 @@ def update_delta(
     conjuncts = _parse_conjuncts(where)
     if conjuncts:
         rewrite = [
-            rel for rel in files if _file_may_match(files[rel], conjuncts)
+            rel
+            for rel in files
+            if _stats_may_match(_add_stats(files[rel]), conjuncts)
         ]
     else:
         rewrite = list(files)

@@ -57,20 +57,6 @@ from pyspark.sql.datasource import (
 )
 
 
-def _log_state(path: str):
-    from tscd_datalake_adapter_spark.sources.delta_lite import (
-        _existing_versions,
-        _last_checkpoint_version,
-    )
-
-    versions = _existing_versions(path)
-    cp = _last_checkpoint_version(path)
-    if not versions and cp is None:
-        raise FileNotFoundError(f"not a delta_lite table (no log): {path}")
-    latest = max(versions[-1] if versions else -1, -1 if cp is None else cp)
-    return versions, latest
-
-
 class DeltaLiteFilePartition(InputPartition):
     """One ADDED data file of one committed version. Plain picklable
     attributes only; the executor re-derives everything else."""
@@ -162,11 +148,13 @@ class DeltaLiteStreamReader(DataSourceStreamReader):
         return {"version": self._start - 1}
 
     def latestOffset(self):
-        _, latest = _log_state(self._path)
-        return {"version": latest}
+        from tscd_datalake_adapter_spark.sources.delta_lite import _log_head
+
+        return {"version": _log_head(self._path)[2]}
 
     def partitions(self, start, end):
         from tscd_datalake_adapter_spark.sources.delta_lite import (
+            _log_head,
             _replay,
             _version_file,
         )
@@ -174,7 +162,7 @@ class DeltaLiteStreamReader(DataSourceStreamReader):
         s, e = int(start["version"]), int(end["version"])
         if e <= s:
             return []
-        versions, latest = _log_state(self._path)
+        versions = _log_head(self._path)[0]
         missing = sorted(set(range(s + 1, e + 1)) - set(versions))
         if missing:
             raise ValueError(

@@ -39,8 +39,9 @@ at 100 TB.
 Manifests DO carry per-column lower/upper bounds (spec single-value
 binary serialization keyed by field id, collected from parquet footers
 at commit time), and ``where=`` pruning evaluates them before Spark
-lists anything — see :func:`_file_bounds` / ``_df_may_match`` and the
-oracle query ``iceberg_lite_data_skipping``.
+lists anything — see :func:`_file_bounds` /
+``delta_lite._stats_may_match`` and the oracle query
+``iceberg_lite_data_skipping``.
 
 Partition transforms (r10): identity plus the spec's ``day``/``hour``/
 ``month``/``year`` temporal transforms, ``bucket[N]`` (murmur3-32
@@ -88,6 +89,7 @@ from tscd_datalake_adapter_spark.sources.delta_lite import (
     _partition_values,
     _prune_empty_dirs,
     _schema_fingerprint,
+    _stats_may_match,
     _write_data_files,
 )
 
@@ -1978,19 +1980,6 @@ def _bounds_stats(data_file: dict, schema: dict) -> dict:
     }
 
 
-def _df_may_match(
-    data_file: dict, schema: dict, conjuncts
-) -> bool:
-    """False only when the manifest entry's bounds PROVE no row matches
-    every conjunct (absent bounds → may match) — delta_lite's file
-    skipping test over :func:`_bounds_stats`."""
-    from tscd_datalake_adapter_spark.sources.delta_lite import (
-        _stats_may_match,
-    )
-
-    return _stats_may_match(_bounds_stats(data_file, schema), conjuncts)
-
-
 def _fs_path(p: str) -> str:
     """One spelling of a data-file reference, an absolute local path:
     manifests store the path the writer was given, while Spark's
@@ -2172,7 +2161,7 @@ def read_iceberg(
             files = [
                 f
                 for f in files
-                if _df_may_match(f, ice_schema, conjuncts)
+                if _stats_may_match(_bounds_stats(f, ice_schema), conjuncts)
                 # transformed partition values prune on SOURCE-column
                 # predicates (day/hour/... are order-preserving; bucket
                 # prunes equality) — this is the manifest-level pruning
@@ -2293,7 +2282,7 @@ def delete_iceberg(
         candidates = [
             f
             for f in files
-            if _df_may_match(f, ice_schema, conjuncts)
+            if _stats_may_match(_bounds_stats(f, ice_schema), conjuncts)
             and _partition_may_match(f, descriptors, conjuncts)
         ]
     else:
@@ -2501,7 +2490,11 @@ def merge_iceberg(
     # incomparable), so every non-empty file rewrites
     in_range = [(key, ">=", rng["lo"]), (key, "<=", rng["hi"])]
     ice_schema = _current_schema(meta)
-    rewrite = [f for f in files if _df_may_match(f, ice_schema, in_range)]
+    rewrite = [
+        f
+        for f in files
+        if _stats_may_match(_bounds_stats(f, ice_schema), in_range)
+    ]
     schema = _spark_schema_of(meta)
     touched = _read_data_files(spark, path, meta, snap, rewrite).select(
         *[f.name for f in schema.fields]
@@ -2576,7 +2569,7 @@ def update_iceberg(
         candidates = [
             f
             for f in files
-            if _df_may_match(f, ice_schema, conjuncts)
+            if _stats_may_match(_bounds_stats(f, ice_schema), conjuncts)
             and _partition_may_match(f, descriptors, conjuncts)
         ]
     else:
