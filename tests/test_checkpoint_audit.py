@@ -31,6 +31,7 @@ Audit record (r7) of what the remaining raw sites are:
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -224,4 +225,133 @@ def test_delta_latest_version_has_one_helper():
     assert set(found) == {"sources/delta_lite.py"}, (
         f"_last_checkpoint_version used outside delta_lite: {found}; call "
         "delta_lite._log_head"
+    )
+
+
+class _Uses(ast.NodeVisitor):
+    """The innermost enclosing function of every use of ``name`` (a name
+    or an attribute), ``<module>`` at module level."""
+
+    def __init__(self, name: str):
+        self.name = name
+        self.stack = ["<module>"]
+        self.found: set[str] = set()
+
+    def visit_FunctionDef(self, node):
+        self.stack.append(node.name)
+        self.generic_visit(node)
+        self.stack.pop()
+
+    visit_AsyncFunctionDef = visit_FunctionDef
+
+    def visit_Name(self, node):
+        if node.id == self.name:
+            self.found.add(self.stack[-1])
+
+    def visit_Attribute(self, node):
+        if node.attr == self.name:
+            self.found.add(self.stack[-1])
+        self.generic_visit(node)
+
+
+def _trees(root: str):
+    """``(path relative to root, parsed module)`` for every ``.py`` file."""
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in sorted(files):
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                with open(path, encoding="utf-8") as f:
+                    yield os.path.relpath(path, root), ast.parse(f.read())
+
+
+def _users(root: str, name: str) -> dict[str, list[str]]:
+    """module -> the functions that use ``name``."""
+    out: dict[str, list[str]] = {}
+    for rel, tree in _trees(root):
+        v = _Uses(name)
+        v.visit(tree)
+        if v.found:
+            out[rel] = sorted(v.found)
+    return out
+
+
+@pytest.mark.smoke
+def test_delta_commits_are_parsed_only_by_commit_actions():
+    """A delta commit file is opened and parsed in one place,
+    ``delta_lite._commit_actions`` (through the ``write_once`` parse
+    cache); the other callers of ``_version_file`` write a commit, test
+    that it exists or delete it."""
+    assert _users(PKG, "_version_file") == {
+        "sources/delta_lite.py": [
+            "_commit", "_commit_actions", "_commit_info", "checkpoint_delta",
+        ]
+    }, "parse delta commits with delta_lite._commit_actions"
+
+
+@pytest.mark.smoke
+def test_avro_containers_are_decoded_only_by_read_container():
+    """Avro containers (iceberg manifests and manifest lists) are decoded
+    only by ``avro_lite.read_container``, through the ``write_once`` parse
+    cache."""
+    assert _users(PKG, "_decode_container") == {
+        "sources/avro_lite.py": ["read_container"]
+    }
+    assert _users(PKG, "read_datum") == {
+        "sources/avro_lite.py": ["_decode_container", "read_datum"]
+    }, "decode avro containers with avro_lite.read_container"
+
+
+_MUTATING_METHODS = {
+    "add", "append", "clear", "discard", "extend", "insert", "move_to_end",
+    "pop", "popitem", "remove", "setdefault", "update",
+}
+
+
+def _module_caches(tree: ast.Module) -> list[str]:
+    """Module-level names that a function of the module writes into (item
+    assignment or deletion, or a mutating method), and functions wrapped
+    in ``functools.cache`` / ``lru_cache``."""
+    names = set()
+    for node in tree.body:
+        if isinstance(node, ast.Assign):
+            names.update(t.id for t in node.targets if isinstance(t, ast.Name))
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            names.add(node.target.id)
+    found = set()
+    for func in ast.walk(tree):
+        if not isinstance(func, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for dec in func.decorator_list:
+            d = dec.func if isinstance(dec, ast.Call) else dec
+            if getattr(d, "id", getattr(d, "attr", None)) in ("cache", "lru_cache"):
+                found.add(func.name)
+        for node in ast.walk(func):
+            if isinstance(node, ast.Subscript) and isinstance(
+                node.ctx, (ast.Store, ast.Del)
+            ):
+                target = node.value
+            elif isinstance(node, ast.Call) and isinstance(
+                node.func, ast.Attribute
+            ) and node.func.attr in _MUTATING_METHODS:
+                target = node.func.value
+            else:
+                continue
+            if isinstance(target, ast.Name) and target.id in names:
+                found.add(target.id)
+    return sorted(found)
+
+
+@pytest.mark.smoke
+def test_sources_keep_one_module_level_cache():
+    """Under ``sources/`` the one module-level cache is the parse cache of
+    write-once metadata files, ``write_once._entries``: it compares each
+    file's bytes before it reuses a value, and it is bounded."""
+    found = {}
+    for rel, tree in _trees(os.path.join(PKG, "sources")):
+        names = _module_caches(tree)
+        if names:
+            found[rel] = names
+    assert found == {"write_once.py": ["_entries"]}, (
+        f"module-level caches under sources/: {found}; cache parsed "
+        "metadata files through sources.write_once.parsed"
     )

@@ -3,6 +3,8 @@ reference-sensitive logic in the engine (SURVEY.md §1.1 semantics)."""
 
 from __future__ import annotations
 
+import re
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -80,3 +82,22 @@ def test_end_before_start_fails(mid, sm, em):
 def test_idempotent_and_deterministic(title, body, sm, em):
     raw = f"head\n{sm} {title} ***\n{body}\n{em} {title} ***"
     assert split_book(raw) == split_book(raw)
+
+
+# Java's String.trim() spelled as a regex: strip runs of U+0000-U+0020 at
+# either end. The reference java_trim's str.strip must agree with.
+_JAVA_TRIM_REFERENCE = re.compile(r"^[\x00-\x20]+|[\x00-\x20]+$")
+
+
+@given(
+    s=st.text(
+        alphabet=st.one_of(
+            st.characters(min_codepoint=0x00, max_codepoint=0x21),
+            st.sampled_from("\u00e9\U0001f600"),
+        ),
+        max_size=40,
+    )
+)
+@settings(max_examples=500, deadline=None)
+def test_java_trim_matches_the_regex_reference(s):
+    assert java_trim(s) == _JAVA_TRIM_REFERENCE.sub("", s)

@@ -10,11 +10,11 @@ import pytest
 
 from tscd_datalake_adapter_spark.operators import load_all
 from tscd_datalake_adapter_spark.operators._rotation import (
-    VERIFIED,
     _correctness_rows,
     _greens_from_correctness_files,
     _is_rows_only_record,
     _recorded_without_error,
+    tier,
 )
 
 pytestmark = pytest.mark.smoke
@@ -104,17 +104,6 @@ def test_real_no_oracle_rows_are_retired():
         assert name in recorded, f"{name} should have a rows-only record"
 
 
-def _tier(registry, recorded, name):
-    spec = registry[name]
-    if spec.oracle is not None:
-        if name in VERIFIED:
-            return 3
-        return 2 if spec.defer else 0
-    if name in recorded:
-        return 4
-    return 2 if spec.defer else 1
-
-
 def test_rotation_tiers_are_ordered():
     """All signal-capable queries (tier 0/1) precede deferred ones (tier 2)
     which precede spent oracle-backed ones (tier 3), which precede spent
@@ -122,9 +111,10 @@ def test_rotation_tiers_are_ordered():
     ``err: no_oracle`` row) — stable across future rounds."""
     registry = load_all()
     names = list(registry.keys())
+    greens = _greens_from_correctness_files()
     recorded = _recorded_without_error()
 
-    tiers = [_tier(registry, recorded, n) for n in names]
+    tiers = [tier(registry[n], n, greens, recorded) for n in names]
     assert tiers == sorted(tiers), "rotation must order tiers ascending"
     # oracle-less queries never sit ahead of oracle-backed unverified ones
     if 0 in tiers and 1 in tiers:

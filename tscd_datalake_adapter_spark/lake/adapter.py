@@ -32,7 +32,11 @@ Scale notes (100 TB): the write path appends and never lists the whole lake
 start no Spark job: they replay the table format's metadata (log or
 manifests: bytes per file, bounded by checkpoints) and read, driver-side
 with pyarrow, only the ``book_id`` column of the files whose per-file
-stats cannot settle the answer. ``exists`` costs that metadata read plus
+stats cannot settle the answer. Every request re-reads the metadata
+bytes, but each write-once file (a delta commit or checkpoint part, an
+iceberg manifest or manifest list) is parsed once per process and reused
+while its bytes are unchanged (``sources.write_once``), so between
+commits a request decodes no metadata. ``exists`` costs that metadata read plus
 the column of the files whose ``book_id`` range covers the id;
 ``list_books``' work on the Spark driver grows with its result, which was
 always collected there. ``merge_books`` plans from the same metadata: it

@@ -21,7 +21,6 @@ Spark path (pandas UDF in :mod:`adapter`), so both agree exactly.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 
 START_MARKERS = (
@@ -33,13 +32,13 @@ END_MARKERS = (
     "*** END OF THIS PROJECT GUTENBERG EBOOK",
 )
 
-# Java's String.trim() strips chars <= U+0020; Python's str.strip() strips
-# more (all unicode whitespace). Replicate Java exactly.
-_JAVA_TRIM = re.compile(r"^[\x00-\x20]+|[\x00-\x20]+$")
+# Java's String.trim() strips chars <= U+0020; Python's str.strip() with no
+# argument strips more (all unicode whitespace). Replicate Java exactly.
+_JAVA_TRIM_CHARS = "".join(map(chr, range(0x21)))
 
 
 def java_trim(s: str) -> str:
-    return _JAVA_TRIM.sub("", s)
+    return s.strip(_JAVA_TRIM_CHARS)
 
 
 def _index_of_any_advanced(s: str, needles: tuple[str, ...]) -> int:

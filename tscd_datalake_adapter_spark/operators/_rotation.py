@@ -111,7 +111,16 @@ def _last_recorded_round(rows: list[tuple[int, str, dict]]) -> dict[str, int]:
     return out
 
 
-VERIFIED: frozenset[str] = frozenset(_greens_from_correctness_files())
+def tier(spec, name: str, greens: set[str], recorded: set[str]) -> int:
+    """The rotation tier of query ``name`` (see :func:`rotate`), given the
+    names with a green driver row and the names recorded without error."""
+    if spec.oracle is not None:
+        if name in greens:
+            return 3
+        return 2 if spec.defer else 0
+    if name in recorded:
+        return 4
+    return 2 if spec.defer else 1
 
 
 def rotate(registry: dict) -> dict:
@@ -137,22 +146,17 @@ def rotate(registry: dict) -> dict:
        stalest-first within the tier.
     """
     rows = _correctness_rows()
+    greens = _greens_from_correctness_files(rows)
     recorded = _recorded_without_error(rows)
     last_round = _last_recorded_round(rows)
-
-    def tier(name: str, spec) -> int:
-        if spec.oracle is not None:
-            if name in VERIFIED:
-                return 3
-            return 2 if spec.defer else 0
-        if name in recorded:
-            return 4
-        return 2 if spec.defer else 1
-
     reg_index = {n: i for i, n in enumerate(registry)}
     out: dict = {}
     for t in (0, 1, 2, 3, 4):
-        names = [n for n, s in registry.items() if tier(n, s) == t]
+        names = [
+            n
+            for n, s in registry.items()
+            if tier(s, n, greens, recorded) == t
+        ]
         if t in (3, 4):
             names.sort(key=lambda n: (last_round.get(n, 0), reg_index[n]))
         out.update({n: registry[n] for n in names})

@@ -36,6 +36,8 @@ import os
 import struct
 import zlib
 
+from tscd_datalake_adapter_spark.sources import write_once
+
 MAGIC = b"Obj\x01"
 
 
@@ -280,11 +282,18 @@ def write_container(
 
 
 def read_container(path: str) -> tuple[dict, list[dict]]:
-    """Read an Avro object-container file → (schema, records)."""
-    with open(path, "rb") as f:
-        data = f.read()
+    """Read an Avro object-container file → (schema, records), decoded
+    once per process while the file's bytes are unchanged
+    (:mod:`write_once`): the result is shared, so do not mutate it."""
+    try:
+        return write_once.parsed(path, _decode_container)
+    except ValueError as exc:
+        raise ValueError(f"{exc} in {path}") from exc
+
+
+def _decode_container(data: bytes) -> tuple[dict, list[dict]]:
     if data[:4] != MAGIC:
-        raise ValueError(f"not an avro container: {path}")
+        raise ValueError("not an avro container")
     r = _Reader(data)
     r.pos = 4
     meta: dict[str, bytes] = {}
@@ -309,7 +318,7 @@ def read_container(path: str) -> tuple[dict, list[dict]]:
         size = r.varint()
         block = r.read(size)
         if r.read(16) != sync:
-            raise ValueError(f"sync marker mismatch in {path}")
+            raise ValueError("sync marker mismatch")
         if codec == "deflate":
             block = zlib.decompress(block, -15)
         br = _Reader(block)

@@ -87,6 +87,7 @@ parquet ground truth.
 
 from __future__ import annotations
 
+import io
 import json
 import os
 import re
@@ -95,6 +96,8 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from tscd_datalake_adapter_spark.sources import write_once
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -114,6 +117,19 @@ def _log_dir(path: str) -> str:
 
 def _version_file(path: str, version: int) -> str:
     return os.path.join(_log_dir(path), f"{version:020d}.json")
+
+
+def _parse_commit(data: bytes) -> list[dict]:
+    lines = map(str.strip, io.StringIO(data.decode("utf-8"), newline=None))
+    return [json.loads(line) for line in lines if line]
+
+
+def _commit_actions(path: str, version: int) -> list[dict]:
+    """The actions of commit ``version``, one per non-blank line of its
+    JSON file — the one reader of commit files. Parsed once per process
+    while the file is unchanged (:mod:`write_once`): the list and its
+    actions are shared, so do not mutate them."""
+    return write_once.parsed(_version_file(path, version), _parse_commit)
 
 
 def _existing_versions(path: str) -> list[int]:
@@ -199,18 +215,24 @@ def _checkpoint_files_of(path: str, version: int) -> list[str]:
     ]
 
 
+def _parse_checkpoint(data: bytes) -> list[dict]:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    return pq.read_table(pa.BufferReader(data)).to_pylist()
+
+
 def _read_checkpoint(path: str, version: int) -> dict:
     """State snapshot from a classic checkpoint parquet — single-part or
     the union of every part (the spec: actions are split arbitrarily
     across parts; union order is irrelevant because path keys are
     disjoint). Driver-side pyarrow read — the log is metadata-scale by
-    design."""
-    import pyarrow.parquet as pq
-
+    design — of rows parsed once per process (:mod:`write_once`); the
+    rows are shared, so the state copies every action it keeps."""
     tbl = [
         row
         for part in _checkpoint_files_of(path, version)
-        for row in pq.read_table(part).to_pylist()
+        for row in write_once.parsed(part, _parse_checkpoint)
     ]
     files: dict[str, dict] = {}
     tombstones: dict[str, dict] = {}
@@ -307,33 +329,28 @@ def _replay(path: str, version: int | None = None) -> dict:
             continue
         if v > version:
             break
-        with open(_version_file(path, v), encoding="utf-8") as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    mrv = action["protocol"].get("minReaderVersion", 1)
-                    if mrv > 1:
-                        raise NotImplementedError(
-                            f"table requires minReaderVersion {mrv}; "
-                            "delta_lite reads version-1 tables only"
-                        )
-                elif "metaData" in action:
-                    metadata = action["metaData"]
-                elif "add" in action:
-                    files[action["add"]["path"]] = action["add"]
-                    tombstones.pop(action["add"]["path"], None)
-                elif "remove" in action:
-                    rel = action["remove"]["path"]
-                    files.pop(rel, None)
-                    tombstones[rel] = action["remove"]
-                elif "txn" in action:
-                    t = action["txn"]
-                    txns[t["appId"]] = max(
-                        txns.get(t["appId"], -1), int(t["version"])
+        for action in _commit_actions(path, v):
+            if "protocol" in action:
+                mrv = action["protocol"].get("minReaderVersion", 1)
+                if mrv > 1:
+                    raise NotImplementedError(
+                        f"table requires minReaderVersion {mrv}; "
+                        "delta_lite reads version-1 tables only"
                     )
+            elif "metaData" in action:
+                metadata = action["metaData"]
+            elif "add" in action:
+                files[action["add"]["path"]] = action["add"]
+                tombstones.pop(action["add"]["path"], None)
+            elif "remove" in action:
+                rel = action["remove"]["path"]
+                files.pop(rel, None)
+                tombstones[rel] = action["remove"]
+            elif "txn" in action:
+                t = action["txn"]
+                txns[t["appId"]] = max(
+                    txns.get(t["appId"], -1), int(t["version"])
+                )
     return {
         "files": files,
         "tombstones": tombstones,
@@ -495,14 +512,9 @@ def _commit_info(path: str, version: int) -> dict | None:
     vf = _version_file(path, version)
     if version < 0 or not os.path.exists(vf):
         return None
-    with open(vf, encoding="utf-8") as f:
-        for line in f:
-            line = line.strip()
-            if not line:
-                continue
-            action = json.loads(line)
-            if "commitInfo" in action:
-                return action["commitInfo"]
+    for action in _commit_actions(path, version):
+        if "commitInfo" in action:
+            return action["commitInfo"]
     return None
 
 
@@ -1165,19 +1177,14 @@ def table_history(path: str) -> list[dict]:
             "n_adds": 0,
             "n_removes": 0,
         }
-        with open(_version_file(path, v), encoding="utf-8") as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "add" in action:
-                    ops["n_adds"] += 1
-                elif "remove" in action:
-                    ops["n_removes"] += 1
-                elif "commitInfo" in action:
-                    ops["operation"] = action["commitInfo"].get("operation")
-                    ops["timestamp"] = action["commitInfo"].get("timestamp")
+        for action in _commit_actions(path, v):
+            if "add" in action:
+                ops["n_adds"] += 1
+            elif "remove" in action:
+                ops["n_removes"] += 1
+            elif "commitInfo" in action:
+                ops["operation"] = action["commitInfo"].get("operation")
+                ops["timestamp"] = action["commitInfo"].get("timestamp")
         out.append(ops)
     return out
 
@@ -1284,21 +1291,14 @@ def read_delta_changes(
         removes = False
         ts_ms = None
         op = None
-        with open(_version_file(path, v), encoding="utf-8") as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "add" in action and action["add"].get("dataChange"):
-                    adds.append(action["add"]["path"])
-                elif "remove" in action and action["remove"].get(
-                    "dataChange"
-                ):
-                    removes = True
-                elif "commitInfo" in action:
-                    ts_ms = action["commitInfo"].get("timestamp")
-                    op = action["commitInfo"].get("operation")
+        for action in _commit_actions(path, v):
+            if "add" in action and action["add"].get("dataChange"):
+                adds.append(action["add"]["path"])
+            elif "remove" in action and action["remove"].get("dataChange"):
+                removes = True
+            elif "commitInfo" in action:
+                ts_ms = action["commitInfo"].get("timestamp")
+                op = action["commitInfo"].get("operation")
         if operations is not None and op not in operations:
             continue  # filtered commit: skipped entirely
         if removes and not ignore_deletes:
@@ -1792,20 +1792,15 @@ def purge_removed(path: str, version: int) -> list[str]:
             "may still be readable; use vacuum_delta for windowed cleanup"
         )
     removed: list[str] = []
-    with open(_version_file(path, version), encoding="utf-8") as f:
-        for line in f:
-            line = line.strip()
-            if not line:
-                continue
-            action = json.loads(line)
-            if "remove" in action:
-                rel = action["remove"]["path"]
-                if rel in state["files"]:
-                    continue  # re-added later in the same commit
-                full = os.path.join(path, rel)
-                if os.path.exists(full):
-                    os.unlink(full)
-                    removed.append(rel)
+    for action in _commit_actions(path, version):
+        if "remove" in action:
+            rel = action["remove"]["path"]
+            if rel in state["files"]:
+                continue  # re-added later in the same commit
+            full = os.path.join(path, rel)
+            if os.path.exists(full):
+                os.unlink(full)
+                removed.append(rel)
     _prune_empty_dirs(path)
     return sorted(removed)
 

@@ -154,9 +154,9 @@ class DeltaLiteStreamReader(DataSourceStreamReader):
 
     def partitions(self, start, end):
         from tscd_datalake_adapter_spark.sources.delta_lite import (
+            _commit_actions,
             _log_head,
             _replay,
-            _version_file,
         )
 
         s, e = int(start["version"]), int(end["version"])
@@ -206,26 +206,21 @@ class DeltaLiteStreamReader(DataSourceStreamReader):
             removes = False
             ts_ms = None
             op = None
-            with open(_version_file(self._path, v), encoding="utf-8") as f:
-                for line in f:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    action = json.loads(line)
-                    if "add" in action and action["add"].get("dataChange"):
-                        adds.append(
-                            (
-                                action["add"]["path"],
-                                action["add"].get("partitionValues") or {},
-                            )
+            for action in _commit_actions(self._path, v):
+                if "add" in action and action["add"].get("dataChange"):
+                    adds.append(
+                        (
+                            action["add"]["path"],
+                            action["add"].get("partitionValues") or {},
                         )
-                    elif "remove" in action and action["remove"].get(
-                        "dataChange"
-                    ):
-                        removes = True
-                    elif "commitInfo" in action:
-                        ts_ms = action["commitInfo"].get("timestamp")
-                        op = action["commitInfo"].get("operation")
+                    )
+                elif "remove" in action and action["remove"].get(
+                    "dataChange"
+                ):
+                    removes = True
+                elif "commitInfo" in action:
+                    ts_ms = action["commitInfo"].get("timestamp")
+                    op = action["commitInfo"].get("operation")
             if self._operations is not None and op not in self._operations:
                 continue
             if removes and not self._ignore_deletes:
