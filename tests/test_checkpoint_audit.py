@@ -355,3 +355,90 @@ def test_sources_keep_one_module_level_cache():
         f"module-level caches under sources/: {found}; cache parsed "
         "metadata files through sources.write_once.parsed"
     )
+
+
+def _enclosing(tree: ast.AST, match) -> list[str]:
+    """The innermost enclosing function of every node ``match`` accepts,
+    once per node (``<module>`` at module level)."""
+    found = []
+
+    def walk(node, name):
+        for child in ast.iter_child_nodes(node):
+            if match(child):
+                found.append(name)
+            inner = (
+                child.name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else name
+            )
+            walk(child, inner)
+
+    walk(tree, "<module>")
+    return found
+
+
+def _is_parquet_read(node: ast.AST) -> bool:
+    """A ``DataFrameReader.parquet`` call: ``.parquet(...)`` on a receiver
+    chain through ``.read`` (``spark.read.schema(s).parquet(...)``), not a
+    writer's ``.parquet``."""
+    if not (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "parquet"
+    ):
+        return False
+    recv = node.func.value
+    while isinstance(recv, (ast.Call, ast.Attribute)):
+        if isinstance(recv, ast.Attribute) and recv.attr == "read":
+            return True
+        recv = recv.func if isinstance(recv, ast.Call) else recv.value
+    return False
+
+
+def _raises_partition_mismatch(node: ast.AST) -> bool:
+    """A ``raise`` whose message names a partition mismatch."""
+    if not isinstance(node, ast.Raise):
+        return False
+    text = " ".join(
+        c.value
+        for c in ast.walk(node)
+        if isinstance(c, ast.Constant) and isinstance(c.value, str)
+    )
+    return "partition" in text and "mismatch" in text
+
+
+@pytest.mark.smoke
+def test_lake_data_files_have_one_spark_reader():
+    """Spark reads a lake's data files in one place,
+    ``delta_lite.read_data_files`` (the given schema, ``basePath``, sorted
+    paths, the partition check): no other ``DataFrameReader.parquet``
+    call in ``delta_lite``, ``iceberg_lite`` or ``lake/``."""
+    found = {}
+    for sub, only in (
+        ("sources", {"delta_lite.py", "iceberg_lite.py"}),
+        ("lake", None),
+    ):
+        for rel, tree in _trees(os.path.join(PKG, sub)):
+            sites = _enclosing(tree, _is_parquet_read)
+            if sites and (only is None or rel in only):
+                found[f"{sub}/{rel}"] = sites
+    assert found == {"sources/delta_lite.py": ["read_data_files"]}, (
+        f"Spark parquet reads of lake data files: {found}; read them "
+        "through delta_lite.read_data_files"
+    )
+
+
+@pytest.mark.smoke
+def test_sources_have_one_partition_check():
+    """One function under ``sources/`` checks a data file's metadata
+    partition against its hive path, ``delta_lite._check_partitions``:
+    it is the only one that raises a partition mismatch."""
+    found = {}
+    for rel, tree in _trees(os.path.join(PKG, "sources")):
+        checks = sorted(set(_enclosing(tree, _raises_partition_mismatch)))
+        if checks:
+            found[rel] = checks
+    assert found == {"delta_lite.py": ["_check_partitions"]}, (
+        f"partition checks under sources/: {found}; check partitions with "
+        "delta_lite._check_partitions"
+    )

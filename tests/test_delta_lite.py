@@ -946,7 +946,7 @@ def test_partition_values_mismatch_detected(spark, sf_dir, tmp_path):
         out.append(json.dumps(a))
     with open(log0, "w", encoding="utf-8") as f:
         f.write("\n".join(out) + "\n")
-    with pytest.raises(ValueError, match="partitionValues mismatch"):
+    with pytest.raises(ValueError, match="partition mismatch"):
         read_delta(spark, path)
 
 

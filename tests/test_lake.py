@@ -830,26 +830,32 @@ def test_metadata_answers_match_spark_scan(spark, tmp_path, backend):
 
 @pytest.mark.parametrize("backend", ["delta", "iceberg"])
 def test_metadata_answers_keep_read_checks(spark, tmp_path, book_dir, backend):
-    """The metadata path refuses what the Spark read refuses: a partition
-    value the file's hive path contradicts."""
+    """The metadata path and the change feed (``read_delta_changes`` /
+    ``read_iceberg_incremental``) refuse what the Spark read refuses: a
+    partition value the file's hive path contradicts, here in a commit
+    after the feed's cursor."""
     import json
     import os
 
+    from tests.conftest import BOOK_V1
+
     lake = LakeAdapter(spark, str(tmp_path / f"clake_{backend}"), backend=backend)
     lake.ingest_files(sorted(str(p) for p in book_dir.iterdir()), TS)
+    pos = lake.log_position()
+    lake.ingest_text(44, BOOK_V1, TS2)
+    # the newest commit's files get a partition their paths contradict
     if backend == "delta":
-        log0 = os.path.join(lake.lake_root, "_delta_log", f"{0:020d}.json")
+        log = os.path.join(
+            lake.lake_root, "_delta_log", f"{lake.log_position():020d}.json"
+        )
         actions = [
-            json.loads(ln)
-            for ln in open(log0, encoding="utf-8")
-            if ln.strip()
+            json.loads(ln) for ln in open(log, encoding="utf-8") if ln.strip()
         ]
         for a in actions:
             if "add" in a:
                 a["add"]["partitionValues"]["ingest_hour"] = "15"
-        with open(log0, "w", encoding="utf-8") as fh:
+        with open(log, "w", encoding="utf-8") as fh:
             fh.write("".join(json.dumps(a) + "\n" for a in actions))
-        match = "partitionValues mismatch"
     else:
         from tscd_datalake_adapter_spark.sources import avro_lite
         from tscd_datalake_adapter_spark.sources.iceberg_lite import (
@@ -860,18 +866,24 @@ def test_metadata_answers_keep_read_checks(spark, tmp_path, book_dir, backend):
         meta = load_metadata(lake.lake_root)
         snap = _snapshot_by_id(meta, meta["current-snapshot-id"])
         _, manifests = avro_lite.read_container(snap["manifest-list"])
-        mpath = manifests[0]["manifest_path"]
-        schema, entries = avro_lite.read_container(mpath)
-        for e in entries:
-            e["data_file"]["partition"]["ingest_ts_hour"] += 1
-        avro_lite.write_container(mpath, schema, entries)
-        match = "partition mismatch"
-    with pytest.raises(ValueError, match=match):
-        lake.read()
-    with pytest.raises(ValueError, match=match):
-        lake.exists(11)
-    with pytest.raises(ValueError, match=match):
-        lake.list_books()
+        newest = max(manifests, key=lambda m: m["sequence_number"])
+        schema, entries = avro_lite.read_container(newest["manifest_path"])
+        corrupt = []
+        for e in entries:  # the parsed entries are shared: copy, then edit
+            part = dict(e["data_file"]["partition"])
+            part["ingest_ts_hour"] += 1
+            corrupt.append(
+                {**e, "data_file": {**e["data_file"], "partition": part}}
+            )
+        avro_lite.write_container(newest["manifest_path"], schema, corrupt)
+    for call in (
+        lake.read,
+        lambda: lake.exists(11),
+        lake.list_books,
+        lambda: lake.books_ingested_since(pos),
+    ):
+        with pytest.raises(ValueError, match="partition mismatch"):
+            call()
 
 
 def _job_ids(spark, thunk) -> list[int]:
@@ -894,7 +906,9 @@ def _job_ids(spark, thunk) -> list[int]:
 @pytest.mark.parametrize("backend", ["delta", "iceberg"])
 def test_status_and_list_start_no_spark_job(spark, tmp_path, book_dir, backend):
     """Structure pin, not timing: ``IngestApi.status`` (hit and miss) and
-    ``IngestApi.list`` start no Spark job on the table-format backends."""
+    ``IngestApi.list`` start no Spark job on the table-format backends,
+    and neither does opening ``read``, ``read_latest`` or ``read_as_of``
+    (the frame is built from the metadata's schema; no action runs)."""
     from tests.conftest import BOOK_V1
 
     lake = LakeAdapter(spark, str(tmp_path / f"zlake_{backend}"), backend=backend)
@@ -909,9 +923,45 @@ def test_status_and_list_start_no_spark_job(spark, tmp_path, book_dir, backend):
     assert _job_ids(spark, lambda: api.status(3)) == []
     assert _job_ids(spark, lambda: api.status(999)) == []
     assert _job_ids(spark, api.list) == []
+    assert _job_ids(spark, lake.read) == []
+    assert _job_ids(spark, lake.read_latest) == []
+    assert _job_ids(spark, lambda: lake.read_as_of(TS)) == []
+    assert _job_ids(spark, lambda: lake.read_as_of(TS2)) == []
     assert api.status(22)["status"] == "available"
     assert api.status(3)["status"] == "not_found"
     assert api.list()["books"] == [1, 5, 11, 22, 33]
+
+
+def test_iceberg_read_over_position_deletes_starts_no_spark_job(
+    spark, tmp_path, book_dir
+):
+    """Opening ``read_iceberg`` over a pending merge-on-read delete starts
+    no Spark job: the position-delete files are read with the spec's
+    ``(file_path string, pos long)`` schema, which is what
+    ``delete_iceberg`` writes, instead of inferring it from a footer."""
+    import pyarrow.parquet as pq
+
+    from tscd_datalake_adapter_spark.sources.iceberg_lite import (
+        _live_delete_files,
+        delete_iceberg,
+        load_metadata,
+        read_iceberg,
+    )
+
+    lake = LakeAdapter(spark, str(tmp_path / "dlake_iceberg"), backend="iceberg")
+    lake.ingest_files(sorted(str(p) for p in book_dir.iterdir()), TS)
+    res = delete_iceberg(
+        spark, lake.lake_root, "book_id = 22", strategy="merge-on-read"
+    )
+    assert res["delete_files"] == 1
+    [dfile] = _live_delete_files(load_metadata(lake.lake_root))
+    written = pq.read_schema(dfile["file_path"])
+    assert [(f.name, str(f.type)) for f in written] == [
+        ("file_path", "string"),
+        ("pos", "int64"),
+    ]
+    assert _job_ids(spark, lambda: read_iceberg(spark, lake.lake_root)) == []
+    assert sorted(r.book_id for r in lake.read().collect()) == [11, 33]
 
 
 UPDATE_SCHEMA = "book_id long, header string, body string"

@@ -62,6 +62,13 @@ driver against 0.7-3.2 s in Spark, and a merge of a tenth of its ids
 1.0-1.9 s against 1.4-2.4 s. Updates above one split merge in Spark
 (ids, broadcast, write: three jobs), so that they are never collected
 to the driver.
+
+Every Spark read of the lake's data files, a whole-lake ``read`` and the
+Spark merge's read of the touched files alike, goes through
+``delta_lite.read_data_files``: the files are the metadata's records,
+read with the table's schema (never inferred, so building the frame
+starts no job) after each file's partition is checked against its hive
+path.
 """
 
 from __future__ import annotations
@@ -413,10 +420,17 @@ class LakeAdapter:
             .filesMaxPartitionBytes()
         )
 
+    def _data_root(self) -> str:
+        """The directory the format resolves data-file paths against and
+        hive partition paths start under (delta: the lake root; iceberg:
+        ``data/``)."""
+        if self.backend == "delta":
+            return self.lake_root
+        return os.path.join(self.lake_root, "data")
+
     def _partition_dirs(self, day: str, hour: str) -> tuple[str, str]:
         """The hive directories of the ``(yyyyMMdd, HH)`` partition, under
-        the directory the format's commit resolves data-file paths
-        against (delta: the lake root; iceberg: ``data/``)."""
+        :meth:`_data_root`."""
         if self.backend == "delta":
             return f"ingest_date={day}", f"ingest_hour={hour}"
         # transform layout (r10): the path carries the DERIVED day/hour
@@ -432,13 +446,13 @@ class LakeAdapter:
 
     def _partition_of(self, f: dict) -> tuple[str, str]:
         """The ``(ingest_date, ingest_hour)`` of a live file, from its
-        metadata partition (iceberg: transformed ordinals back to the
-        adapter's ``(yyyyMMdd, HH)``)."""
+        metadata partition as the path spells it (iceberg:
+        ``2026-08-13`` and ``2026-08-13-14`` back to the adapter's
+        ``(yyyyMMdd, HH)``)."""
         p = f["partition"]
         if self.backend == "delta":
             return p["ingest_date"], p["ingest_hour"]
-        d = _EPOCH_DAY + dt.timedelta(days=p["ingest_ts_day"])
-        return d.strftime("%Y%m%d"), f"{p['ingest_ts_hour'] % 24:02d}"
+        return p["ingest_ts_day"].replace("-", ""), p["ingest_ts_hour"][-2:]
 
     def _read_book_row_groups(self, f: dict, drop=None) -> Iterator:
         """One live file as BOOK_SCHEMA arrow tables, one per row group,
@@ -495,9 +509,7 @@ class LakeAdapter:
 
         commit_uuid = uuid.uuid4().hex
         cols = self._file_columns()
-        data_root = self.lake_root
-        if self.backend == "iceberg":
-            data_root = os.path.join(self.lake_root, "data")
+        data_root = self._data_root()
         rels: list[str] = []
         rows = 0
         for (day, hour), tables in groups:
@@ -575,7 +587,8 @@ class LakeAdapter:
         """The lake's live data files from the table format's metadata
         (``delta_lite.live_files`` / ``iceberg_lite.live_files``: path,
         byte size, record count, parsed stats, deleted positions,
-        partition)."""
+        partition as the hive path spells it): each is a
+        ``delta_lite.read_data_files`` record."""
         return self._live_files_and_base()[0]
 
     def _live_files_and_base(self) -> tuple[list[dict], dict | None]:
@@ -635,43 +648,6 @@ class LakeAdapter:
         for f in unsettled:
             if np.isin(_file_book_ids(f), wanted).any():
                 yield f
-
-    def _fmt_read_files(self, paths: list[str], base: dict | None) -> DataFrame:
-        """Exactly the given live files (absolute, as :meth:`_live_files`
-        spells them) through the table format's own file-subset reader:
-        logged/snapshot schema, partition paths cross-checked. ``base``
-        is the delta log state they were chosen from
-        (:meth:`_live_files_and_base`)."""
-        if not paths:
-            return self.spark.createDataFrame([], BOOK_SCHEMA)
-        if self.backend == "delta":
-            from tscd_datalake_adapter_spark.sources.delta_lite import (
-                _read_logged_files,
-            )
-
-            return _read_logged_files(
-                self.spark,
-                self.lake_root,
-                base,
-                [os.path.relpath(p, self.lake_root) for p in paths],
-            )
-        from tscd_datalake_adapter_spark.sources.iceberg_lite import (
-            _read_data_files,
-            _snapshot_by_id,
-            _snapshot_files,
-            load_metadata,
-        )
-
-        meta = load_metadata(self.lake_root)
-        snap = _snapshot_by_id(meta, meta["current-snapshot-id"])
-        want = set(paths)
-        return _read_data_files(
-            self.spark,
-            self.lake_root,
-            meta,
-            snap,
-            [f for f in _snapshot_files(meta, snap) if f["file_path"] in want],
-        )
 
     def _fmt_partition_tuples(self) -> set[tuple[str, str]]:
         """(ingest_date, ingest_hour) tuples with live files, from the
@@ -1132,7 +1108,13 @@ class LakeAdapter:
             touched = list(self._files_holding(ids, live))
             paths = [f["path"] for f in touched]
             if sum(r.size for r in sized) > self._split_bytes():
-                keep = self._fmt_read_files(paths, base).join(
+                from tscd_datalake_adapter_spark.sources.delta_lite import (
+                    read_data_files,
+                )
+
+                keep = read_data_files(
+                    self.spark, self._data_root(), BOOK_SCHEMA, touched
+                ).join(
                     F.broadcast(upd.select("book_id")), "book_id", "left_anti"
                 )
                 self._fmt_commit(

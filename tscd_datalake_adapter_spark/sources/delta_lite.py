@@ -58,6 +58,12 @@ Honest scope (documented, enforced by errors — not silently wrong):
   ``partitionValues`` store the DECODED values (hive %XX escapes
   undone, ``__HIVE_DEFAULT_PARTITION__`` → null) per the spec, and the
   reader cross-checks them against the path on every read.
+- :func:`read_data_files` is the one Spark read of data files for both
+  in-repo formats (``iceberg_lite`` calls it too): it takes metadata
+  records (path and partition), the schema the metadata declares and
+  the base of the hive paths, checks each record's partition against
+  its path (:func:`_check_partitions`, which ``live_files`` of both
+  formats runs as well) and infers nothing.
 - Every ``add`` carries the spec's per-file ``stats`` JSON (numRecords,
   min/maxValues, and nullCount for top-level primitive columns, computed
   from the parquet footers at commit time — driver-side but
@@ -413,16 +419,77 @@ def _hive_unescape(value: str) -> str | None:
     return _HIVE_ESCAPE_RE.sub(lambda m: chr(int(m.group(1), 16)), value)
 
 
-def _partition_values(relpath: str, partition_by: tuple[str, ...]) -> dict:
+def _partition_values(
+    relpath: str, partition_by: tuple[str, ...] | None = None
+) -> dict:
     """partitionValues per the spec, parsed (and hive-unescaped) from the
-    path segments."""
+    path segments: of the ``partition_by`` columns, or of every
+    ``col=value`` segment when None."""
     vals: dict[str, str | None] = {}
     for seg in relpath.split(os.sep)[:-1]:
         if "=" in seg:
             k, v = seg.split("=", 1)
-            if k in partition_by:
+            if partition_by is None or k in partition_by:
                 vals[k] = _hive_unescape(v)
     return vals
+
+
+def _check_partitions(base: str, files: list[dict]) -> None:
+    """Raise ValueError unless each data-file record's ``partition``
+    equals the hive segments of its ``path`` under ``base`` — every
+    segment, both ways, so the partition columns Spark discovers from
+    the path are exactly the ones the metadata names, with the same
+    values. The cross-check every read of logged files makes, with
+    Spark or without."""
+    prefix = os.path.join(base, "")
+    for f in files:
+        rel = f["path"][len(prefix):]
+        if not f["path"].startswith(prefix):  # spelled unlike base: slow
+            rel = os.path.relpath(f["path"], base)
+        from_path = _partition_values(rel)
+        if from_path != f["partition"]:
+            raise ValueError(
+                f"partition mismatch for {rel}: metadata says "
+                f"{f['partition']}, path says {from_path}"
+            )
+
+
+def read_data_files(
+    spark: SparkSession, base: str, schema, files: list[dict]
+) -> DataFrame:
+    """The one Spark read of a lake's data files, for both table formats:
+    a DataFrame over exactly ``files``, metadata records each holding the
+    file's absolute ``path`` and its ``partition`` (column → value as the
+    hive path spells it, decoded; None for null). ``schema`` (a
+    StructType or DDL string) is always supplied, never inferred: building
+    the frame reads no footer, and partition values are cast from the
+    path to their declared types (inference would turn a string ``'01'``
+    into the int ``1``). ``base`` is the directory the partition paths
+    start under (Spark's ``basePath``); the paths go to Spark sorted, and
+    each record's partition is first checked against its path
+    (:func:`_check_partitions`). No files read as an empty frame of
+    ``schema``. Partition discovery appends the path columns ``schema``
+    lacks (an iceberg transform's ``col_day=...``); callers that want
+    only the table's columns project them out."""
+    if not files:
+        return spark.createDataFrame([], schema)
+    _check_partitions(base, files)
+    return (
+        spark.read.schema(schema)
+        .option("basePath", base)
+        .parquet(*sorted(f["path"] for f in files))
+    )
+
+
+def _add_records(path: str, adds) -> list[dict]:
+    """:func:`read_data_files` records of logged ``add`` actions."""
+    return [
+        {
+            "path": os.path.join(path, a["path"]),
+            "partition": a.get("partitionValues", {}),
+        }
+        for a in adds
+    ]
 
 
 def _schema_fingerprint(schema) -> dict[str, str]:
@@ -960,22 +1027,6 @@ def commit_files(
     )
 
 
-def _check_partition_paths(state: dict, rels: list[str]) -> None:
-    """Raise ValueError unless each logged file's partitionValues equal
-    the values its hive path spells — the cross-check every read of
-    logged files makes, with Spark or without."""
-    pcols = tuple(state["metadata"]["partitionColumns"])
-    files = state["files"]
-    for rel in rels:
-        from_path = _partition_values(rel, pcols)
-        if from_path != files[rel].get("partitionValues", {}):
-            raise ValueError(
-                f"partitionValues mismatch for {rel}: log says "
-                f"{files[rel].get('partitionValues')}, path says "
-                f"{from_path}"
-            )
-
-
 def live_files(path: str, state: dict | None = None) -> list[dict]:
     """The data files of the latest version, from the log alone (no
     Spark job, no data read): one ``{"path", "size", "record_count",
@@ -983,14 +1034,14 @@ def live_files(path: str, state: dict | None = None) -> list[dict]:
     logged byte size, its ``numRecords`` (None without stats), its
     parsed ``stats`` (None when the add carries none), the row positions
     removed from it (always empty: deletion vectors need reader version
-    3, which ``_replay`` refuses) and its logged partitionValues.
-    Partition paths are cross-checked as a Spark read checks them.
+    3, which ``_replay`` refuses) and its logged partitionValues; each
+    record is a :func:`read_data_files` record. Partition paths are
+    checked as a Spark read checks them (:func:`_check_partitions`).
     ``state`` is a ``_replay(path)`` result to list instead of replaying
     the log again (a caller that commits against that same state passes
     it to :func:`commit_files` as ``_state``)."""
     if state is None:
         state = _replay(path, None)
-    _check_partition_paths(state, list(state["files"]))
     out = []
     for rel, add in state["files"].items():
         stats = _add_stats(add)
@@ -1004,24 +1055,8 @@ def live_files(path: str, state: dict | None = None) -> list[dict]:
                 "partition": add.get("partitionValues", {}),
             }
         )
+    _check_partitions(path, out)
     return out
-
-
-def _read_logged_files(
-    spark: SparkSession, path: str, state: dict, rels: list[str]
-) -> DataFrame:
-    """DataFrame over exactly the given logged files, read with the
-    LOGGED schema (partition values cast from the path to their logged
-    types — never type-inferred), after cross-checking each file's
-    logged partitionValues against its hive path."""
-    schema = _logged_schema(state["metadata"])
-    if not rels:
-        return spark.createDataFrame([], schema)
-    _check_partition_paths(state, rels)
-    paths = [os.path.join(path, rel) for rel in sorted(rels)]
-    return (
-        spark.read.schema(schema).option("basePath", path).parquet(*paths)
-    )
 
 
 _CONJUNCT_RE = re.compile(
@@ -1161,7 +1196,8 @@ def read_delta(
                 for rel in rels
                 if _stats_may_match(_add_stats(files[rel]), conjuncts)
             ]
-    df = _read_logged_files(spark, path, state, rels)
+    recs = _add_records(path, [files[rel] for rel in rels])
+    df = read_data_files(spark, path, _logged_schema(state["metadata"]), recs)
     return df.where(where) if where else df
 
 
@@ -1287,13 +1323,13 @@ def read_delta_changes(
     schema = _logged_schema(state["metadata"])
     out: DataFrame | None = None
     for v in range(start, end + 1):
-        adds: list[str] = []
+        adds: list[dict] = []
         removes = False
         ts_ms = None
         op = None
         for action in _commit_actions(path, v):
             if "add" in action and action["add"].get("dataChange"):
-                adds.append(action["add"]["path"])
+                adds.append(action["add"])
             elif "remove" in action and action["remove"].get("dataChange"):
                 removes = True
             elif "commitInfo" in action:
@@ -1312,9 +1348,7 @@ def read_delta_changes(
         if not adds:
             continue
         part = (
-            spark.read.schema(schema)
-            .option("basePath", path)
-            .parquet(*[os.path.join(path, rel) for rel in sorted(adds)])
+            read_data_files(spark, path, schema, _add_records(path, adds))
             .withColumn("_commit_version", F.lit(v).cast("long"))
             .withColumn(
                 "_commit_timestamp",
@@ -1382,7 +1416,9 @@ def merge_delta(
         for rel in files
         if _stats_may_match(_add_stats(files[rel]), in_range)
     ]
-    touched = _read_logged_files(spark, path, state, rewrite)
+    schema = _logged_schema(state["metadata"])
+    recs = _add_records(path, [files[rel] for rel in rewrite])
+    touched = read_data_files(spark, path, schema, recs)
     merged = touched.join(
         updates.select(key).distinct(), on=key, how="left_anti"
     ).unionByName(updates)
@@ -1439,7 +1475,8 @@ def delete_delta(
             "deleted_rows": 0,
             "rewritten_files": 0,
         }
-    df = _read_logged_files(spark, path, state, rewrite)
+    recs = _add_records(path, [files[rel] for rel in rewrite])
+    df = read_data_files(spark, path, _logged_schema(state["metadata"]), recs)
     # NULL predicate keeps the row: DELETE removes only proven-TRUE rows
     match = F.coalesce(F.expr(where), F.lit(False))
     deleted = df.where(match).count()
@@ -1628,7 +1665,8 @@ def update_delta(
             "updated_rows": 0,
             "rewritten_files": 0,
         }
-    df = _read_logged_files(spark, path, state, rewrite)
+    recs = _add_records(path, [files[rel] for rel in rewrite])
+    df = read_data_files(spark, path, _logged_schema(state["metadata"]), recs)
     match = F.coalesce(F.expr(where), F.lit(False))
     updated = df.where(match).count()
     if updated == 0:

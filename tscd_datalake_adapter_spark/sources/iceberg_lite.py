@@ -64,7 +64,11 @@ Row-level deletes run BOTH ways (r11): COPY-ON-WRITE
 (``strategy="merge-on-read"`` — content=1 DELETE manifests over
 ``(file_path, pos)`` parquet, O(matched rows) commits, readers apply
 them by broadcast anti-join, :func:`materialize_deletes` folds them
-back into the data files). Equality deletes (content=2) are not
+back into the data files). Data files and position-delete files are
+read by ``delta_lite.read_data_files``, the one reader of both formats:
+with the snapshot's schema (or the spec's ``file_path string, pos
+long`` for deletes), never an inferred one, after the one partition
+check against each hive path. Equality deletes (content=2) are not
 written or read; partial-overwrite commits refuse while position
 deletes are pending (they would resurrect rows). Readers that find a higher
 format-version or an unsupported spec raise. The Avro metadata
@@ -86,11 +90,13 @@ from tscd_datalake_adapter_spark.sources import avro_lite
 from tscd_datalake_adapter_spark.sources.delta_lite import (
     ConcurrentWriteError,
     DeltaSchemaError,
+    _check_partitions,
     _partition_values,
     _prune_empty_dirs,
     _schema_fingerprint,
     _stats_may_match,
     _write_data_files,
+    read_data_files,
 )
 
 # ----------------------------------------------------------- type mapping
@@ -1992,29 +1998,71 @@ def _fs_path(p: str) -> str:
     return os.path.abspath(p)
 
 
-def _check_partition_paths(
-    path: str, files: list[dict], descriptors: list[dict]
-) -> None:
-    """Raise ValueError unless each manifest entry's partition tuple
-    matches the hive segments of its path — delta_lite's partitionValues
-    cross-check, made by every read of live files, with Spark or
-    without. Transformed values compare through their path spelling
-    (day=2026-08-13, ...)."""
-    data_root = os.path.join(path, "data")
-    pnames = tuple(d["name"] for d in descriptors)
-    for f in files:
-        rel = os.path.relpath(f["file_path"], data_root)
-        from_path = _partition_values(rel, pnames)
-        for d in descriptors:
-            want = f["partition"].get(d["name"])
-            got = from_path.get(d["name"])
-            if got is not None and (
-                want is None or _transform_path_str(d, want) != str(got)
-            ):
-                raise ValueError(
-                    f"partition mismatch for {rel}: manifest says "
-                    f"{want!r}, path says {got!r}"
-                )
+def _hive_partition(data_file: dict, descriptors: list[dict]) -> dict:
+    """A manifest entry's partition tuple as its hive path spells it
+    (``ingest_ts_day=2026-08-13`` → ``"2026-08-13"``; None for a null
+    value): the ``partition`` of a :func:`delta_lite.read_data_files`
+    record."""
+    out = {}
+    for d in descriptors:
+        v = data_file["partition"].get(d["name"])
+        out[d["name"]] = None if v is None else _transform_path_str(d, v)
+    return out
+
+
+def _file_records(files: list[dict], descriptors: list[dict]) -> list[dict]:
+    """:func:`delta_lite.read_data_files` records of manifest entries."""
+    return [
+        {"path": f["file_path"], "partition": _hive_partition(f, descriptors)}
+        for f in files
+    ]
+
+
+# the spec's position-delete file schema; delete_iceberg writes Spark's
+# _metadata.file_path (string) and _metadata.row_index (long) as these
+_POSITION_DELETE_SCHEMA = "file_path STRING, pos BIGINT"
+
+
+def _position_deletes(
+    spark: SparkSession, path: str, delete_files: list[dict]
+) -> DataFrame:
+    """The ``(file_path, pos)`` rows of position-delete files, broadcast:
+    a delete set is metadata-scale next to the data it deletes from.
+    Delete files are written unpartitioned under ``data/``."""
+    from pyspark.sql import functions as F
+
+    return F.broadcast(
+        read_data_files(
+            spark,
+            os.path.join(path, "data"),
+            _POSITION_DELETE_SCHEMA,
+            [{"path": f["file_path"], "partition": {}} for f in delete_files],
+        )
+    )
+
+
+def _drop_deleted(df: DataFrame, dels: DataFrame) -> DataFrame:
+    """``df`` (a read of data files) without the rows whose position
+    ``dels`` (:func:`_position_deletes`) names: a left anti-join on
+    Spark's ``_metadata`` file path and row index — the columns
+    ``delete_iceberg`` wrote, so both sides spell the path alike."""
+    from pyspark.sql import functions as F
+
+    return (
+        df.withColumns(
+            {
+                "__ice_fp": F.col("_metadata.file_path"),
+                "__ice_pos": F.col("_metadata.row_index"),
+            }
+        )
+        .join(
+            dels,
+            (F.col("__ice_fp") == dels["file_path"])
+            & (F.col("__ice_pos") == dels["pos"]),
+            "left_anti",
+        )
+        .drop("__ice_fp", "__ice_pos")
+    )
 
 
 def _snapshot_view(meta: dict, snap: dict) -> tuple[dict, list[dict]]:
@@ -2040,8 +2088,10 @@ def live_files(path: str) -> list[dict]:
     its path, its manifest byte size (``file_size_in_bytes``), its
     manifest record count, its bounds as :func:`_bounds_stats`, the row
     positions live position-delete files remove from it, and its
-    manifest partition tuple. Partition paths are cross-checked as a
-    Spark read checks them; unsupported format versions and transforms
+    manifest partition tuple as the hive path spells it
+    (:func:`_hive_partition`), so that each record is a
+    ``delta_lite.read_data_files`` record. Partition paths are checked
+    as a Spark read checks them; unsupported format versions and transforms
     are refused by :func:`load_metadata`."""
     import pyarrow.parquet as pq
 
@@ -2051,7 +2101,8 @@ def live_files(path: str) -> list[dict]:
     snap = _snapshot_by_id(meta, meta["current-snapshot-id"])
     snap_meta, descriptors = _snapshot_view(meta, snap)
     files = _snapshot_files(meta, snap)
-    _check_partition_paths(path, files, descriptors)
+    records = _file_records(files, descriptors)
+    _check_partitions(os.path.join(path, "data"), records)
     deleted: dict[str, set[int]] = {}
     for d in _snapshot_delete_files(meta, snap):
         t = pq.ParquetFile(d["file_path"]).read(columns=["file_path", "pos"])
@@ -2062,42 +2113,14 @@ def live_files(path: str) -> list[dict]:
     schema = _current_schema(snap_meta)
     return [
         {
-            "path": f["file_path"],
+            **r,
             "size": f["file_size_in_bytes"],
             "record_count": f["record_count"],
             "stats": _bounds_stats(f, schema),
             "deleted": frozenset(deleted.get(_fs_path(f["file_path"]), ())),
-            "partition": f["partition"],
         }
-        for f in files
+        for r, f in zip(records, files)
     ]
-
-
-def _read_data_files(
-    spark: SparkSession,
-    path: str,
-    meta: dict,
-    snap: dict,
-    files: list[dict],
-) -> DataFrame:
-    """DataFrame over exactly the given manifest entries of ``snap``,
-    read with the snapshot's schema (hive partition values cast to their
-    declared types — never type-inferred), after cross-checking each
-    entry's partition tuple against its hive path: the twin of
-    :func:`delta_lite._read_logged_files`. Partition discovery appends
-    the derived path columns of a transformed spec (``col_day=...``) to
-    the schema; callers that need only the table's columns project them
-    out (after any join on Spark's ``_metadata`` columns)."""
-    snap_meta, descriptors = _snapshot_view(meta, snap)
-    schema = _spark_schema_of(snap_meta)
-    if not files:
-        return spark.createDataFrame([], schema)
-    _check_partition_paths(path, files, descriptors)
-    return (
-        spark.read.schema(schema)
-        .option("basePath", os.path.join(path, "data"))
-        .parquet(*sorted(f["file_path"] for f in files))
-    )
 
 
 def read_iceberg(
@@ -2168,37 +2191,16 @@ def read_iceberg(
                 # a temporal-transformed table exists for
                 and _partition_may_match(f, descriptors, conjuncts)
             ]
-    df = _read_data_files(spark, path, meta, snap, files)
+    df = read_data_files(
+        spark,
+        os.path.join(path, "data"),
+        schema,
+        _file_records(files, descriptors),
+    )
     delete_files = _snapshot_delete_files(meta, snap) if files else []
     if delete_files:
-        # merge-on-read position deletes (r11): anti-join the selected
-        # rows against the delete files' (file_path, pos) sets. Both
-        # sides of the key come from Spark's _metadata columns, so the
-        # path spelling agrees by construction. The delete set is
-        # metadata-scale relative to the data (that's the point of MOR)
-        # — broadcast it so the data side never shuffles.
-        from pyspark.sql import functions as F
-
-        dels = F.broadcast(
-            spark.read.parquet(
-                *sorted(f["file_path"] for f in delete_files)
-            ).select("file_path", "pos")
-        )
-        df = (
-            df.withColumns(
-                {
-                    "__ice_fp": F.col("_metadata.file_path"),
-                    "__ice_pos": F.col("_metadata.row_index"),
-                }
-            )
-            .join(
-                dels,
-                (F.col("__ice_fp") == dels["file_path"])
-                & (F.col("__ice_pos") == dels["pos"]),
-                "left_anti",
-            )
-            .drop("__ice_fp", "__ice_pos")
-        )
+        # merge-on-read position deletes (r11)
+        df = _drop_deleted(df, _position_deletes(spark, path, delete_files))
     if delete_files or any(
         d["transform"] != "identity" for d in descriptors
     ):
@@ -2272,10 +2274,7 @@ def delete_iceberg(
         )
     snap = _snapshot_by_id(meta, meta["current-snapshot-id"])
     files = _snapshot_files(meta, snap)
-    descriptors = [
-        _transform_of_spec_field(pf, _current_schema(meta))
-        for pf in _current_spec(meta)["fields"]
-    ]
+    snap_meta, descriptors = _snapshot_view(meta, snap)
     conjuncts = _parse_conjuncts(where)
     if conjuncts:
         ice_schema = _current_schema(meta)
@@ -2295,7 +2294,12 @@ def delete_iceberg(
         }
     schema = _spark_schema_of(meta)
     paths = sorted(f["file_path"] for f in candidates)
-    df = _read_data_files(spark, path, meta, snap, candidates)
+    df = read_data_files(
+        spark,
+        os.path.join(path, "data"),
+        _spark_schema_of(snap_meta),
+        _file_records(candidates, descriptors),
+    )
     # NULL predicate keeps the row: DELETE removes only proven-TRUE rows
     match = F.coalesce(F.expr(where), F.lit(False))
 
@@ -2307,11 +2311,7 @@ def delete_iceberg(
         if live_deletes:
             # positions already deleted must not double-count (and the
             # predicate may re-match them): subtract the live delete set
-            prior = F.broadcast(
-                spark.read.parquet(
-                    *sorted(f["file_path"] for f in live_deletes)
-                ).select("file_path", "pos")
-            )
+            prior = _position_deletes(spark, path, live_deletes)
             matched = matched.join(
                 prior, ["file_path", "pos"], "left_anti"
             )
@@ -2383,8 +2383,6 @@ def materialize_deletes(
     Scale shape: only files WITH pending deletes are read and rewritten
     (discovered from the delete files' distinct file_path set —
     metadata-scale); the anti-join is broadcast on the delete set."""
-    from pyspark.sql import functions as F
-
     meta = load_metadata(path)
     dels = _live_delete_files(meta)
     cur = meta["current-snapshot-id"]
@@ -2396,11 +2394,7 @@ def materialize_deletes(
         }
     snap = _snapshot_by_id(meta, cur)
     files = _snapshot_files(meta, snap)
-    del_df = F.broadcast(
-        spark.read.parquet(
-            *sorted(f["file_path"] for f in dels)
-        ).select("file_path", "pos")
-    )
+    del_df = _position_deletes(spark, path, dels)
     # distinct files with pending deletes: bounded by the delete set
     affected_paths = {
         _fs_path(r["file_path"])
@@ -2415,22 +2409,14 @@ def materialize_deletes(
             "is stale (was the table rewritten around the guard?)"
         )
     schema = _spark_schema_of(meta)
-    df = _read_data_files(spark, path, meta, snap, affected)
-    kept = (
-        df.withColumns(
-            {
-                "__ice_fp": F.col("_metadata.file_path"),
-                "__ice_pos": F.col("_metadata.row_index"),
-            }
-        )
-        .join(
-            del_df,
-            (F.col("__ice_fp") == del_df["file_path"])
-            & (F.col("__ice_pos") == del_df["pos"]),
-            "left_anti",
-        )
-        .select(*[f.name for f in schema.fields])
+    snap_meta, descriptors = _snapshot_view(meta, snap)
+    df = read_data_files(
+        spark,
+        os.path.join(path, "data"),
+        _spark_schema_of(snap_meta),
+        _file_records(affected, descriptors),
     )
+    kept = _drop_deleted(df, del_df).select(*[f.name for f in schema.fields])
     removed = sum(int(f["record_count"]) for f in dels)
     snapshot_id = write_iceberg(
         kept,
@@ -2496,9 +2482,13 @@ def merge_iceberg(
         if _stats_may_match(_bounds_stats(f, ice_schema), in_range)
     ]
     schema = _spark_schema_of(meta)
-    touched = _read_data_files(spark, path, meta, snap, rewrite).select(
-        *[f.name for f in schema.fields]
-    )
+    snap_meta, descriptors = _snapshot_view(meta, snap)
+    touched = read_data_files(
+        spark,
+        os.path.join(path, "data"),
+        _spark_schema_of(snap_meta),
+        _file_records(rewrite, descriptors),
+    ).select(*[f.name for f in schema.fields])
     merged = touched.join(
         updates.select(key).distinct(), on=key, how="left_anti"
     ).unionByName(updates)
@@ -2546,10 +2536,8 @@ def update_iceberg(
             "table has live position-delete files; run "
             "materialize_deletes() before UPDATE"
         )
-    descriptors = [
-        _transform_of_spec_field(pf, _current_schema(meta))
-        for pf in _current_spec(meta)["fields"]
-    ]
+    snap = _snapshot_by_id(meta, meta["current-snapshot-id"])
+    snap_meta, descriptors = _snapshot_view(meta, snap)
     psources = {d["source"] for d in descriptors}
     bad = set(set_exprs) & psources
     if bad:
@@ -2557,7 +2545,6 @@ def update_iceberg(
             f"UPDATE on partition source columns {sorted(bad)} would "
             "move rows between partitions; use delete + insert"
         )
-    snap = _snapshot_by_id(meta, meta["current-snapshot-id"])
     files = _snapshot_files(meta, snap)
     from tscd_datalake_adapter_spark.sources.delta_lite import (
         _parse_conjuncts,
@@ -2582,9 +2569,12 @@ def update_iceberg(
         }
     schema = _spark_schema_of(meta)
     paths = sorted(f["file_path"] for f in candidates)
-    df = _read_data_files(spark, path, meta, snap, candidates).select(
-        *[f.name for f in schema.fields]
-    )
+    df = read_data_files(
+        spark,
+        os.path.join(path, "data"),
+        _spark_schema_of(snap_meta),
+        _file_records(candidates, descriptors),
+    ).select(*[f.name for f in schema.fields])
     match = F.coalesce(F.expr(where), F.lit(False))
     updated = df.where(match).count()
     if updated == 0:
@@ -2716,23 +2706,26 @@ def read_iceberg_incremental(
                 "(skip_non_append=True to skip them)"
             )
         sid, seq = s["snapshot-id"], s["sequence-number"]
-        paths = []
+        added = []
         _, manifests = avro_lite.read_container(s["manifest-list"])
         for m in manifests:
             if m["sequence_number"] != seq:
                 continue  # reused manifest: its entries predate s
             _, entries = avro_lite.read_container(m["manifest_path"])
-            paths.extend(
-                e["data_file"]["file_path"]
+            added.extend(
+                e["data_file"]
                 for e in entries
                 if e["status"] == 1 and e["snapshot_id"] == sid
             )
-        if not paths:
+        if not added:
             continue
         part = (
-            spark.read.schema(schema)
-            .option("basePath", os.path.join(path, "data"))
-            .parquet(*sorted(paths))
+            read_data_files(
+                spark,
+                os.path.join(path, "data"),
+                schema,
+                _file_records(added, _snapshot_view(meta, s)[1]),
+            )
             .select(*[f.name for f in schema.fields])
             .withColumn("_snapshot_id", F.lit(sid).cast("long"))
             .withColumn(
@@ -2775,12 +2768,7 @@ def partitions_meta(spark: SparkSession, path: str) -> DataFrame:
     if meta["current-snapshot-id"] != -1:
         snap = _snapshot_by_id(meta, meta["current-snapshot-id"])
         for f in _snapshot_files(meta, snap):
-            key = tuple(
-                None
-                if f["partition"].get(d["name"]) is None
-                else _transform_path_str(d, f["partition"][d["name"]])
-                for d in descs
-            )
+            key = tuple(_hive_partition(f, descs).values())
             row = agg.setdefault(key, [0, 0, 0])
             row[0] += 1
             row[1] += int(f["record_count"])
